@@ -71,8 +71,8 @@ HEADLINE = [
     "q_semdedup",
     # Round-4 heavy additions: lossless prefix-filter similarity join,
     # the IVF nprobe recall/cost sweep (4 probe joins + exact ground
-    # truth), and the recursive-CTE amortization schedule (12 recursion
-    # steps of engine iteration overhead)
+    # truth), and the amortization schedule (added as a 12-step recursive
+    # CTE; its Spark side is now a closed-form projection)
     "q_prefix_filter_join",
     "q_ann_nprobe_sweep",
     "q_amortization_schedule",
@@ -171,7 +171,7 @@ def main() -> None:
             "pass_totals": pass_totals,
             "suite_seconds_min_floor": total_min,
             "r1_headline_seconds_min_floor": r1_total_min,
-            "note": "headline set expanded in round 3 (13 -> 24) and round 4 (-> 29 queries); "
+            "note": f"headline set is {len(HEADLINE)} queries (13 until round 3, expanded since); "
             "compare r1_headline_seconds against the 19.3 s round-1 baseline, "
             "per-query rows in BASELINE.md for the rest; per-query values are "
             "medians over runs_per_query interleaved passes",

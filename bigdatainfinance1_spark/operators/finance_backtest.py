@@ -473,24 +473,26 @@ def rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
 AMORT_PERIODS = 12  # equal-principal schedule length
 AMORT_RATE_DIV = 200  # monthly rate 0.5% = balance / 200, exact in integers
 
-# One SQL text runs verbatim on both engines (the q_recursive_reachability
-# pattern): every quantity is integer-valued cents — the per-nation
-# principal is a floor-average of exact cents, monthly interest is half-up
-# division of the balance by 200, the equal-principal installment is
-# floor(P / 12) with the remainder absorbed by the final period. The only
-# division is IEEE double division of integers far below 2**53, which is
-# correctly rounded (exact when the quotient is an integer, and never
-# within 1e-13 of one otherwise), so floor() is engine-exact and the two
-# engines agree EXACTLY at every scale factor — the strongest form of the
-# repo's exact-integer-cents money rule.
-_AMORT_SQL = f"""
-    WITH RECURSIVE loans AS (
+# Every quantity is integer-valued cents: the per-nation principal is a
+# floor-average of exact cents, monthly interest is half-up division of the
+# balance by 200, the equal-principal installment is floor(P / 12) with the
+# remainder absorbed by the final period. The only division is of integers
+# far below 2**53 (a decimal quotient on Spark, a correctly rounded double
+# on DuckDB), so floor() is engine-exact and the two engines agree EXACTLY
+# at every scale factor — the strongest form of the repo's
+# exact-integer-cents money rule. Both SQL texts below share this `loans`
+# CTE text, so the loan sizing cannot drift between them.
+_AMORT_LOANS = """loans AS (
       SELECT c.c_nationkey AS nationkey,
              CAST(floor(sum(CAST(round(o.o_totalprice * 100) AS BIGINT))
                   * 1.0 / count(*)) AS BIGINT) AS principal_cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_nationkey
-    ),
+    )"""
+
+# Oracle: the schedule as the textbook recursion, one period per step.
+_AMORT_SQL = f"""
+    WITH RECURSIVE {_AMORT_LOANS},
     sched(nationkey, period, interest_cents, principal_cents, balance_cents) AS (
       SELECT nationkey, CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT),
              principal_cents
@@ -516,24 +518,49 @@ _AMORT_SQL = f"""
     FROM sched WHERE period > 0
 """
 
+# Spark: the same schedule in closed form. With inst = floor(P / 12), the
+# balance before period t is P - (t-1)*inst for every t <= 12, so each row
+# is a function of (P, t) alone — one projection over explode(sequence()).
+# The recursion's step join never matches a NULL nationkey, so the oracle
+# emits no rows for one; the filter keeps that.
+_AMORT_CLOSED_SQL = f"""
+    WITH {_AMORT_LOANS},
+    sched AS (
+      SELECT nationkey,
+             principal_cents AS p,
+             CAST(floor(principal_cents * 1.0 / {AMORT_PERIODS}) AS BIGINT) AS inst,
+             explode(sequence(CAST(1 AS BIGINT), CAST({AMORT_PERIODS} AS BIGINT))) AS period
+      FROM loans WHERE nationkey IS NOT NULL
+    )
+    SELECT CAST(nationkey AS BIGINT) AS nationkey,
+           period,
+           CAST(floor((p - (period - 1) * inst + {AMORT_RATE_DIV // 2}) * 1.0
+                      / {AMORT_RATE_DIV}) AS BIGINT) AS interest_cents,
+           CASE WHEN period = {AMORT_PERIODS} THEN p - {AMORT_PERIODS - 1} * inst
+                ELSE inst END AS principal_paid_cents,
+           CASE WHEN period = {AMORT_PERIODS} THEN CAST(0 AS BIGINT)
+                ELSE p - period * inst END AS balance_cents
+    FROM sched
+"""
 
-@query("q_amortization_schedule", oracle=_AMORT_SQL, tags=("finance", "recursive"))
+
+@query("q_amortization_schedule", oracle=_AMORT_SQL, tags=("finance",))
 def amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation {AMORT_PERIODS}-period equal-principal amortization
-    schedule over a loan sized at the nation's floor-average order value —
-    written as ONE recursive CTE that runs verbatim on both engines
-    (Spark 4 WITH RECURSIVE, the q_recursive_reachability pattern). Every
-    number is integer cents: interest is half-up integer division of the
-    outstanding balance by {AMORT_RATE_DIV} (0.5%/month), the installment
-    is principal // {AMORT_PERIODS} with the final period absorbing the
-    remainder, so the engines agree EXACTLY by construction — no float,
-    no rounding contract to defend. Scale: the corpus pass is the one
-    orders/customer aggregation; the recursion iterates
-    {AMORT_PERIODS} times over an O(nations) relation."""
+    schedule over a loan sized at the nation's floor-average order value.
+    Every number is integer cents: interest is half-up integer division of
+    the outstanding balance by {AMORT_RATE_DIV} (0.5%/month), the
+    installment is principal // {AMORT_PERIODS} with the final period
+    absorbing the remainder, so the engines agree EXACTLY by construction.
+    The oracle runs the schedule as a recursive CTE; Spark runs its closed
+    form (_AMORT_CLOSED_SQL), and the exact oracle compare proves the two
+    equal. Scale: the corpus pass is the one orders/customer aggregation;
+    the schedule is a per-nation projection of {AMORT_PERIODS} rows, with
+    no per-period job."""
     from bigdatainfinance1_spark.sources.catalog import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql(_AMORT_SQL)
+    return spark.sql(_AMORT_CLOSED_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -187,7 +187,7 @@ def erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     factorial overflow and no engine-ordered summation.
 
     ONE recursive-CTE SQL text runs verbatim on both engines (the
-    q_amortization_schedule pattern). Determinism: lambda is an exact
+    q_recursive_reachability pattern). Determinism: lambda is an exact
     integer count over a fixed constant; every recursion step is the same
     double arithmetic in the same order on both engines, rounded at 4/6.
     Scale: the corpus pass is one count; the recursion is O(c_max) rows

@@ -20,7 +20,7 @@ map-side-combinable sums. Nothing in this module grows with row count
 after the first aggregate.
 
 Determinism contract: q_black_scholes and q_irr_bisection run ONE SQL
-text verbatim on both engines (the q_amortization_schedule pattern), so
+text verbatim on both engines (the q_recursive_reachability pattern), so
 operation order is identical by construction; the only cross-engine
 exposure is libm-vs-JVM ulp differences in exp/ln/pow, absorbed by
 rounding at 4-6 dp. q_bond_duration and q_component_var follow the house
@@ -111,7 +111,7 @@ def black_scholes(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction.
 
     Determinism: ONE SQL text runs verbatim on both engines (the
-    q_amortization_schedule pattern) — identical Horner evaluation order;
+    q_recursive_reachability pattern) — identical Horner evaluation order;
     the only exposure is exp/ln/sqrt libm-vs-JVM ulps, absorbed by the
     4-dp rounding. Scale: the p_partkey <= {cap} predicate pushes down to
     the parquet scan and the pricing itself is a per-row closed form —
@@ -277,7 +277,7 @@ def irr_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     option-implied-vol solves.
 
     ONE recursive-CTE text runs verbatim on both engines (the
-    q_amortization_schedule pattern). Bisection only ever branches on the
+    q_recursive_reachability pattern). Bisection only ever branches on the
     SIGN of the unrolled fixed-order 8-term NPV, so engines can diverge
     only if a midpoint NPV lands within libm-ulp of zero — which needs
     the midpoint within ~1e-13 of the root, vanishingly unlikely for the

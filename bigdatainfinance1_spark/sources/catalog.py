@@ -6,7 +6,10 @@ drift from the files the DuckDB oracle reads.
 
 Scale posture: `spark.read.parquet` gives the vectorized columnar reader with
 predicate pushdown + column pruning for free; at 100 TB the same call reads a
-partitioned directory tree and Catalyst prunes partitions. Small dimensions
+partitioned directory tree and Catalyst prunes partitions. Inferring a schema
+from the footers runs one Spark job, so each file's schema is inferred once
+and memoized (``_read_parquet``); queries re-register the views on every call,
+and those repeat loads run no job. Small dimensions
 (region/nation/supplier/part/customer) are marked broadcast-preferred so joins
 against the fact tables never shuffle the big side.
 """
@@ -14,6 +17,7 @@ against the fact tables never shuffle the big side.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from bigdatainfinance1_spark.session import ensure_session_conf
 
@@ -34,9 +38,35 @@ TABLES: tuple[str, ...] = (
 # (region 5 rows … part 20k rows at sf0.1 — FIXTURES.md row counts).
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part", "customer"})
 
+# Footer-inferred schemas keyed by the file's status: (qualified path,
+# length, modification time). A rewritten file gets a new key and its schema
+# is inferred again, so a stale schema never reads new columns as NULL. The
+# key names one version of one file, so the memo is safe to share across
+# sessions and callers in the process.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per file.
+
+    The key comes from the Hadoop ``FileSystem`` status, so local paths and
+    cluster URIs take the same route. A memoized schema is handed to the
+    reader, which then skips footer inference and starts no job.
+    """
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
+    key = (status.getPath().toString(), status.getLen(), status.getModificationTime())
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table; schema inferred from the parquet footer.
+    """Load one table; schema inferred from the parquet footer (once per
+    file, see ``_read_parquet``).
 
     Timestamp normalization: the driver's generator has produced two
     physical encodings across rounds — TIMESTAMP(NANOS) (Spark 4 refuses to
@@ -49,7 +79,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the oracle comparison bit-identical either way.
     """
     ensure_session_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
