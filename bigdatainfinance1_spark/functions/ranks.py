@@ -83,7 +83,7 @@ def global_row_number(
     # modules with no unpersist hook, and CacheManager entries outlive the
     # query (round-4 ADVICE: cached plans accumulated for the whole
     # session). Checkpointed RDDs are reclaimed by ContextCleaner once the
-    # Python/JVM refs drop — the q_kcore pattern.
+    # Python/JVM refs drop (see functions/iterate.py).
     d = _checkpoint(d.withColumn("_local_rn", F.row_number().over(w)))
     totals = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_tot"))
     offs = _prefix_offsets(totals, "_tot")

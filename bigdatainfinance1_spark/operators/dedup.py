@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.functions.partitioning import parallelize_scan
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
@@ -30,8 +31,8 @@ N_BANDS = 8  # 8 bands × 4 rows: catches J≳0.7 with high probability
 # estimates ~1M) while tripping at 10× replication (~100× the estimate).
 JACCARD_PAIR_BUDGET = 20_000_000
 
-# Min-label propagation cap for dup-cluster connected components; convergence
-# is asserted after the loop, so hitting the cap fails loudly.
+# Min-label propagation cap for the connected components of q_dup_clusters and
+# q_entity_resolution; hitting it fails loudly (functions/iterate.py).
 MAX_CC_ITERATIONS = 10
 
 # q_lsh_recall_audit's gate (round-8, after the 100× tier caught the audit's
@@ -719,6 +720,38 @@ def decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _min_label_components(pairs: DataFrame, name: str) -> DataFrame:
+    """(node, lbl): connected components of the undirected pair relation
+    (first column, second column) by min-label propagation; lbl is the
+    smallest node of the component. A round moves a label to its smallest
+    neighbor label, so it settles in graph-diameter rounds, and the round in
+    which no label moves is the answer."""
+    a, b = pairs.columns
+    edges = (
+        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+        .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
+        .localCheckpoint(eager=False)  # filled by the first round's node shuffle
+    )
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        lab = F.broadcast(labels)  # one row per node, see functions/iterate.py
+        # every node is an edge source, so every node has a neighbor label
+        nbr = (
+            edges.withColumnRenamed("dst", "node")
+            .join(lab, "node")
+            .groupBy(F.col("src").alias("node"))
+            .agg(F.min("lbl").alias("nbr_lbl"))
+        )
+        return nbr.join(lab, "node").select(
+            "node",
+            F.least("lbl", "nbr_lbl").alias("lbl"),
+            (F.col("nbr_lbl") < F.col("lbl")).alias(UNSETTLED),
+        )
+
+    labels = edges.select(F.col("src").alias("node")).distinct().withColumn("lbl", F.col("node"))
+    return fixpoint(propagate, labels, max_rounds=MAX_CC_ITERATIONS, name=name)
+
+
 _PAIRS_SQL = f"""
     WITH RECURSIVE ds AS ({_SHINGLES_SQL}),
     sz AS (SELECT doc_id, count(*) AS n FROM ds GROUP BY doc_id),
@@ -774,47 +807,7 @@ def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same components with a recursive-CTE transitive
     closure, which is feasible exactly because components are small."""
     pairs = jaccard_neardup(spark, sf_dir).select("doc_id_1", "doc_id_2")
-    edges = pairs.union(
-        pairs.select(F.col("doc_id_2").alias("doc_id_1"), F.col("doc_id_1").alias("doc_id_2"))
-    ).persist()
-    labels = (
-        edges.select(F.col("doc_id_1").alias("node")).distinct().withColumn("lbl", F.col("node"))
-    ).persist()
-    changed = -1
-    for _ in range(MAX_CC_ITERATIONS):
-        neighbor_min = (
-            edges.join(labels, edges.doc_id_2 == labels.node)
-            .groupBy("doc_id_1")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.doc_id_1, "left")
-            .select(
-                "node",
-                F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            )
-        ).localCheckpoint(eager=True)  # q_kcore lesson: truncate the
-        # deepening label lineage so each round plans at constant cost
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        # Non-convergence must fail loudly, not emit partial labels (round-1
-        # ADVICE): a component whose min-label distance exceeds the cap would
-        # otherwise silently get wrong component_ids.
-        raise RuntimeError(
-            f"dup_clusters: min-label propagation did not converge within "
-            f"{MAX_CC_ITERATIONS} iterations ({changed} labels still moving); "
-            "raise MAX_CC_ITERATIONS for graphs with larger diameter"
-        )
+    labels = _min_label_components(pairs, "q_dup_clusters")
     w = Window.partitionBy("component_id")
     return (
         labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("component_id"))
@@ -1672,42 +1665,7 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("na", "nb") <= 3)
         .select("na", "nb")
     )
-    edges = pairs.select(F.col("na").alias("src"), F.col("nb").alias("dst")).union(
-        pairs.select(F.col("nb").alias("src"), F.col("na").alias("dst"))
-    ).persist()
-    labels0 = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    ).persist()
-    labels = labels0
-    for _ in range(MAX_CC_ITERATIONS):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select("node", F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl")).localCheckpoint(eager=True)
-        # eager localCheckpoint, not persist: the q_kcore lesson — the
-        # deepening label lineage is otherwise re-planned every round
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"entity_resolution: CC did not converge in {MAX_CC_ITERATIONS} iterations"
-        )
-    # the final labels are localCheckpointed (lineage truncated), so the
-    # loop-scoped caches can go now — leaving them cached leaks CacheManager
-    # entries for the rest of the session (round-4 ADVICE)
-    edges.unpersist()
-    labels0.unpersist()
+    labels = _min_label_components(pairs, "q_entity_resolution")
     return (
         labels.groupBy(F.col("lbl").alias("canonical_name"))
         .agg(

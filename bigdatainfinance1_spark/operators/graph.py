@@ -8,6 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
@@ -263,26 +264,30 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 2)
         .select("u", "v")
     )
-    edges = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v"))).cache()
+    # lazy: the start-node shuffle fills it (see q_kcore)
+    edges = und.unionByName(
+        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=False)
     dist = edges.agg(F.min("u").alias("node")).select("node", F.lit(0).alias("dist"))
+    # A fixed 4 rounds with no convergence test, so not functions/iterate.py.
+    # dist feeds both the join and the union: materialize it once per round,
+    # or its subtree doubles every round (2^4 copies by round 4). It is one
+    # row per reached node; broadcast it for the reason iterate.py gives.
     for _ in range(4):
         relaxed = (
-            dist.join(edges, dist.node == edges.u)
+            F.broadcast(dist)
+            .join(edges, dist.node == edges.u)
             .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
         dist = (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
+            .localCheckpoint(eager=True)
         )
-    out = dist.groupBy(F.col("dist").cast("long").alias("dist")).agg(
+    return dist.groupBy(F.col("dist").cast("long").alias("dist")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
-    # materialize, then release the loop-scoped edge cache (round-4 ADVICE
-    # leak class: cached plans otherwise persist for the whole session)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
 
 
 @query(
@@ -612,12 +617,14 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     usual preprocessing cut before community detection and the cheapest
     "is this node in the dense part" signal).
 
-    Scale: each peel round is one degree aggregate + two semi-join
-    filters on the edge list — the q_dup_clusters iterate-join shape,
-    with rounds bounded by the peeling depth (loud RuntimeError past
-    {maxp}, the house convergence discipline). The oracle re-derives the
-    core independently with {r} unrolled rounds of chained CTEs, so a
-    propagation bug cannot hash-match."""
+    Scale: the edge list is materialized once; each peel round is two
+    broadcast semi-join filters on it plus one degree aggregate, run by
+    functions/iterate.fixpoint — one materialization and one emptiness
+    probe per round, rounds bounded by the peeling depth (loud
+    RuntimeError past {maxp}). The round whose degrees are all >= {k} is
+    the answer. The oracle re-derives the core independently with {r}
+    unrolled rounds of chained CTEs, so a propagation bug cannot
+    hash-match."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
@@ -629,46 +636,29 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c") >= 2)
         .select("u", "v")
     )
-    ee = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    nodes0 = ee.select(F.col("u").alias("node")).distinct().persist()
-    nodes = nodes0
-    prev_n = nodes.count()
-    for _ in range(KCORE_MAX_PEELS):
-        kept_edges = (
-            ee.join(nodes.select(F.col("node").alias("u")), "u")
-            .join(nodes.select(F.col("node").alias("v")), "v")
-        )
-        new_nodes = (
-            kept_edges.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= KCORE_K)
-            .select(F.col("u").alias("node"))
-            # eager localCheckpoint, not persist: the peel lineage deepens
-            # every round and re-planning the full chain grew round cost
-            # 1.6 s -> 46 s by round 6 at sf0.1 (measured); checkpointing
-            # truncates the plan so every round costs the same
-            .localCheckpoint(eager=True)
-        )
-        n = new_nodes.count()
-        nodes = new_nodes
-        if n == prev_n:
-            break
-        prev_n = n
-    else:
-        raise RuntimeError(f"kcore: peeling did not converge in {KCORE_MAX_PEELS} rounds")
-    out = (
-        ee.join(nodes.select(F.col("node").alias("u")), "u")
-        .join(nodes.select(F.col("node").alias("v")), "v")
-        .groupBy(F.col("u").alias("part_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+    # lazy: the first round's degree shuffle fills it, one job fewer than an
+    # eager checkpoint, and every later round reads it instead of lineitem
+    ee = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).localCheckpoint(
+        eager=False
     )
-    # materialize before dropping the loop-scoped caches (the q_pagerank
-    # pattern at the top of this module) — otherwise they leak in
-    # CacheManager for the session (round-4 ADVICE leak class)
-    out = out.localCheckpoint(eager=True)
-    ee.unpersist()
-    nodes0.unpersist()
-    return out
+
+    def degrees(edges: DataFrame) -> DataFrame:
+        return edges.groupBy(F.col("u").alias("part_id")).agg(
+            F.count(F.lit(1)).cast("long").alias("core_degree")
+        )
+
+    def peel(deg: DataFrame) -> DataFrame:
+        # drop the nodes below K and recount degrees within what remains (a
+        # node left with no edge drops out); the round is the core once no
+        # degree is below K. keep is one row per node: broadcast it, see
+        # functions/iterate.py
+        keep = F.broadcast(deg.filter(F.col("core_degree") >= KCORE_K).select("part_id"))
+        kept = ee.join(keep.withColumnRenamed("part_id", "u"), "u", "semi").join(
+            keep.withColumnRenamed("part_id", "v"), "v", "semi"
+        )
+        return degrees(kept).withColumn(UNSETTLED, F.col("core_degree") < KCORE_K)
+
+    return fixpoint(peel, degrees(ee), max_rounds=KCORE_MAX_PEELS, name="q_kcore")
 
 
 # ---------------------------------------------------------------------------
