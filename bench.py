@@ -3,6 +3,10 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
+Usage: python bench.py [q_name ...]   (no names: the HEADLINE set; with
+names, only those, under the same protocol and with the same JSON keys —
+the r1 fields then sum the named queries among the first 13)
+
 Each query is forced end-to-end with a noop-format write (full materialization
 on the executors, nothing shipped to Python), after an untimed warmup of the
 session + catalog.
@@ -94,36 +98,43 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def quiesce(spark) -> None:
+    """Untimed inter-query hygiene: drop Python refs so the ContextCleaner
+    reclaims the localCheckpoint blocks and shuffle files the previous query
+    left, and nudge the JVM to run the cleanup. Without it a query measures
+    its predecessor's memory pressure (q_minhash_lsh 56 s in-suite vs 11 s
+    alone), and at 100x can fail its broadcast build on storage that is
+    about to be freed (q_minhash_lsh_fast, green alone)."""
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(app_name="bigdatainfinance1_spark-bench")
     specs = load_all_queries()
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        sys.exit(f"bench: unknown query name(s): {', '.join(unknown)}")
+    r1_names = [n for n in names if n in HEADLINE[:R1_HEADLINE_N]]
+    spark = get_spark(app_name="bigdatainfinance1_spark-bench")
 
     # untimed warmup: JVM + catalog + one tiny action, then quiesce so any
     # preceding process activity (the driver runs bench right after a
     # 20-minute oracle sweep) settles before the first timed pass
     specs["q_pricing_summary"].fn(spark, sf_dir).limit(1).collect()
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
+    quiesce(spark)
     time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "3")))
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    samples: dict[str, list[float]] = {name: [] for name in names}
     for r in range(runs):
-        for name in HEADLINE:
+        for name in names:
             t0 = time.perf_counter()
             materialize(specs[name].fn(spark, sf_dir))
             samples[name].append(round(time.perf_counter() - t0, 3))
-            # Untimed inter-query hygiene: drop Python refs so the
-            # ContextCleaner reclaims localCheckpoint RDDs and shuffle files
-            # the previous query left on the executors, and nudge the JVM to
-            # actually run the cleanup. Without this, queries that follow
-            # heavy checkpointing (q_user_cf_neighbors) measure the
-            # predecessor's memory pressure, not their own plan (observed:
-            # q_minhash_lsh 56 s in-suite vs 11 s standalone).
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            quiesce(spark)
 
     def quantile(sorted_ts: list[float], q: float) -> float:
         # linear interpolation (numpy default) over the sorted samples
@@ -142,19 +153,17 @@ def main() -> None:
             "iqr": round(quantile(s, 0.75) - quantile(s, 0.25), 3),
         }
     total = round(sum(timings.values()), 3)
-    r1_total = round(sum(timings[n] for n in HEADLINE[:R1_HEADLINE_N]), 3)
+    r1_total = round(sum(timings[n] for n in r1_names), 3)
     # Contention forensics: host load arrives in WAVES that inflate whole
     # interleaved passes (observed r6/r7: alternate passes 2x slower with
     # zero code change). Per-pass totals make a wave machine-visible, and
     # the min-floor aggregates are the uncontended readings to compare
     # round-over-round when the pass totals disagree by >1.5x.
     pass_totals = [
-        round(sum(samples[n][r] for n in HEADLINE), 3) for r in range(runs)
+        round(sum(samples[n][r] for n in names), 3) for r in range(runs)
     ]
     total_min = round(sum(d["min"] for d in dispersion.values()), 3)
-    r1_total_min = round(
-        sum(dispersion[n]["min"] for n in HEADLINE[:R1_HEADLINE_N]), 3
-    )
+    r1_total_min = round(sum(dispersion[n]["min"] for n in r1_names), 3)
     payload = json.dumps(
         {
             "metric": "headline_suite_seconds",

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -322,17 +322,14 @@ _GROUPING_SETS_SQL = """
 """
 
 
-@query("q_grouping_sets", oracle=_GROUPING_SETS_SQL, tags=("aggregate", "olap"))
-def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 (explicit form): GROUPING SETS — one SQL text shared verbatim with
+sql_query(
+    "q_grouping_sets", _GROUPING_SETS_SQL, tags=("aggregate", "olap"),
+    doc="""A7 (explicit form): GROUPING SETS — one SQL text shared verbatim with
     the oracle (rollup/cube above use the DataFrame API; this exercises the
     SQL surface for arbitrary subtotal lattices). Group keys are never null
     in the data, so coalesce('ALL') tags aggregated-out rows unambiguously
-    in both dialects."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUPING_SETS_SQL)
+    in both dialects.""",
+)
 
 
 @query(
@@ -590,20 +587,17 @@ _MOMENTS_SQL = """
 """
 
 
-@query("q_moments_skew_kurt", oracle=_MOMENTS_SQL, tags=("agg", "stats"))
-def moments_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Higher moments per group — population std, skewness g1, excess
+sql_query(
+    "q_moments_skew_kurt", _MOMENTS_SQL, tags=("agg", "stats"),
+    doc="""Higher moments per group — population std, skewness g1, excess
     kurtosis g2 — computed from RAW POWER-SUM moments with the central-
     moment algebra spelled out, NOT the engines' native skewness()/
     kurtosis(), whose small-sample corrections differ between engines.
     Same algebra both sides → same doubles in, round-6 absorbs the
     power-sum ordering ulps. One hash aggregate, five accumulators per
     group — the single-pass sketchable shape. One SQL text runs verbatim
-    on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_MOMENTS_SQL)
+    on Spark and DuckDB.""",
+)
 
 
 @query(
@@ -716,16 +710,13 @@ _TIME_ROLLUP_SQL = """
 """
 
 
-@query("q_time_rollup", oracle=_TIME_ROLLUP_SQL, tags=("agg", "timeseries"))
-def time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 over the TIME hierarchy: year ⊃ quarter ⊃ month ROLLUP in one
+sql_query(
+    "q_time_rollup", _TIME_ROLLUP_SQL, tags=("agg", "timeseries"),
+    doc="""A7 over the TIME hierarchy: year ⊃ quarter ⊃ month ROLLUP in one
     pass — month rows, quarter subtotals, year subtotals, grand total,
     disambiguated by the grouping-flag id (null months exist as real data
     only if a month had no orders, so gid, not null-ness, labels subtotal
     levels). Spark expands rollups into a single expand+hash-aggregate —
     one shuffle for all four levels. One SQL text runs verbatim on Spark
-    and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_TIME_ROLLUP_SQL)
+    and DuckDB.""",
+)

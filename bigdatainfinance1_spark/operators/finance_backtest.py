@@ -544,6 +544,7 @@ _AMORT_CLOSED_SQL = f"""
 """
 
 
+# Not sql_query: Spark runs the closed form, the oracle the recursive CTE.
 @query("q_amortization_schedule", oracle=_AMORT_SQL, tags=("finance",))
 def amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation {AMORT_PERIODS}-period equal-principal amortization

@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -269,9 +269,9 @@ _SHARE_SQL = """
 """
 
 
-@query("q_share_of_total", oracle=_SHARE_SQL, tags=("analytics", "finance"))
-def share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contribution analysis: each nation's revenue share of its region and
+sql_query(
+    "q_share_of_total", _SHARE_SQL, tags=("analytics", "finance"),
+    doc="""Contribution analysis: each nation's revenue share of its region and
     of the world — the windowed percent-of-total every BI layer computes.
     The windows run over the 25-row aggregate, not the fact table (the
     aggregate-then-window order matters at scale: windowing facts first
@@ -280,11 +280,8 @@ def share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark and DuckDB; the global-share window runs over the bounded
     25-row aggregate (the repo's no-unpartitioned-window rule targets
     fact-sized DataFrame Window specs — SQL windows over catalog-bounded
-    aggregates are the sanctioned exception, cf. q_ohlc_bars)."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SHARE_SQL)
+    aggregates are the sanctioned exception, cf. q_ohlc_bars).""",
+)
 
 
 @query(
@@ -802,9 +799,9 @@ _FIFO_SQL = """
 """
 
 
-@query("q_fifo_allocation", oracle=_FIFO_SQL, tags=("analytics", "finance", "matching"))
-def fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIFO lot matching — the cost-basis allocation every inventory /
+sql_query(
+    "q_fifo_allocation", _FIFO_SQL, tags=("analytics", "finance", "matching"),
+    doc="""FIFO lot matching — the cost-basis allocation every inventory /
     tax-lot system runs — expressed as pure interval algebra: each side's
     lines get cumulative-quantity intervals via a per-part prefix sum, and
     a return consumes sale lots FIFO exactly where the intervals
@@ -816,11 +813,8 @@ def fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers end-to-end, and the (shipdate, orderkey, linenumber) order is
     total, so the allocation is engine-identical. Unmatched = returns
     beyond cumulative sales (an oversold signal). One SQL text runs
-    verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_FIFO_SQL)
+    verbatim on both engines.""",
+)
 
 
 @query(

@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -128,20 +128,17 @@ _EWMA_SQL = """
 """
 
 
-@query("q_ewma_orders", oracle=_EWMA_SQL, tags=("analytics", "finance", "timeseries"))
-def ewma_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially weighted moving average (decay 0.5) of each customer's
+sql_query(
+    "q_ewma_orders", _EWMA_SQL, tags=("analytics", "finance", "timeseries"),
+    doc="""Exponentially weighted moving average (decay 0.5) of each customer's
     order values — the recursive smoother expressed as a CLOSED-FORM pair of
     running sums: ewma_i = Σ x_j·2^j / Σ 2^j over j ≤ i (weights 2^j are
     exact IEEE powers of two, so no cross-engine pow() drift; the common
     2^-i cancels in the ratio). Two windowed sums per row, one shuffle on
     custkey — no recursion, no UDF, no driver loop; per-key history depth
     only grows the exponent, which double carries to 2^1000+. One SQL text
-    runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_EWMA_SQL)
+    runs verbatim on Spark and DuckDB.""",
+)
 
 
 @query(
@@ -928,9 +925,9 @@ _HURST_SQL = """
 """
 
 
-@query("q_hurst_exponent", oracle=_HURST_SQL, tags=("analytics", "finance", "timeseries"))
-def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hurst exponent per nation's daily-revenue series by classical
+sql_query(
+    "q_hurst_exponent", _HURST_SQL, tags=("analytics", "finance", "timeseries"),
+    doc="""Hurst exponent per nation's daily-revenue series by classical
     rescaled-range analysis: split the day-indexed series into segments of
     8/16/32 days, compute R/S per segment (range of cumulative deviations
     over the std dev), average per size, and fit the log-log slope —
@@ -944,72 +941,11 @@ def hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     regression run in doubles with identical shapes, rounded at 4 dp.
     Scale: everything is keyed by (nation, segment) — two shuffles and a
     3-row-per-nation fit; per-instrument parallelism at 100 TB. One SQL
-    text runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_HURST_SQL)
-
-
-@query(
-    "q_croston_forecast",
-    oracle="""
-    WITH pm AS (
-      SELECT l.l_partkey AS part,
-             CAST(year(o.o_orderdate) AS BIGINT) * 12 + month(o.o_orderdate) AS m,
-             CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      GROUP BY part, m
-    ),
-    seq AS (
-      SELECT part, m, q,
-             row_number() OVER (PARTITION BY part ORDER BY m) AS idx,
-             m - lag(m) OVER (PARTITION BY part ORDER BY m) AS gap
-      FROM pm
-    ),
-    sm AS (
-      SELECT part, idx, q, gap,
-             sum(q * pow(2e0, idx)) OVER w / sum(pow(2e0, idx)) OVER w AS z_hat,
-             sum(coalesce(gap, 0) * pow(2e0, idx)) OVER w
-               / nullif(sum(CASE WHEN gap IS NULL THEN 0e0 ELSE pow(2e0, idx) END) OVER w, 0e0)
-               AS i_hat
-      FROM seq
-      WINDOW w AS (PARTITION BY part ORDER BY idx
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ),
-    latest AS (
-      SELECT part, idx AS n_periods, z_hat, i_hat,
-             row_number() OVER (PARTITION BY part ORDER BY idx DESC) AS rn
-      FROM sm
-    )
-    SELECT part,
-           CAST(n_periods AS BIGINT)  AS n_periods,
-           round(z_hat, 4)            AS ewma_size,
-           round(i_hat, 4)            AS ewma_interval,
-           round(z_hat / i_hat, 4)    AS croston_rate
-    FROM latest
-    WHERE rn = 1 AND i_hat IS NOT NULL AND i_hat > 0
-    """,
-    tags=("analytics", "forecast", "supply-chain"),
+    text runs verbatim on both engines.""",
 )
-def croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Croston's method for intermittent demand — THE sparse-series
-    forecaster (spare parts, long-tail SKUs): smooth the nonzero demand
-    SIZES and the INTERVALS between demand months separately, forecast
-    rate = size/interval. Both smoothers are the closed-form EWMA ratio
-    of q_ewma_orders (decay ½ → exact 2^idx weights); the windowed sums
-    accumulate in frame order — identical sequential order on both
-    engines — so the >53-bit weight span never meets a reordered sum.
-    The first observation has no interval (gap NULL → weight dropped on
-    both sides identically). Output = per-part latest state, rounded at
-    4 dp. Scale: part-partitioned windows over bounded monthly series —
-    the per-SKU parallelism a demand planner runs nightly. One SQL text
-    runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
 
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
+
+_CROSTON_SQL = """
     WITH pm AS (
       SELECT l.l_partkey AS part,
              CAST(year(o.o_orderdate) AS BIGINT) * 12 + month(o.o_orderdate) AS m,
@@ -1046,7 +982,23 @@ def croston_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM latest
     WHERE rn = 1 AND i_hat IS NOT NULL AND i_hat > 0
     """
-    )
+
+
+sql_query(
+    "q_croston_forecast", _CROSTON_SQL, tags=("analytics", "forecast", "supply-chain"),
+    doc="""Croston's method for intermittent demand — THE sparse-series
+    forecaster (spare parts, long-tail SKUs): smooth the nonzero demand
+    SIZES and the INTERVALS between demand months separately, forecast
+    rate = size/interval. Both smoothers are the closed-form EWMA ratio
+    of q_ewma_orders (decay ½ → exact 2^idx weights); the windowed sums
+    accumulate in frame order — identical sequential order on both
+    engines — so the >53-bit weight span never meets a reordered sum.
+    The first observation has no interval (gap NULL → weight dropped on
+    both sides identically). Output = per-part latest state, rounded at
+    4 dp. Scale: part-partitioned windows over bounded monthly series —
+    the per-SKU parallelism a demand planner runs nightly. One SQL text
+    runs verbatim on both engines.""",
+)
 
 
 @query(

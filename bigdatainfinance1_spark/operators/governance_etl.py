@@ -8,8 +8,8 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table, register_views
+from bigdatainfinance1_spark.registry import query, sql_query
+from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
@@ -920,9 +920,9 @@ _DP_SQL = f"""
 """
 
 
-@query("q_dp_histogram", oracle=_DP_SQL, tags=("governance", "privacy"))
-def dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differentially-private release of the per-nation customer histogram
+sql_query(
+    "q_dp_histogram", _DP_SQL, tags=("governance", "privacy"),
+    doc="""Differentially-private release of the per-nation customer histogram
     and revenue total via the Laplace mechanism — the full release
     pipeline: (1) per-user contribution bounding (each customer counts
     once; each order's revenue contribution clipped at {clip}), which is
@@ -941,9 +941,8 @@ def dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring's one-line swap, same shape as the seeded-sampling tiers).
     Scale: two map-side-combinable aggregates (per-customer bound, then
     per-nation cells); noise is per-cell closed form — O(cells) work
-    after the scan."""
-    register_views(spark, sf_dir)
-    return spark.sql(_DP_SQL)
+    after the scan.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -411,9 +411,9 @@ _REACH_SQL = """
 """
 
 
-@query("q_recursive_reachability", oracle=_REACH_SQL, tags=("analytics", "graph", "recursive"))
-def recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-hop reachability profile from the smallest part key, written as a
+sql_query(
+    "q_recursive_reachability", _REACH_SQL, tags=("analytics", "graph", "recursive"),
+    doc="""3-hop reachability profile from the smallest part key, written as a
     RECURSIVE CTE — the declarative twin of q_bfs_hops' hand-unrolled
     frontier loop, possible since Spark 4 added WITH RECURSIVE. The
     recursion emits per-level DISTINCT (node, dist) rows with the
@@ -425,11 +425,8 @@ def recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the DISTINCT the step walks paths and the row count is
     degree^depth, which tripped Spark's recursion row limit on the 10×
     stage (see _REACH_SQL comment). One SQL text runs verbatim on both
-    engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_REACH_SQL)
+    engines.""",
+)
 
 
 AA_TOP = 20  # predicted links reported

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -1098,9 +1098,9 @@ def _bartlett_sql() -> str:
     """
 
 
-@query("q_bartlett_test", oracle=_bartlett_sql(), tags=("stats", "inference"))
-def bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bartlett's test of variance homogeneity across the five order
+sql_query(
+    "q_bartlett_test", _bartlett_sql(), tags=("stats", "inference"),
+    doc="""Bartlett's test of variance homogeneity across the five order
     priorities — the precondition check for pooled-variance ANOVA
     (q_anova_f assumes it; q_brown_forsythe is the robust alternative):
     T = [(N-k) ln Sp^2 - SUM (n_g-1) ln s_g^2] / C with the standard
@@ -1112,11 +1112,8 @@ def bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     single row so every cross-group combination is an explicitly ordered
     expression, never an engine-ordered double sum; ln/closed forms run
     on identical doubles, rounded at 6. Scale: one map-side-combinable
-    5-group aggregate; everything after is O(1)."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_bartlett_sql())
+    5-group aggregate; everything after is O(1).""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -13,32 +13,34 @@ production (inference is a full extra pass); the parquet sink partitions by
 a low-cardinality derived column (order year) which is what enables static
 and dynamic partition pruning on re-read — the re-read query below filters
 on the partition column, and tests/test_plans.py asserts the pruned scan.
-Scratch staging lives under /tmp keyed by sf_dir hash (same pattern as the
-streaming source staging).
+Scratch staging lives under /tmp keyed by the source table's fingerprint
+(catalog.source_key, shared with the streaming source staging).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import (
     load_table,
     read_csv,
     read_json,
-    register_views,
+    source_key,
     write_parquet,
 )
 
 _SCRATCH = "/tmp/bigdatainfinance1_etl_scratch"
 
 
-def _stage_dir(kind: str, sf_dir: str) -> str:
-    return os.path.join(_SCRATCH, kind + "_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12])
+def _stage_dir(kind: str, sf_dir: str, table: str) -> str:
+    """Scratch dir for ``kind``, keyed on the fingerprint of its source
+    ``table``: a stage reused once written is rebuilt when the table is
+    rewritten at the same path."""
+    return os.path.join(_SCRATCH, kind + "_" + source_key(sf_dir, table))
 
 
 @query(
@@ -61,7 +63,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Key/count aggregates are textually lossless, so the result
     must equal querying the parquet directly — which is the oracle."""
     nation = load_table(spark, sf_dir, "nation")
-    path = _stage_dir("csv_nation", sf_dir)
+    path = _stage_dir("csv_nation", sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     back = read_csv(spark, path, inferSchema="false")
     # header=true preserves names; re-apply dtypes from the parquet schema
@@ -101,7 +103,7 @@ def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = _stage_dir("json_orders", sf_dir)
+    path = _stage_dir("json_orders", sf_dir, "orders")
     orders.write.mode("overwrite").json(path)
     back = read_json(spark, path, schema=orders.schema)
     return back.groupBy("o_orderstatus").agg(
@@ -133,7 +135,7 @@ def partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     that keeps a 100 TB date-partitioned table queryable); verified in
     tests/test_plans.py via the plan's PartitionFilters."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("orders_by_year", sf_dir)
+    path = _stage_dir("orders_by_year", sf_dir, "orders")
     write_parquet(
         orders.withColumn("o_year", F.year("o_orderdate")), path, partition_by=("o_year",)
     )
@@ -161,14 +163,13 @@ _SHARED_SQL = """
 """
 
 
-@query("q_sql_shared_text", oracle=_SHARED_SQL, tags=("sql", "etl"))
-def sql_shared_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry point 3 (SURVEY.md §3): ONE SQL string executed verbatim by both
+sql_query(
+    "q_sql_shared_text", _SHARED_SQL, tags=("sql", "etl"),
+    doc="""Entry point 3 (SURVEY.md §3): ONE SQL string executed verbatim by both
     engines — Spark runs it over temp views named exactly like the oracle's
     DuckDB views, proving the SQL surface agrees on the shared dialect subset
-    (ANSI aggregates, timestamp literals, round)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SHARED_SQL)
+    (ANSI aggregates, timestamp literals, round).""",
+)
 
 
 SNAPSHOT_MAX_KEY = 1000
@@ -296,7 +297,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
-    path = _stage_dir("orc_orders", sf_dir)
+    path = _stage_dir("orc_orders", sf_dir, "orders")
     orders.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("o_orderpriority").agg(
@@ -381,7 +382,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-only operation — data pages are untouched, so the read cost is
     identical to a homogeneous directory."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("schema_evo", sf_dir)
+    path = _stage_dir("schema_evo", sf_dir, "orders")
     if not os.path.exists(os.path.join(path, "_STAGED")):
         v1 = orders.filter(F.year("o_orderdate") < 1998).select("o_orderkey", "o_totalprice")
         v2 = orders.filter(F.year("o_orderdate") >= 1998).select(
@@ -436,8 +437,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     (maxRecordsPerFile / AQE coalesce); repartition(4) is the local-mode
     stand-in."""
     orders = load_table(spark, sf_dir, "orders")
-    frag = _stage_dir("frag_orders", sf_dir)
-    compact = _stage_dir("compact_orders", sf_dir)
+    frag = _stage_dir("frag_orders", sf_dir, "orders")
+    compact = _stage_dir("compact_orders", sf_dir, "orders")
     if not os.path.exists(os.path.join(frag, "_SUCCESS")):
         orders.repartition(64).write.mode("overwrite").parquet(frag)
     if not os.path.exists(os.path.join(compact, "_SUCCESS")):
@@ -488,7 +489,7 @@ def csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import csv as _csv
 
     nation = load_table(spark, sf_dir, "nation")
-    path = _stage_dir("csv_malformed", sf_dir)
+    path = _stage_dir("csv_malformed", sf_dir, "nation")
     marker = os.path.join(path, "_STAGED")
     if not os.path.exists(marker):
         os.makedirs(path, exist_ok=True)
@@ -559,7 +560,7 @@ def fixed_width_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse is a narrow JVM map (no UDF), exactly how a production
     fixed-width ingest should look."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("fixedwidth_orders", sf_dir)
+    path = _stage_dir("fixedwidth_orders", sf_dir, "orders")
     lines = orders.select(
         F.format_string(
             "%012d%s%012d%s",
@@ -617,7 +618,7 @@ def compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     out = {}
     for codec in ("snappy", "zstd"):
-        path = _stage_dir(f"codec_{codec}", sf_dir)
+        path = _stage_dir(f"codec_{codec}", sf_dir, "lineitem")
         li.write.mode("overwrite").option("compression", codec).parquet(path)
         nbytes = sum(
             os.path.getsize(p) for p in _glob.glob(os.path.join(path, "*.parquet"))

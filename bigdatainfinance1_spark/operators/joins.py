@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -670,9 +670,9 @@ _NOT_IN_NULLS_SQL = """
 """
 
 
-@query("q_not_in_nulls", oracle=_NOT_IN_NULLS_SQL, tags=("join", "semantics"))
-def not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4+ (three-valued-logic semantics): NOT IN against a subquery that
+sql_query(
+    "q_not_in_nulls", _NOT_IN_NULLS_SQL, tags=("join", "semantics"),
+    doc="""J4+ (three-valued-logic semantics): NOT IN against a subquery that
     contains a NULL returns ZERO rows (x <> NULL is UNKNOWN, so no row can
     prove membership-absence), while NOT EXISTS — and NOT IN over the
     null-filtered probe — return the intended complement. One shared SQL
@@ -683,8 +683,5 @@ def not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin by necessity (the semantics cannot be a hash
     anti join when the probe may hold NULL); the null-filtered and
     NOT EXISTS branches stay hash anti joins — exactly the rewrite a user
-    should apply at 100 TB, which this relation demonstrates by contrast."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_NOT_IN_NULLS_SQL)
+    should apply at 100 TB, which this relation demonstrates by contrast.""",
+)

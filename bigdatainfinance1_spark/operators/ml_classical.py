@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -927,9 +927,9 @@ def _ada_sql() -> str:
     """
 
 
-@query("q_adaboost_round", oracle=_ada_sql(), tags=("ml", "model", "iterative"))
-def adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two rounds of AdaBoost over the bucketed decision-stump space:
+sql_query(
+    "q_adaboost_round", _ada_sql(), tags=("ml", "model", "iterative"),
+    doc="""Two rounds of AdaBoost over the bucketed decision-stump space:
     round 1 picks the minimum-error stump under uniform weights, computes
     alpha = 0.5 ln((1-err)/err), reweights every example by
     exp(-+alpha x h1(x)y) — which collapses to ONE closed-form weight per
@@ -944,11 +944,8 @@ def adaboost_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(thresholds) and every decision ranks on round(err, 9) with the
     threshold as tie-break. Scale: identical posture to q_decision_stump
     — the corpus pass is one aggregate; rounds add O(grid x buckets)
-    arithmetic, not scans."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ada_sql())
+    arithmetic, not scans.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table, register_views
+from bigdatainfinance1_spark.registry import query, sql_query
+from bigdatainfinance1_spark.sources.catalog import load_table
 
 CHI2_2_95 = 5.991465  # chi2(2) 95% critical value
 CHI2_2_975 = 7.377759  # chi2(2) 97.5% critical value (outlier flag)
@@ -571,9 +571,9 @@ def _logit_sql() -> str:
     """
 
 
-@query("q_logistic_irls", oracle=_logit_sql(), tags=("ml", "model", "iterative"))
-def logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Logistic regression P(urgent-priority | order value) fit by 4
+sql_query(
+    "q_logistic_irls", _logit_sql(), tags=("ml", "model", "iterative"),
+    doc="""Logistic regression P(urgent-priority | order value) fit by 4
     unrolled Newton/IRLS iterations over the bucketed value histogram —
     the actual GLM inner loop made distributable the same way
     q_adaboost_round distributes boosting: per-example weights collapse
@@ -586,6 +586,5 @@ def logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE SQL text runs verbatim on both engines (register_views +
     spark.sql); parameters re-round at 12 dp between iterations so the
     4-step fixed point is bit-identical. Scale: the corpus pass is one
-    histogram aggregate; iterations touch O(buckets) rows each."""
-    register_views(spark, sf_dir)
-    return spark.sql(_logit_sql())
+    histogram aggregate; iterations touch O(buckets) rows each.""",
+)

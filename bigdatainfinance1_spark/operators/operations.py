@@ -15,8 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table, register_views
+from bigdatainfinance1_spark.registry import query, sql_query
+from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
 # q_eoq_policy — economic order quantity + safety stock per brand
@@ -174,9 +174,9 @@ _ERLANG_SQL = f"""
 """
 
 
-@query("q_erlang_c", oracle=_ERLANG_SQL, tags=("operations", "recursive"))
-def erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Erlang-C staffing table for the purchase-event arrival stream:
+sql_query(
+    "q_erlang_c", _ERLANG_SQL, tags=("operations", "recursive"),
+    doc="""Erlang-C staffing table for the purchase-event arrival stream:
     with lambda measured from the corpus (arrivals / 720 h) and a 5-min
     average handle time, the probability an arrival must queue,
     the average speed of answer, and the 20-second service level for
@@ -191,9 +191,8 @@ def erlang_c(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer count over a fixed constant; every recursion step is the same
     double arithmetic in the same order on both engines, rounded at 4/6.
     Scale: the corpus pass is one count; the recursion is O(c_max) rows
-    of O(1) state."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ERLANG_SQL)
+    of O(1) state.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -155,18 +155,15 @@ _MODE_SQL = """
 """
 
 
-@query("q_mode_per_user", oracle=_MODE_SQL, tags=("analytics", "events"))
-def mode_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-group mode: each user's most frequent event type.
+sql_query(
+    "q_mode_per_user", _MODE_SQL, tags=("analytics", "events"),
+    doc="""Deterministic per-group mode: each user's most frequent event type.
     Neither engine's native mode() defines tie order, so the oracle-safe
     (and scale-safe) form is count → row_number with an explicit
     (count DESC, value ASC) total order — two shuffles on user_id keys,
     the second over the already-tiny counts relation. One SQL text runs
-    verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_MODE_SQL)
+    verbatim on Spark and DuckDB.""",
+)
 
 
 @query(
@@ -277,9 +274,9 @@ _CONCURRENCY_SQL = """
 """
 
 
-@query("q_concurrency_sweep", oracle=_CONCURRENCY_SQL, tags=("analytics", "events", "timeseries"))
-def concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval algebra: peak concurrent activity per (event_type, day),
+sql_query(
+    "q_concurrency_sweep", _CONCURRENCY_SQL, tags=("analytics", "events", "timeseries"),
+    doc="""Interval algebra: peak concurrent activity per (event_type, day),
     treating each event as a 5-minute active interval — the classic
     sweep-line (+1 at start, -1 at end, running sum, max). Midnight-
     crossing intervals are SPLIT at the day boundary (a carry-in +1 at the
@@ -287,11 +284,8 @@ def concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ordered window never spans partitions — the partitioned form of a
     globally-ordered sweep. Tie rule: at equal timestamps the -1 sorts
     first ([start, end) semantics); the running sum is tie-order-invariant
-    beyond that. One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CONCURRENCY_SQL)
+    beyond that. One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 _MARKOV_SQL = """
@@ -312,18 +306,15 @@ _MARKOV_SQL = """
 """
 
 
-@query("q_markov_transitions", oracle=_MARKOV_SQL, tags=("analytics", "events"))
-def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral sequence model: the first-order Markov transition matrix
+sql_query(
+    "q_markov_transitions", _MARKOV_SQL, tags=("analytics", "events"),
+    doc="""Behavioral sequence model: the first-order Markov transition matrix
     over each user's event stream — P(next event type | current), from a
     per-user lead() with total order (ts, event_id) and a windowed row-
     normalization over the 4×4 count matrix. One shuffle on user_id for
     the sequence pass; the normalization window runs on a 16-row relation.
-    One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_MARKOV_SQL)
+    One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 @query(

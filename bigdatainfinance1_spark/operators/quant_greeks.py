@@ -7,17 +7,13 @@ rates) with the put-call-parity delta identity checked in-relation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from bigdatainfinance1_spark.operators.quant_pricing import (
     BS_PART_CAP,
     BS_RATE,
     BS_TENOR,
     _norm_cdf_sql,
 )
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import register_views
+from bigdatainfinance1_spark.registry import sql_query
 
 # ---------------------------------------------------------------------------
 # q_bs_greeks — closed-form delta/gamma/vega/theta/rho
@@ -65,9 +61,9 @@ _GREEKS_SQL = f"""
 """
 
 
-@query("q_bs_greeks", oracle=_GREEKS_SQL, tags=("finance", "quant"))
-def bs_greeks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form Black-Scholes Greeks for q_black_scholes' option grid:
+sql_query(
+    "q_bs_greeks", _GREEKS_SQL, tags=("finance", "quant"),
+    doc="""Closed-form Black-Scholes Greeks for q_black_scholes' option grid:
     call/put delta (N(d1), N(d1)-1 — their difference is EXACTLY 1 by
     put-call parity, asserted per row), gamma (shared by call and put),
     vega per vol point, theta per calendar day (the carry a desk quotes),
@@ -82,6 +78,5 @@ def bs_greeks(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns; all Greeks are single closed-form expressions rounded 6/8.
     Scale: embarrassingly parallel row math over the part scan — the
     100 TB shape of portfolio revaluation (a risk run IS a map over
-    positions)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GREEKS_SQL)
+    positions).""",
+)

@@ -35,8 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table, register_views
+from bigdatainfinance1_spark.registry import query, sql_query
+from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
 # q_black_scholes
@@ -97,9 +97,9 @@ _BS_SQL = f"""
 """
 
 
-@query("q_black_scholes", oracle=_BS_SQL, tags=("finance", "pricing"))
-def black_scholes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """European call/put prices for a deterministic option ladder over the
+sql_query(
+    "q_black_scholes", _BS_SQL, tags=("finance", "pricing"),
+    doc="""European call/put prices for a deterministic option ladder over the
     part catalog: spot = p_retailprice, strike = spot x (90 + p_partkey %
     21)% — a +-10% moneyness ladder computed in EXACT integer
     basis-point-cents (spot_cents x pct / 10000, one correctly-rounded
@@ -116,9 +116,8 @@ def black_scholes(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-dp rounding. Scale: the p_partkey <= {cap} predicate pushes down to
     the parquet scan and the pricing itself is a per-row closed form —
     zero shuffles, embarrassingly parallel at any corpus size.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_BS_SQL)
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -268,9 +267,9 @@ _IRR_SQL = f"""
 """
 
 
-@query("q_irr_bisection", oracle=_IRR_SQL, tags=("finance", "pricing", "recursive"))
-def irr_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Internal rate of return per nation for a deterministic project
+sql_query(
+    "q_irr_bisection", _IRR_SQL, tags=("finance", "pricing", "recursive"),
+    doc="""Internal rate of return per nation for a deterministic project
     (outlay 1000 at t=0, then 8 annual cashflows 150 + 25 x
     ((key + t) % 5)), solved by 48 bisection steps on [0, 1] — the
     root-finding pattern that generalizes to yield-to-maturity and
@@ -285,9 +284,8 @@ def irr_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     bracket [0, 1] is valid by construction: NPV(0) = total cashflows
     - 1000 >= 200 > 0 and NPV(1) <= -750 < 0. Scale: the recursion is
     {IRR_STEPS} steps over an O(nations) relation — corpus-independent.
-    """
-    register_views(spark, sf_dir)
-    return spark.sql(_IRR_SQL)
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -944,9 +942,9 @@ def _iv_sql() -> str:
     """
 
 
-@query("q_implied_vol", oracle=_iv_sql(), tags=("finance", "pricing", "iterative"))
-def implied_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Implied volatility by Newton-Raphson, 5 iterations UNROLLED as
+sql_query(
+    "q_implied_vol", _iv_sql(), tags=("finance", "pricing", "iterative"),
+    doc="""Implied volatility by Newton-Raphson, 5 iterations UNROLLED as
     chained CTEs: market prices are the q_black_scholes ladder evaluated
     at each option's true σ, then σₖ₊₁ = σₖ − (BS(σₖ) − P)/vega(σₖ)
     starting from 0.2 with a [0.01, 2.0] clamp and a vega floor — the
@@ -959,9 +957,8 @@ def implied_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: ONE SQL text runs verbatim on both engines; per-row
     closed forms, zero shuffles, embarrassingly parallel at any corpus
     size; libm ulps absorbed by the 6-dp round (Newton converges to
-    ~1e-10 by iteration 5, far inside it)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_iv_sql())
+    ~1e-10 by iteration 5, far inside it).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1186,9 +1183,9 @@ def _binomial_sql() -> str:
     """
 
 
-@query("q_binomial_option", oracle=_binomial_sql(), tags=("finance", "pricing"))
-def binomial_option(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cox-Ross-Rubinstein binomial option pricing ({CRR_STEPS} steps) on
+sql_query(
+    "q_binomial_option", _binomial_sql(), tags=("finance", "pricing"),
+    doc="""Cox-Ross-Rubinstein binomial option pricing ({CRR_STEPS} steps) on
     the q_black_scholes option grid, priced as the closed-form terminal
     sum disc * SUM C(n,k) p^k q^(n-k) payoff(S u^k d^(n-k)) — for a
     European call the backward induction collapses to this single
@@ -1202,11 +1199,8 @@ def binomial_option(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplication chain (never libm pow), so both engines walk the
     identical double arithmetic; rounded at 4. Scale: pure map-side
     arithmetic over the part grid — no joins, no shuffles past the
-    scan."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_binomial_sql())
+    scan.""",
+)
 
 
 # ---------------------------------------------------------------------------

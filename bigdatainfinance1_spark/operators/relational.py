@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -284,9 +284,9 @@ _ABOVE_BRAND_AVG_SQL = """
 """
 
 
-@query("q_subquery_above_brand_avg", oracle=_ABOVE_BRAND_AVG_SQL, tags=("subquery", "sql"))
-def subquery_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery: parts priced >1% above their brand's
+sql_query(
+    "q_subquery_above_brand_avg", _ABOVE_BRAND_AVG_SQL, tags=("subquery", "sql"),
+    doc="""Correlated scalar subquery: parts priced >1% above their brand's
     average. One SQL text runs verbatim on Spark AND DuckDB; Catalyst
     decorrelates the subquery into an aggregate + join
     (RewriteCorrelatedScalarSubquery), so the physical plan is one
@@ -297,11 +297,8 @@ def subquery_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     5% above its brand mean, which the new >=1-row oracle guard caught.
     Raw double comparison is safe: the closest part sits >=0.0033
     absolute from the 1.01×avg boundary at every sf, ~10 orders of
-    magnitude above summation-order ulps."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ABOVE_BRAND_AVG_SQL)
+    magnitude above summation-order ulps.""",
+)
 
 
 @query(
@@ -353,9 +350,9 @@ _KEYSET_SQL = """
 """
 
 
-@query("q_keyset_pagination", oracle=_KEYSET_SQL, tags=("relational", "scale", "sql-surface"))
-def keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyset (cursor) pagination — the page-N pattern that survives 100 TB
+sql_query(
+    "q_keyset_pagination", _KEYSET_SQL, tags=("relational", "scale", "sql-surface"),
+    doc="""Keyset (cursor) pagination — the page-N pattern that survives 100 TB
     where OFFSET cannot: the client passes the last row's (acctbal,
     custkey) cursor and the next page is WHERE (key tuple) > cursor
     ORDER BY ... LIMIT page_size. Unlike OFFSET — which must scan and
@@ -366,8 +363,5 @@ def keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     range) regardless of page number. One SQL text runs verbatim on both
     engines; the (acctbal, custkey) order is total, so the page content
     is engine-identical — which is the property paginated APIs actually
-    need (no duplicated/skipped rows across pages)."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_KEYSET_SQL)
+    need (no duplicated/skipped rows across pages).""",
+)

@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -66,9 +66,9 @@ _SKYLINE_SQL = """
 """
 
 
-@query("q_skyline_parts", oracle=_SKYLINE_SQL, tags=("analytics",))
-def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2D skyline (Pareto frontier) per brand: parts not dominated on
+sql_query(
+    "q_skyline_parts", _SKYLINE_SQL, tags=("analytics",),
+    doc="""2D skyline (Pareto frontier) per brand: parts not dominated on
     (minimize retail price, maximize size). The naive formulation is an
     O(n^2) NOT-EXISTS self-join; this is the O(n log n) sweep — sort by
     (price asc, size desc) and keep rows whose size strictly exceeds the
@@ -76,11 +76,8 @@ def skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier row has price <= yours, so a preceding size >= yours means
     you're dominated (ties collapse first via the distinct-points CTE).
     One shuffle on p_brand, per-brand ordered window — no cartesian
-    anywhere. One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SKYLINE_SQL)
+    anywhere. One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 _GEO_SQL = """
@@ -119,9 +116,9 @@ _GEO_SQL = """
 """
 
 
-@query("q_geo_grid_knn", oracle=_GEO_SQL, tags=("analytics", "spatial"))
-def geo_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial nearest-neighbor via GRID BUCKETING: each entity gets
+sql_query(
+    "q_geo_grid_knn", _GEO_SQL, tags=("analytics", "spatial"),
+    doc="""Spatial nearest-neighbor via GRID BUCKETING: each entity gets
     deterministic synthetic coordinates (Knuth multiplicative hash mod a
     0.1-degree lattice — pure 64-bit integer arithmetic, so both engines
     derive bit-identical doubles), then each customer probes its own
@@ -130,11 +127,8 @@ def geo_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     density, never all-pairs) and keeps the closest supplier by squared
     equirectangular distance with a deterministic id tiebreak. Customers
     with no supplier within the ring drop out (documented inner-join
-    semantics). One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_GEO_SQL)
+    semantics). One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 @query(
@@ -318,36 +312,7 @@ _RFM_YEAR_SQL = """
 """
 
 
-@query(
-    "q_rfm_migration",
-    oracle=f"""
-    WITH {_RFM_YEAR_SQL}
-    SELECT
-      a.segment AS seg_1999,
-      b.segment AS seg_2000,
-      CAST(count(*) AS BIGINT) AS n_customers
-    FROM (SELECT * FROM seg WHERE yr = 1999) a
-    JOIN (SELECT * FROM seg WHERE yr = 2000) b ON a.custkey = b.custkey
-    GROUP BY seg_1999, seg_2000
-    """,
-    tags=("analytics", "crm", "finance"),
-)
-def rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segment migration matrix, 1999→2000 — the CRM artifact built ON
-    q_rfm_segmentation: score each year's customers against their own
-    cohort (quartile windows PARTITIONED by year — scoring 2000 against
-    1999's distribution would bake in drift), apply the same segment
-    rules, and count customers per (from, to) cell. Champions that slide
-    to at_risk are the churn-save call list. Determinism: every ntile
-    orders by (metric, custkey) — total order. Scale: one year-partitioned
-    scoring pass and a customer-keyed self-join of two year slices; at
-    100 TB years are separate partitions and the join is co-partitioned
-    on the customer key. One SQL text runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
-        f"""
+_RFM_MIGRATION_SQL = f"""
     WITH {_RFM_YEAR_SQL}
     SELECT
       a.segment AS seg_1999,
@@ -357,7 +322,21 @@ def rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN (SELECT * FROM seg WHERE yr = 2000) b ON a.custkey = b.custkey
     GROUP BY seg_1999, seg_2000
     """
-    )
+
+
+sql_query(
+    "q_rfm_migration", _RFM_MIGRATION_SQL, tags=("analytics", "crm", "finance"),
+    doc="""RFM segment migration matrix, 1999→2000 — the CRM artifact built ON
+    q_rfm_segmentation: score each year's customers against their own
+    cohort (quartile windows PARTITIONED by year — scoring 2000 against
+    1999's distribution would bake in drift), apply the same segment
+    rules, and count customers per (from, to) cell. Champions that slide
+    to at_risk are the churn-save call list. Determinism: every ntile
+    orders by (metric, custkey) — total order. Scale: one year-partitioned
+    scoring pass and a customer-keyed self-join of two year slices; at
+    100 TB years are separate partitions and the join is co-partitioned
+    on the customer key. One SQL text runs verbatim on both engines.""",
+)
 
 
 @query(

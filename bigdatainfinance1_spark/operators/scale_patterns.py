@@ -21,14 +21,13 @@ demonstrates the technique (asserted in tests/test_plans.py).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table
+from bigdatainfinance1_spark.registry import query, sql_query
+from bigdatainfinance1_spark.sources.catalog import load_table, source_key
 
 N_BUCKETS = 16
 N_SALT = 8
@@ -36,11 +35,12 @@ _STAGE = "/tmp/bigdatainfinance1_bucket_stage"
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage orders+lineitem as bucketed catalog tables (once per sf_dir).
-    Bucketing metadata lives in the session catalog; data files are external
-    under /tmp so re-runs in a fresh session re-register cheaply."""
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    tbl_o, tbl_l = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
+    """Stage orders+lineitem as bucketed catalog tables (once per source
+    fingerprint, catalog.source_key). Bucketing metadata lives in the
+    session catalog; data files are external under /tmp so re-runs in a
+    fresh session re-register cheaply."""
+    tbl_o = f"orders_bkt_{source_key(sf_dir, 'orders')}"
+    tbl_l = f"lineitem_bkt_{source_key(sf_dir, 'lineitem')}"
     for tbl, name, key in ((tbl_o, "orders", "o_orderkey"), (tbl_l, "lineitem", "l_orderkey")):
         if spark.catalog.tableExists(tbl):
             continue
@@ -155,9 +155,9 @@ _ZORDER_SQL = f"""
 """.format(zexpr=_zorder_expr())
 
 
-@query("q_zorder_layout", oracle=_ZORDER_SQL, tags=("scale", "layout"))
-def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Physical-layout operator: a 16-bit Z-ORDER (Morton) clustering key
+sql_query(
+    "q_zorder_layout", _ZORDER_SQL, tags=("scale", "layout"),
+    doc="""Physical-layout operator: a 16-bit Z-ORDER (Morton) clustering key
     interleaving the bits of the two most-filtered part attributes (size,
     banded price), then bucket stats per high-order z-prefix. Writing a
     table range-partitioned by this key co-locates rows that are close in
@@ -165,11 +165,8 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta/Iceberg OPTIMIZE ZORDER idea, here as pure shift-mask arithmetic
     (generated once, constant-folded by codegen; identical on both
     engines). Bucket min/max ranges ARE the pruning statistics a reader
-    would use. One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ZORDER_SQL)
+    would use. One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 @query(

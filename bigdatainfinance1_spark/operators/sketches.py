@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -217,9 +217,9 @@ _HLL_SQL = """
 """
 
 
-@query("q_hll_distinct", oracle=_HLL_SQL, tags=("aggregate", "sketch", "approx"))
-def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 upgraded to a full value-hash oracle: HyperLogLog distinct-count
+sql_query(
+    "q_hll_distinct", _HLL_SQL, tags=("aggregate", "sketch", "approx"),
+    doc="""A4 upgraded to a full value-hash oracle: HyperLogLog distinct-count
     of event users built from PORTABLE md5-derived registers (b = 8 →
     m = 256 buckets; register = leading-zero run of the next 120 bits + 1,
     capped at 40). The harmonic mean is computed as an exact integer —
@@ -232,11 +232,8 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     theory says ~1.04/√256 ≈ 6.5%% for the raw estimator). Scale: the
     sketch is 256 registers regardless of input size — map + groupBy(256)
     + two scalar rows; this is the mergeable-sketch shape that replaces
-    exact COUNT DISTINCT at 100 TB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_HLL_SQL)
+    exact COUNT DISTINCT at 100 TB.""",
+)
 
 
 # KMV (k-minimum-values) sketch with set algebra: keep the k = 64 smallest
@@ -315,9 +312,9 @@ _KMV_SQL = """
 """
 
 
-@query("q_kmv_overlap", oracle=_KMV_SQL, tags=("aggregate", "sketch", "approx"))
-def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV sketch set-algebra: estimate |clickers ∩ purchasers| from two
+sql_query(
+    "q_kmv_overlap", _KMV_SQL, tags=("aggregate", "sketch", "approx"),
+    doc="""KMV sketch set-algebra: estimate |clickers ∩ purchasers| from two
     64-minimum-value sketches — the intersection estimate HLL structurally
     cannot give (q_hll_distinct is the cardinality twin). ρ = share of the
     merged top-k present in both cohort sketches, est = ρ · est_union with
@@ -329,11 +326,8 @@ def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on ≤64-row relations (the constant-partition window is bounded by
     construction). Sketches of this shape merge associatively across
     partitions/days — the production path for overlap dashboards at
-    100 TB. One SQL text runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_KMV_SQL)
+    100 TB. One SQL text runs verbatim on both engines.""",
+)
 
 
 # Mergeable equi-width histogram quantile sketch: 256 buckets of $2,000
@@ -378,9 +372,9 @@ _HISTQ_SQL = """
 """
 
 
-@query("q_hist_quantile_sketch", oracle=_HISTQ_SQL, tags=("aggregate", "sketch", "approx"))
-def hist_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate p50/p95/p99 of order value from a 256-bucket equi-width
+sql_query(
+    "q_hist_quantile_sketch", _HISTQ_SQL, tags=("aggregate", "sketch", "approx"),
+    doc="""Approximate p50/p95/p99 of order value from a 256-bucket equi-width
     histogram sketch — the mergeable alternative to an exact distributed
     percentile (q_percentiles) and the portable alternative to the
     engine-native t-digest (q_approx_percentile, rows-only for exactly
@@ -388,11 +382,8 @@ def hist_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolates linearly inside the crossing bucket, so worst-case error
     is the $2,000 bucket width (~0.4%% of the domain). The cumulative
     window runs on ≤256 rows (constant-partition window, bounded by
-    construction). One SQL text runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_HISTQ_SQL)
+    construction). One SQL text runs verbatim on both engines.""",
+)
 
 
 @query(

@@ -9,10 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table, register_views
 
 
+# Not sql_query: the Spark text uses pipe syntax (|>), the oracle classic SQL.
 @query(
     "q_pipe_syntax",
     oracle="""
@@ -103,20 +104,17 @@ _LATERAL_SQL = """
 """
 
 
-@query("q_lateral_topn", oracle=_LATERAL_SQL, tags=("join", "relational"))
-def lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-2 customers by account balance per nation as a LATERAL
+sql_query(
+    "q_lateral_topn", _LATERAL_SQL, tags=("join", "relational"),
+    doc="""Top-2 customers by account balance per nation as a LATERAL
     correlated subquery — the join-shaped top-N-per-group that Spark 4
     added alongside the classic window formulation (q_rank_top_customers
     is the row_number twin). The (balance DESC, custkey) order is total,
     so both engines pick identical rows. Catalyst rewrites the lateral
     into a ranked join over the 25-row outer — at scale the same text
     expresses per-key candidate retrieval without materializing the full
-    ranking. One SQL text runs verbatim on both engines."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    ranking. One SQL text runs verbatim on both engines.""",
+)
 
 
 @query(
@@ -230,6 +228,7 @@ _COLLATION_RAW = """
 """
 
 
+# Not sql_query: the Spark text groups under COLLATE, the oracle by lower().
 @query(
     "q_collation_group",
     oracle=f"""
@@ -281,19 +280,16 @@ _GROUP_BY_ALL_SQL = """
 """
 
 
-@query("q_group_by_all", oracle=_GROUP_BY_ALL_SQL, tags=("spark4", "sql", "relational"))
-def group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL — the infer-the-keys grouping shorthand both Spark 4
+sql_query(
+    "q_group_by_all", _GROUP_BY_ALL_SQL, tags=("spark4", "sql", "relational"),
+    doc="""GROUP BY ALL — the infer-the-keys grouping shorthand both Spark 4
     and DuckDB ship: every non-aggregate select item becomes a grouping
     key. One SQL text runs verbatim on both engines (the q_sql_shared_text
     posture), so the hash match pins the two inference implementations to
     each other — the failure mode this guards is an engine silently
     classifying an expression differently (aggregate vs key) and changing
-    the result shape. Plan is the ordinary partial-agg + exchange."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUP_BY_ALL_SQL)
+    the result shape. Plan is the ordinary partial-agg + exchange.""",
+)
 
 
 @query(
@@ -451,9 +447,9 @@ _LCA_SQL = """
 """
 
 
-@query("q_lateral_column_alias", oracle=_LCA_SQL, tags=("spark4", "sql", "relational"))
-def lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lateral column aliases (Spark 3.4+/ANSI step beyond standard SQL):
+sql_query(
+    "q_lateral_column_alias", _LCA_SQL, tags=("spark4", "sql", "relational"),
+    doc="""Lateral column aliases (Spark 3.4+/ANSI step beyond standard SQL):
     `avg_order` is defined from the sibling aliases `revenue`/`n_orders`
     in the SAME select list and then itself referenced by `avg_order_k`
     — the deduplication-of-expressions surface that otherwise forces
@@ -462,9 +458,8 @@ def lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable aggregate; the alias chaining is
     purely analysis-time (the analyzer inlines it — the optimized plan
-    is identical to the repeated-expression form)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LCA_SQL)
+    is identical to the repeated-expression form).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -475,6 +470,7 @@ PARAM_SEGMENT = "BUILDING"
 PARAM_MIN_ORDERS = 5
 
 
+# Not sql_query: the Spark text binds named parameters the oracle inlines.
 @query(
     "q_parameterized_sql",
     oracle=f"""

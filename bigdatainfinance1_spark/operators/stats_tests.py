@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
@@ -293,18 +293,15 @@ _CHI2_SQL = """
 """
 
 
-@query("q_chi2_independence", oracle=_CHI2_SQL, tags=("analytics", "stats"))
-def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson chi-square independence test: market segment × order priority
+sql_query(
+    "q_chi2_independence", _CHI2_SQL, tags=("analytics", "stats"),
+    doc="""Pearson chi-square independence test: market segment × order priority
     contingency table. The cell grid is COMPLETED by crossing the two
     margin relations (5×5) before left-joining observed counts — zero-
     observation cells still contribute their expected mass, the mistake a
     naive groupBy makes. All counts are exact integers; the statistic is
-    one 25-row reduce. One SQL text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_CHI2_SQL)
+    one 25-row reduce. One SQL text runs verbatim on Spark and DuckDB.""",
+)
 
 
 _REGR_SQL = """
@@ -319,18 +316,15 @@ _REGR_SQL = """
 """
 
 
-@query("q_regr_by_brand", oracle=_REGR_SQL, tags=("analytics", "stats"))
-def regr_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped OLS: per-brand price-on-size regression via the native
+sql_query(
+    "q_regr_by_brand", _REGR_SQL, tags=("analytics", "stats"),
+    doc="""Grouped OLS: per-brand price-on-size regression via the native
     regr_slope / regr_intercept / regr_r2 aggregates (both engines expose
     the SQL:2003 regr_* family; both accumulate co-moments in double, and
     the 6-decimal round absorbs summation-order ulps). One hash aggregate,
     bounded per-group state — the sketchable regression shape. One SQL
-    text runs verbatim on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_REGR_SQL)
+    text runs verbatim on Spark and DuckDB.""",
+)
 
 
 @query(
@@ -595,9 +589,9 @@ _ANOVA_SQL = """
 """
 
 
-@query("q_anova_f", oracle=_ANOVA_SQL, tags=("analytics", "stats"))
-def anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA: does mean order value differ across market segments?
+sql_query(
+    "q_anova_f", _ANOVA_SQL, tags=("analytics", "stats"),
+    doc="""One-way ANOVA: does mean order value differ across market segments?
     F = (SS_between/(k−1)) / (SS_within/(N−k)), assembled entirely from
     per-group power sums (n, Σx, Σx²) — one grouped aggregate over the
     fact join, one 5-row reduce; the textbook identity SS_w = Σx² −
@@ -607,11 +601,8 @@ def anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     F ratio divides it out entirely. Completes the inference
     toolkit alongside q_welch_ttest (2 groups), q_chi2_independence
     (categorical), q_ks_test (distributional). One SQL text runs verbatim
-    on Spark and DuckDB."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_ANOVA_SQL)
+    on Spark and DuckDB.""",
+)
 
 # Shared spine for the pairwise-trend queries: daily revenue per month,
 # in exact integer cents, day index = days since 1970-01-01 (both engines).

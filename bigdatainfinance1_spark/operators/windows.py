@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 MICROS_7D = 7 * 86400 * 1_000_000
@@ -605,20 +605,17 @@ _OHLC_SQL = """
 """
 
 
-@query("q_ohlc_bars", oracle=_OHLC_SQL, tags=("window", "finance", "timeseries"))
-def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Finance: hourly OHLC bars (open/high/low/close + count + volume) over
+sql_query(
+    "q_ohlc_bars", _OHLC_SQL, tags=("window", "finance", "timeseries"),
+    doc="""Finance: hourly OHLC bars (open/high/low/close + count + volume) over
     the purchase-event stream — the canonical candlestick resample. One SQL
     text runs verbatim on Spark AND DuckDB: open/close are picked by
     row_number over a TOTAL order (ts, event_id tiebreak — SURVEY.md §5),
     never nondeterministic first()/last(). Scale shape: two window passes +
     one group-by, all hash-partitioned on the bar hour; per-bar state is
     bounded, bars parallelize. In production the partition key would be
-    (symbol, bar) — same plan, wider key."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_OHLC_SQL)
+    (symbol, bar) — same plan, wider key.""",
+)
 
 
 @query(

@@ -1,9 +1,10 @@
 """Query registry — the single source of truth for the driver contract.
 
 Every operator from SURVEY.md §2 registers here as a named query with an
-optional DuckDB oracle SQL. ``__spark_entry__.py`` exposes this registry to
-the driver verbatim; tests iterate it to hash-check Spark vs DuckDB locally
-before the driver does.
+optional DuckDB oracle SQL: ``@query`` for a Spark function, ``sql_query``
+for a query whose Spark side and oracle are one SQL text.
+``__spark_entry__.py`` exposes this registry to the driver verbatim; tests
+iterate it to hash-check Spark vs DuckDB locally before the driver does.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from bigdatainfinance1_spark.sources.catalog import register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -68,6 +71,22 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         return fn
 
     return deco
+
+
+def sql_query(name: str, text: str, *, tags: tuple[str, ...] = (), doc: str = "") -> None:
+    """Register a query whose Spark side and DuckDB oracle are one SQL text.
+
+    The query registers the table views and runs ``text`` through
+    ``spark.sql``; the oracle is the same ``text`` object, so "one SQL text
+    runs verbatim on both engines" holds by construction.
+    """
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        return spark.sql(text)
+
+    fn.__doc__ = doc
+    query(name, oracle=text, tags=tags)(fn)
 
 
 # The driver's per-round correctness run caps at the FIRST 50 entries of

@@ -16,6 +16,9 @@ against the fact tables never shuffle the big side.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -91,6 +94,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # arithmetic would round the microsecond off by one
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return df
+
+
+def source_key(sf_dir: str, name: str, tag: str = "") -> str:
+    """Stage key for a scratch copy derived from table ``name``: an md5 over
+    ``sf_dir``, ``tag`` and each source file's name, size and mtime. A table
+    rewritten at the same path gets a new key, so a stage built from the
+    old rows is never read again."""
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    parts = []
+    if os.path.isdir(src):  # spark-written table: a directory of part files
+        for root, _, files in os.walk(src):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+    else:
+        st = os.stat(src)
+        parts.append(f"{name}.parquet:{st.st_size}:{st.st_mtime_ns}")
+    fingerprint = "|".join([sf_dir, *([tag] if tag else []), *parts])
+    return hashlib.md5(fingerprint.encode()).hexdigest()[:12]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

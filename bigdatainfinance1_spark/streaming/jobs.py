@@ -23,47 +23,50 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table
+from bigdatainfinance1_spark.sources.catalog import load_table, source_key
+
+
+_STREAM_STAGE = "/tmp/bigdatainfinance1_stream_stage"
+
+
+def _stage_stream(spark: SparkSession, sf_dir: str, table: str, ordered: bool = False) -> DataFrame:
+    """readStream over a 4-file parquet stage of ``table``.
+
+    The file stream source needs a directory, and the raw events file
+    stores ts as TIMESTAMP(NANOS) — so a table is staged once per source
+    into a multi-file parquet directory (ts already truncated to
+    microseconds by the catalog, identical to DuckDB's read of the
+    original). The 4-file staging + maxFilesPerTrigger=2 gives a genuine
+    multi-micro-batch replay. The stage is keyed by ``catalog.source_key``,
+    so a regenerated table restages instead of silently reusing stale data.
+
+    ``ordered`` range-partitions by ts (see read_events_stream_ordered) and
+    sets strictly increasing mtimes in sorted-path order on every call
+    (idempotent; the key is the SOURCE's mtimes, so utime never restages).
+    """
+    import os
+
+    stage = os.path.join(_STREAM_STAGE, source_key(sf_dir, table, "ordered" if ordered else ""))
+    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+        df = load_table(spark, sf_dir, table)
+        df = df.repartitionByRange(4, "ts").sortWithinPartitions("ts") if ordered else df.repartition(4)
+        df.write.mode("overwrite").parquet(stage)
+    if ordered:
+        part_files = sorted(
+            os.path.join(stage, f)
+            for f in os.listdir(stage)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        base = 1_600_000_000  # fixed epoch: deterministic across calls/hosts
+        for i, p in enumerate(part_files):
+            os.utime(p, (base + i, base + i))
+    schema = spark.read.parquet(stage).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(stage)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events table.
-
-    The file stream source needs a directory, and the raw file stores ts as
-    TIMESTAMP(NANOS) — so events are staged once per sf_dir into a multi-file
-    parquet directory (ts already truncated to microseconds by the catalog,
-    identical to DuckDB's read of the original). The 4-file staging +
-    maxFilesPerTrigger=2 gives a genuine multi-micro-batch replay.
-
-    The stage key fingerprints the SOURCE (path + per-file size/mtime), so a
-    regenerated events table restages instead of silently reusing stale data.
-    """
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = []
-    if os.path.isdir(src):  # spark-written table: a directory of part files
-        for root, _, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"events.parquet:{st.st_size}:{st.st_mtime_ns}")
-    fingerprint = sf_dir + "|" + "|".join(parts)
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(stage).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
-    )
+    """readStream over the events table, staged by ``_stage_stream``."""
+    return _stage_stream(spark, sf_dir, "events")
 
 
 def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,50 +86,8 @@ def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is arbitrary, so path order alone does not guarantee replay
     order (round-2 ADVICE). After staging, every part file is os.utime'd
     with strictly increasing mtimes in sorted-path order, making mtime
-    order provably equal to ts-range order. The normalization runs on
-    every call (idempotent) so stage dirs written before this fix are
-    repaired too; the stage fingerprint keys on the SOURCE's mtimes, not
-    the stage's, so utime never triggers a restage."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"events.parquet:{st.st_size}:{st.st_mtime_ns}")
-    fingerprint = sf_dir + "|ordered|" + "|".join(parts)
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(4, "ts")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-    part_files = sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    base = 1_600_000_000  # fixed epoch: deterministic across calls/hosts
-    for i, p in enumerate(part_files):
-        os.utime(p, (base + i, base + i))
-    schema = spark.read.parquet(stage).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
-    )
+    order provably equal to ts-range order."""
+    return _stage_stream(spark, sf_dir, "events", ordered=True)
 
 
 STREAM_STATE_PARTITIONS = "8"
@@ -1134,27 +1095,11 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the documents table — the read_events_stream staging
-    recipe (4-file parquet stage keyed by a source fingerprint,
-    maxFilesPerTrigger=2 for a genuine multi-micro-batch replay), for the
-    document-pipeline streaming operators. No event-time ordering is needed:
-    the consumers are watermark-free (broadcast joins + complete-mode aggs)."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    fingerprint = f"{sf_dir}|documents.parquet:{st.st_size}:{st.st_mtime_ns}"
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/docs_"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").repartition(4).write.mode("overwrite").parquet(
-            stage
-        )
-    schema = spark.read.parquet(stage).schema
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(stage)
+    """readStream over the documents table, staged by ``_stage_stream``
+    for the document-pipeline streaming operators. No event-time ordering
+    is needed: the consumers are watermark-free (broadcast joins +
+    complete-mode aggs)."""
+    return _stage_stream(spark, sf_dir, "documents")
 
 
 def _rowwise_band_keys():

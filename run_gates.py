@@ -7,7 +7,7 @@ BASELINE.md's gate tables:
 
 1. full local suite at sf0.001   (python -m pytest tests/ -q)
 2. full oracle sweep at sf0.01   (SPARK_GRAFT_TEST_SF_DIR=... pytest tests/test_oracle.py -q)
-3. canonical bench at sf0.1      (python bench.py — median-of-3 headline)
+3. canonical bench at sf0.1      (python bench.py — median-of-5 headline)
 
 Exit code 0 iff every gate is green. Usage:
 

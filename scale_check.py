@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Scale-stress check: replicate the sf0.1 fact tables 10× (≈ sf1) into
-/tmp and re-run key queries, reporting the observed time-scaling factor per
+/tmp and re-run every registered query, reporting the observed time-scaling factor per
 query. This is the "would the plan survive a 10× scale-up?" experiment the
 100 TB posture demands — run it after operator changes to catch designs
 whose cost curve is worse than their semantics require.
@@ -12,7 +12,8 @@ operators (all-pairs similarity) are expected to scale ~100× in work —
 the report prints the factor so the reader sees which class each operator
 falls in; the scale PATH for those is the LSH variant, not the all-pairs.
 
-Usage: python scale_check.py [--rebuild]   (one JSON line per query)
+Usage: python scale_check.py [--rebuild] [q_name ...]   (one JSON line per
+query; no names: every query, in registry order)
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
+from bench import materialize, quiesce
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.session import get_spark
 from bigdatainfinance1_spark.sources.catalog import TABLES, load_table
@@ -46,488 +48,6 @@ SHIFTS = {
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
 }
-
-QUERIES = [
-    "q_pricing_summary",
-    "q_star_join",
-    "q_sessionization",
-    "q_exact_dedup",
-    "q_jaccard_neardup",
-    "q_minhash_lsh",
-    "q_simhash",
-    "q_tfidf_top",
-    "q_cosine_topk",
-    "q_embedding_neardup",
-    "q_stream_tumbling",
-    "q_stream_session_funnel",  # stateful applyInPandasWithState (r6 100x tier)
-    # round-2 late additions: the ops with nontrivial cost curves
-    "q_ohlc_multigrain",
-    "q_doc_chunking",
-    "q_triangle_count",
-    # round-5 audit additions: remaining pair/iterative graph shapes
-    "q_pagerank_copurchase",
-    "q_clustering_coefficient",
-    "q_lsh_recall_audit",
-    "q_concurrency_sweep",
-    # round-2 third wave: pair-emitting / explode-heavy newcomers
-    "q_interval_overlap_bucketed",
-    "q_ngram_novelty",
-    "q_char_entropy",
-    "q_global_shuffle",
-    "q_kaplan_meier",
-    # round-2 fourth wave: new nontrivial cost curves
-    "q_rolling_distinct_users",
-    "q_cdc_apply",
-    "q_negative_sampling",
-    "q_hll_distinct",
-    "q_fifo_allocation",
-    "q_user_cf_neighbors",
-    "q_duplicate_payments",
-    "q_abc_xyz",
-    "q_growth_accounting",
-    # round-3 wave: production MinHash path, straggler pair-joins, new text ops
-    "q_minhash_lsh_fast",
-    "q_fuzzy_match_names",
-    "q_theil_sen",
-    "q_kendall_tau",
-    "q_bm25_topk",
-    "q_bigram_lm_perplexity",
-    "q_quality_filter_sweep",
-    # round-3 second wave: paper-backed curation additions
-    "q_semdedup",
-    "q_substring_dup_spans",
-    "q_dsir_select",
-    "q_gopher_rules",
-    "q_unimax_mixture",
-    "q_softdedup_weights",
-    "q_ccnet_ppl_buckets",
-    "q_stream_minhash_dedup",
-    "q_sql_variables",
-    "q_length_bucket_padding",
-    "q_media_dedup",
-    "q_media_shard_manifest",
-    "q_source_overlap",
-    "q_not_in_nulls",
-    "q_srm_check",
-    "q_sprt_monitor",
-    "q_knn_label_eval",
-    "q_collation_group",
-    "q_dedup_funnel",
-    "q_group_by_all",
-    "q_xml_roundtrip",
-    "q_stream_last_per_key",
-    "q_rake_keywords",
-    "q_lsh_band_sweep",
-    "q_poisson_bootstrap",
-    "q_markov_absorption",
-    "q_holt_smoothing",
-    "q_stupid_backoff_score",
-    "q_countmin_sketch",
-    "q_quantile_treatment_effect",
-    "q_lorenz_curve",
-    "q_keyset_pagination",
-    "q_bounce_rate",
-    "q_new_vs_returning",
-    "q_tfidf_cosine_pairs",
-    # round-4 wave: task-6 stragglers + the queries whose scale posture
-    # changed this round (relative df cap, corpus-derived k, de-broadcast
-    # norm joins) — re-measure so BASELINE.md records the new curves
-    "q_croston_forecast",
-    "q_containment_neardup",
-    # round-4 new operators with nontrivial cost curves
-    "q_prefix_filter_join",
-    "q_ann_nprobe_sweep",
-    "q_kupiec_var_backtest",
-    "q_sharpe_by_nation",
-    "q_drawdown_duration",
-    "q_rolling_beta",
-    "q_pass_at_k",
-    "q_bradley_terry",
-    "q_amortization_schedule",
-    "q_term_burstiness",
-    "q_heaps_law",
-    "q_t_closeness",
-    "q_adamic_adar",
-    "q_shapley_attribution",
-    "q_removal_effect_attribution",
-    # round-4 quant-pricing wave
-    "q_black_scholes",
-    "q_bond_duration",
-    "q_irr_bisection",
-    "q_component_var",
-    # round-4 classical-ML wave
-    "q_roc_curve",
-    "q_cramers_v",
-    "q_decision_stump",
-    "q_js_divergence",
-    "q_naive_bayes_langid",
-    # round-4 fingerprint + SQL-surface wave
-    "q_winnowing_fingerprint",
-    "q_try_arithmetic",
-    "q_sql_scalar_udf",
-    # round-4 filter/frontier/BLEU wave
-    "q_kalman_level",
-    "q_efficient_frontier",
-    "q_bleu_pairs",
-    # round-4 governance/trend/ER wave
-    "q_dp_histogram",
-    "q_mann_kendall",
-    "q_entity_resolution",
-    # round-4 boosting/ridge wave
-    "q_adaboost_round",
-    "q_ridge_path",
-    # round-4 inference wave
-    "q_nelson_aalen",
-    "q_benjamini_hochberg",
-    # round-4 multimodal audio wave
-    "q_audio_vad_windows",
-    "q_lift_gains",
-    "q_holt_winters",
-    "q_kneser_ney_perplexity",
-    "q_page_hinkley",
-    "q_ipw_ate",
-    "q_aipw_ate",
-    "q_dkw_band",
-    "q_mmr_rerank",
-    "q_stream_ohlc",
-    "q_wilson_interval",
-    "q_capture_recapture",
-    "q_weighted_reservoir_es",
-    # round-4 time-series mining wave
-    "q_matrix_profile",
-    "q_periodogram",
-    "q_sax_motifs",
-    "q_kcore",
-    "q_modularity_brands",
-    "q_degree_assortativity",
-    "q_wasserstein_drift",
-    "q_logrank_test",
-    "q_deflated_sharpe",
-    "q_span_corruption",
-    "q_triplet_mining",
-    "q_kendalls_w",
-    "q_theil_decomposition",
-    "q_nb_overdispersion",
-    "q_cohens_kappa",
-    "q_linear_shap",
-    "q_mcnemar_test",
-    "q_evt_block_maxima",
-    "q_forecast_combination",
-    "q_price_elasticity",
-    "q_tail_dependence",
-    "q_stream_vwap",
-    "q_iv_regression",
-    "q_regression_discontinuity",
-    "q_survival_rmst",
-    "q_brier_decomposition",
-    "q_conformal_interval",
-    "q_chao1_vocabulary",
-    "q_pacf",
-    # round-4 econometric-diagnostics wave (all calendar-bounded)
-    "q_jarque_bera",
-    "q_durbin_watson",
-    "q_breusch_pagan",
-    "q_ljung_box",
-    "q_adf_test",
-    "q_variance_ratio",
-    "q_newey_west",
-    "q_runs_test",
-    "q_granger_causality",
-    "q_engle_granger",
-    # round-4 portfolio-metrics wave (panel-bounded)
-    "q_jensen_alpha",
-    "q_sortino_ratio",
-    "q_calmar_ulcer",
-    "q_omega_ratio",
-    "q_information_ratio",
-    "q_amihud_illiquidity",
-    # round-4 agreement/shape wave
-    "q_fleiss_kappa",
-    "q_cochran_q",
-    "q_grubbs_test",
-    "q_anderson_darling",
-    # round-4 text-metrics + curve-integral wave
-    "q_rouge_n",
-    "q_textrank",
-    "q_pr_auc",
-    # round-4 inventory/growth wave
-    "q_newsvendor",
-    "q_bass_diffusion",
-    # round-4 portfolio-construction wave
-    "q_cov_shrinkage",
-    "q_risk_parity",
-    "q_brinson_attribution",
-    # round-4 break/volatility diagnostics
-    "q_chow_test",
-    "q_arch_lm",
-    # round-4 event/anomaly/reconciliation wave
-    "q_seasonal_esd",
-    "q_event_study",
-    "q_forecast_reconciliation",
-    "q_hits_authority",
-    "q_stream_zscore_alerts",
-    "q_boilerplate_prefixes",
-    "q_line_dedup",
-    "q_jackknife_ratio",
-    "q_median_polish",
-    "q_kruskal_wallis",
-    "q_gpd_pot",
-    "q_ts_feature_vector",
-    "q_implied_vol",
-    "q_almgren_chriss",
-    "q_lateral_column_alias",
-    "q_parameterized_sql",
-    "q_ou_halflife",
-    "q_gaussian_copula",
-    "q_l28_engagement",
-    "q_udf_arrow_optimized",
-    "q_systematic_sample",
-    "q_neyman_allocation",
-    "q_qini_curve",
-    "q_pinball_loss",
-    "q_tukey_hsd",
-    "q_meta_analysis",
-    "q_process_capability",
-    "q_fd_discovery",
-    "q_inclusion_dependencies",
-    "q_tost_equivalence",
-    "q_beta_binomial_ab",
-    "q_seasonal_mann_kendall",
-    "q_binary_segmentation",
-    "q_atkinson_index",
-    "q_partial_correlation",
-    "q_mincer_zarnowitz",
-    "q_gibrat_law",
-    "q_taylor_power_law",
-    "q_weibull_fit",
-    "q_cross_price_elasticity",
-    "q_cross_correlation",
-    "q_fama_macbeth",
-    "q_momentum_spread",
-    "q_roll_measure",
-    "q_garman_klass",
-    "q_information_coefficient",
-    "q_panel_within_estimator",
-    "q_price_dispersion",
-    "q_wilcoxon_signed_rank",
-    "q_cronbach_alpha",
-    "q_distance_correlation",
-    "q_indirect_standardization",
-    "q_oaxaca_kitagawa",
-    "q_vif",
-    "q_influence_diagnostics",
-    "q_forecast_skill_dm",
-    "q_christoffersen_test",
-    "q_pairs_trading",
-    "q_pca_2d",
-    "q_mahalanobis_outliers",
-    "q_hotelling_t2",
-    "q_fisher_lda",
-    "q_logistic_irls",
-    "q_friedman_test",
-    "q_bartlett_test",
-    "q_cochran_armitage",
-    "q_cvm_test",
-    "q_effect_sizes",
-    "q_good_turing",
-    "q_oov_rate",
-    "q_err_ranking",
-    "q_eoq_policy",
-    "q_erlang_c",
-    "q_scd2_pit_join",
-    "q_label_propagation",
-    "q_random_projection",
-    "q_embedding_pq",
-    "q_binomial_option",
-    "q_riskmetrics_vol",
-    "q_rebalance_drift",
-    "q_lsa_power_iteration",
-    "q_synthetic_control",
-    "q_ucb_replay",
-    "q_isotonic_calibration",
-    "q_silhouette",
-    "q_davies_bouldin",
-    "q_als_factorization",
-    "q_rocchio_expansion",
-    "q_theta_method",
-    "q_lof_outliers",
-    "q_fellegi_sunter",
-    "q_team_draft_interleave",
-    "q_levene_test",
-    "q_iv_wald_2sls",
-    "q_cr4_concentration",
-    "q_doremi_weights",
-    "q_sequential_patterns",
-    "q_simpsons_paradox",
-    "q_ndr_grr",
-    "q_western_electric",
-    "q_blocking_quality",
-    "q_consistent_hash_rebalance",
-    "q_recsys_list_metrics",
-    "q_readability",
-    "q_burrows_delta",
-    "q_frequent_itemsets",
-    "q_huber_mean",
-    "q_boxcox_lambda",
-    "q_cdc_chunking",
-    "q_dtw_distance",
-    "q_grid_dbscan",
-    "q_haar_wavelet",
-    "q_bitmap_index_and",
-    "q_rle_audit",
-    "q_zone_map_prune",
-    "q_umass_coherence",
-    "q_mutual_information",
-    "q_bland_altman",
-    "q_threshold_metrics",
-    "q_icc",
-    "q_python_datasink",
-    "q_stream_python_sink",
-    "q_stream_python_source",
-    "q_key_skew_audit",
-    "q_best_snippet",
-    "q_fairness_metrics",
-    "q_kcenter_coreset",
-    "q_uncertainty_sampling",
-    "q_optimal_assignment",
-    "q_stable_matching",
-    "q_knapsack",
-    "q_permutation_test",
-    "q_garch_grid",
-    "q_interarrival_burstiness",
-    "q_competing_risks",
-    "q_bs_greeks",
-    "q_kyle_lambda",
-    "q_fulfillment_aging",
-    "q_learning_curve",
-    "q_placebo_did",
-    "q_profit_curve",
-    "q_cogroup_gap_stats",
-    "q_chain_ladder",
-    "q_watermark_design",
-    "q_bornhuetter_ferguson",
-    "q_word_subsampling",
-    "q_rmst",
-    # round-7 wave: driver-window newcomers with unmeasured cost curves
-    "q_rolling_corr",
-    "q_assoc_rules",
-    "q_skyline_parts",
-    "q_geo_grid_knn",
-    "q_l_diversity",
-    "q_structuring_screen",
-    "q_variant_props",
-    "q_bpe_encode",
-    "q_langid_profile",
-    "q_text_quality",
-    "q_embedding_dispersion",
-    # round-8 wave: full-surface closure — every registered query now
-    # carries a measured 10x record (batches 1-3, BASELINE.md round 8)
-    "q_ratio_delta_method",
-    "q_copurchase_pairs",
-    "q_rfm_migration",
-    "q_ltv_tenure",
-    "q_stream_foreach_upsert",
-    "q_stream_slo_burn",
-    "q_stream_hll_users",
-    "q_udf_iter_series",
-    "q_frame_sample",
-    "q_incremental_mv",
-    "q_compact_small_files",
-    "q_asof_tolerance",
-    "q_null_safe_join",
-    "q_dedup_keep_first",
-    "q_gapfill_ffill",
-    "q_bollinger_bands",
-    "q_equidepth_histogram",
-    "q_moments_skew_kurt",
-    "q_pmi_bigrams",
-    "q_doc_repetition",
-    "q_tokenizer_fertility",
-    "q_mixture_rebalance",
-    "q_dataset_card",
-    "q_join_cardinality_estimate",
-    "q_data_skew_report",
-    "q_zorder_layout",
-    "q_hurst_exponent",
-    "q_bucketed_join",
-    "q_salted_join",
-    "q_full_outer_join",
-    "q_cross_join",
-    "q_pca_power_iteration",
-    "q_recursive_reachability",
-    "q_multimodal_join",
-    "q_binary_media_meta",
-    "q_media_features",
-    "q_train_val_split",
-    "q_sequence_packing",
-    "q_csv_roundtrip",
-    "q_json_roundtrip",
-    "q_orc_roundtrip",
-    "q_python_datasource",
-    "q_compression_codecs",
-    "q_fixed_width_ingest",
-    "q_rollup_revenue",
-    "q_cube_orders",
-    "q_pivot_status",
-    "q_grouping_sets",
-    "q_collect_set_events",
-    "q_gdpr_erasure",
-    "q_order_reconciliation",
-    "q_pipe_syntax",
-    "q_lateral_topn",
-    "q_unpivot_metrics",
-    "q_target_encoding",
-    "q_feature_hashing",
-    "q_kfold_ols",
-    "q_global_agg",
-    "q_distinct_agg_monthly",
-    "q_percentiles",
-    "q_stats_volatility",
-    "q_conditional_agg",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_cum_return",
-    "q_twap",
-    "q_ewma_orders",
-    "q_dow_seasonality",
-    "q_business_day_lag",
-    "q_rsi_daily",
-    "q_yoy_growth",
-    "q_pattern_vshape",
-    "q_forecast_backtest",
-    "q_masked_view",
-    "q_bfs_hops",
-    "q_sql_shared_text",
-    "q_csv_malformed",
-    "q_kmeans_embeddings",
-    "q_confusion_matrix",
-    "q_ols_two_factor",
-    "q_shipping_priority",
-    "q_projection_compute",
-    "q_filter_predicates",
-    "q_case_when_tiers",
-    "q_distinct",
-    "q_null_handling",
-    "q_sample_profile",
-    "q_top_revenue_orders",
-    "q_union_all",
-    "q_union_distinct",
-    "q_intersect_custs",
-    "q_except_custs",
-    "q_set_ops_all",
-    "q_supplier_scorecard",
-    "q_string_funcs",
-    "q_date_funcs",
-    "q_math_funcs",
-    "q_array_funcs",
-    "q_json_funcs",
-    "q_hash_funcs",
-    "q_winsorized_mean",
-    "q_sql_registered_udf",
-    "q_session_window",
-    "q_stream_watermarked",
-    "q_stream_file_sink",
-]
 
 # Tables sharing a key domain must shift by ONE stride or FK joins silently
 # break after replication (e.g. a trailing order with no lineitems would give
@@ -565,47 +85,31 @@ def build_stage(spark) -> None:
 
 
 def main() -> None:
+    specs = load_all_queries()
+    # optional positional args: run only the named queries, in the given
+    # order — keeps incremental re-measurement cheap; a typo'd name errors
+    # before the stage is built instead of silently shrinking the run
+    picked = [a for a in sys.argv[1:] if not a.startswith("--")]
+    unknown = [a for a in picked if a not in specs]
+    if unknown:
+        sys.exit(f"scale_check: unknown query name(s): {', '.join(unknown)}")
     spark = get_spark(app_name="bigdatainfinance1_spark-scale-check")
     if "--rebuild" in sys.argv:
         import shutil
 
         shutil.rmtree(STAGE, ignore_errors=True)
     build_stage(spark)
-    specs = load_all_queries()
     specs["q_pricing_summary"].fn(spark, BASE_SF).limit(1).collect()  # warmup
 
-    # optional positional args: run only the named queries (still from the
-    # curated QUERIES list order) — keeps incremental re-measurement cheap
-    picked = [a for a in sys.argv[1:] if not a.startswith("--")]
-    unknown = [a for a in picked if a not in specs]
-    if unknown:
-        sys.exit(f"scale_check: unknown query name(s): {', '.join(unknown)}")
-    # Names registered but not in the curated QUERIES list run too (appended
-    # in given order) — a typo'd or missing name errors instead of silently
-    # shrinking the run (round-2 ADVICE).
-    to_run = ([n for n in QUERIES if n in picked] + [n for n in picked if n not in QUERIES]) if picked else QUERIES
-    import gc
-
-    def _quiesce() -> None:
-        # Same inter-query hygiene as bench.py: drop Python refs so the
-        # ContextCleaner reclaims localCheckpoint blocks and shuffle files
-        # the previous query left behind, and nudge the JVM to actually run
-        # the cleanup. Reclamation is ASYNC — without this, a 100x query
-        # following a checkpoint-heavy one can fail its broadcast build on
-        # storage that is about to be freed (observed: q_minhash_lsh_fast
-        # "Not enough memory to build and broadcast" in-batch, green alone).
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
-    for name in to_run:
+    for name in picked or specs:
         t0 = time.perf_counter()
-        specs[name].fn(spark, BASE_SF).write.format("noop").mode("overwrite").save()
+        materialize(specs[name].fn(spark, BASE_SF))
         t_base = time.perf_counter() - t0
-        _quiesce()
+        quiesce(spark)
         t0 = time.perf_counter()
-        specs[name].fn(spark, STAGE).write.format("noop").mode("overwrite").save()
+        materialize(specs[name].fn(spark, STAGE))
         t_10x = time.perf_counter() - t0
-        _quiesce()
+        quiesce(spark)
         print(
             json.dumps(
                 {

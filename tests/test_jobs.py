@@ -1,5 +1,5 @@
-"""Spark job-count budgets, the fixed-point helper and the catalog's
-schema memo.
+"""Spark job-count budgets, the fixed-point helper, the catalog's schema
+memo and its source-keyed scratch stages.
 
 Scheduler overhead is paid per job, so a query that creeps from 3 jobs back
 to a hundred is a regression even when its results stay right. Jobs are
@@ -72,6 +72,21 @@ def test_schema_memo_follows_a_rewritten_file(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "t")
     assert df.columns == ["a", "c"]
     assert sorted(r.c for r in df.collect()) == [0.5, 1.5, 2.5]
+
+
+def test_reused_stage_follows_a_rewritten_source(spark, tmp_path):
+    """q_compact_small_files reuses its fragmented and compacted stages once
+    written; they are keyed on the source's fingerprint, so a table
+    rewritten at the same path is staged again, never read stale."""
+    path = tmp_path / "orders.parquet"
+    spec = SPECS["q_compact_small_files"]
+    for prices in ([1.25, 2.5, 3.0], [10.0, 20.01, 30.02, 40.03, 50.04]):
+        pq.write_table(
+            pa.table({"o_orderkey": pa.array(range(len(prices)), pa.int64()), "o_totalprice": prices}),
+            path,
+        )
+        row = spec.fn(spark, str(tmp_path)).collect()[0]
+        assert (row.n_rows, row.revenue) == (len(prices), round(sum(prices), 2))
 
 
 def test_amortization_closed_form_edges_match_recursive_oracle(spark, tmp_path):

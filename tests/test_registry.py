@@ -7,6 +7,7 @@ over the union of past CORRECTNESS rounds plus the current window."""
 
 from __future__ import annotations
 
+import ast
 import json
 from pathlib import Path
 
@@ -15,6 +16,7 @@ from bigdatainfinance1_spark.registry import (
     ROWS_ONLY_BY_DESIGN,
     load_all_queries,
 )
+from tests.conftest import SF_DIR
 
 DRIVER_CAP = 50
 REPO = Path(__file__).resolve().parent.parent
@@ -129,3 +131,71 @@ def test_rows_only_set_is_exactly_the_declared_four():
 def test_registry_still_contains_everything():
     # Reordering must not drop registrations: full surface stays >= 109.
     assert len(load_all_queries()) >= 109
+
+
+def _is_call(node: ast.AST, name: str) -> bool:
+    func = node.func if isinstance(node, ast.Call) else None
+    return (isinstance(func, ast.Name) and func.id == name) or (
+        isinstance(func, ast.Attribute) and func.attr == name
+    )
+
+
+def _one_text_query_functions() -> list[str]:
+    """Names of ``@query`` functions that only register the views and
+    return ``spark.sql(X)`` where X is the decorator's own oracle
+    expression (imports and the docstring aside)."""
+    found = []
+    for pkg in ("operators", "streaming"):
+        for path in sorted((REPO / "bigdatainfinance1_spark" / pkg).glob("*.py")):
+            for fn in ast.parse(path.read_text()).body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                for deco in fn.decorator_list:
+                    if not _is_call(deco, "query"):
+                        continue
+                    kw = {k.arg: k.value for k in deco.keywords}
+                    oracle = kw.get("oracle", deco.args[1] if len(deco.args) > 1 else None)
+                    body = [
+                        s
+                        for s in fn.body
+                        if not isinstance(s, (ast.Import, ast.ImportFrom))
+                        and not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant))
+                    ]
+                    if (
+                        oracle is not None
+                        and len(body) == 2
+                        and isinstance(body[0], ast.Expr)
+                        and _is_call(body[0].value, "register_views")
+                        and isinstance(body[1], ast.Return)
+                        and _is_call(body[1].value, "sql")
+                        and len(body[1].value.args) == 1
+                        and not body[1].value.keywords
+                        and ast.dump(body[1].value.args[0]) == ast.dump(oracle)
+                    ):
+                        found.append(ast.literal_eval(deco.args[0]))
+    return found
+
+
+def test_one_text_queries_are_sql_query_declarations():
+    """A query whose Spark side is ``spark.sql`` over its own oracle text is
+    declared with ``registry.sql_query``, which shares the text by
+    construction; a hand-written function of that form must not grow back."""
+    found = _one_text_query_functions()
+    assert not found, f"declare these with sql_query(name, text, ...): {found}"
+
+
+def test_sql_query_oracle_is_the_spark_text(spark):
+    """``sql_query`` registers the views and runs its text; the oracle is
+    that same text object."""
+    from bigdatainfinance1_spark.registry import QUERIES, sql_query
+
+    text = "SELECT CAST(count(*) AS BIGINT) AS n FROM region"
+    name = "q_test_sql_query_declaration"
+    sql_query(name, text, tags=("test",), doc="one row: the region count")
+    try:
+        spec = QUERIES[name]
+        assert spec.oracle is text
+        assert (spec.doc, spec.tags) == ("one row: the region count", ("test",))
+        assert spec.fn(spark, SF_DIR).collect()[0]["n"] == 5
+    finally:
+        del QUERIES[name]
