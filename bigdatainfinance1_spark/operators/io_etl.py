@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import (
@@ -139,7 +140,11 @@ def partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_parquet(
         orders.withColumn("o_year", F.year("o_orderdate")), path, partition_by=("o_year",)
     )
-    back = spark.read.parquet(path)
+    # read back with the schema written (the partition column comes last),
+    # so no job re-infers it from the footers
+    back = spark.read.schema(
+        StructType(orders.schema.fields + [StructField("o_year", IntegerType())])
+    ).parquet(path)
     return (
         back.filter(F.col("o_year") == 1996)
         .groupBy(F.month("o_orderdate").cast("long").alias("o_month"))
@@ -416,8 +421,8 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_compact_small_files",
     oracle="""
     SELECT
-      CAST(64 AS BIGINT)                                   AS n_files_before,
-      CAST(4 AS BIGINT)                                    AS n_files_after,
+      CAST(count(DISTINCT ((o_orderkey % 64) + 64) % 64) AS BIGINT) AS n_files_before,
+      CAST(count(DISTINCT ((o_orderkey % 4) + 4) % 4) AS BIGINT)    AS n_files_after,
       CAST(count(*) AS BIGINT)                             AS n_rows,
       round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100e0, 2) AS revenue
     FROM orders
@@ -430,23 +435,29 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     small-file problem: per-file open/footer costs dominate scans and
     overwhelm the driver's split planning at 100 TB) is rewritten into 4
     right-sized files. The query reports the ACTUAL file counts observed
-    on disk before/after (asserted against the pinned 64/4 layout — an
-    unexpected count fails the oracle) and proves losslessness with exact
-    row and integer-cents revenue checksums over the compacted copy. On a
-    cluster the same job targets ~shuffle-partition-sized outputs
-    (maxRecordsPerFile / AQE coalesce); repartition(4) is the local-mode
-    stand-in."""
+    on disk before/after and proves losslessness with exact row and
+    integer-cents revenue checksums over the compacted copy. Rows are
+    placed by ``o_orderkey`` mod 64 (then mod 4), and Spark writes no file
+    for an empty partition, so the file counts are the numbers of distinct
+    residues the oracle computes: 64 and 4 on the dense TPC-H keys, fewer
+    on a table with fewer keys. On a cluster the same job targets
+    ~shuffle-partition-sized outputs (maxRecordsPerFile / AQE coalesce);
+    4 files is the local-mode stand-in."""
     orders = load_table(spark, sf_dir, "orders")
     frag = _stage_dir("frag_orders", sf_dir, "orders")
     compact = _stage_dir("compact_orders", sf_dir, "orders")
+
+    def by_key(df: DataFrame, n: int) -> DataFrame:
+        return df.repartitionById(n, F.pmod("o_orderkey", F.lit(n)).cast("int"))
+
     if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        orders.repartition(64).write.mode("overwrite").parquet(frag)
+        by_key(orders, 64).write.mode("overwrite").parquet(frag)
     if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-        spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compact)
+        by_key(spark.read.schema(orders.schema).parquet(frag), 4).write.mode("overwrite").parquet(compact)
     n_before = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
     n_after = len([f for f in os.listdir(compact) if f.endswith(".parquet")])
     return (
-        spark.read.parquet(compact)
+        spark.read.schema(orders.schema).parquet(compact)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.round(

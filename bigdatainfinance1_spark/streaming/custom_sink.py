@@ -21,7 +21,7 @@ from pyspark.sql.datasource import (
 )
 
 from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.streaming.jobs import read_events_stream
+from bigdatainfinance1_spark.streaming.jobs import read_events_stream, run_to_table
 
 
 class StreamSinkCommit(WriterCommitMessage):
@@ -214,8 +214,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition task; the aggregate is map-side combinable — a real feed
     adapter (exchange multicast, vendor websocket) keeps exactly this
     shape with offsets per upstream shard."""
-    import uuid
-
     from bigdatainfinance1_spark.sources import ticks as ticks_src
 
     ticks_src.register(spark)
@@ -225,16 +223,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("qty").cast("long").alias("total_qty"),
         F.round(F.sum(F.col("price") * F.col("qty")), 2).alias("notional"),
     )
-    sink = f"tick_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return run_to_table(agg, "complete").select(
         F.col("part_id").cast("long").alias("part_id"),
         F.col("n_ticks").cast("long").alias("n_ticks"),
         "total_qty",

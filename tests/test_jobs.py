@@ -1,5 +1,6 @@
 """Spark job-count budgets, the fixed-point helper, the catalog's schema
-memo and its source-keyed scratch stages.
+memo and its source-keyed scratch stages, and the streaming runner's
+state-partition sizing, memory-sink views and known schemas.
 
 Scheduler overhead is paid per job, so a query that creeps from 3 jobs back
 to a hundred is a regression even when its results stay right. Jobs are
@@ -9,6 +10,8 @@ group (the same count the benchmark reports).
 
 from __future__ import annotations
 
+import inspect
+import json
 import os
 
 import duckdb
@@ -16,12 +19,21 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bigdatainfinance1_spark.functions import iterate
 from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.operators import graph
 from bigdatainfinance1_spark.registry import load_all_queries
+from bigdatainfinance1_spark.sources import ticks as ticks_src
 from bigdatainfinance1_spark.sources.catalog import TABLES, load_table, register_views
+from bigdatainfinance1_spark.streaming.jobs import (
+    read_documents_stream,
+    read_events_stream,
+    read_events_stream_ordered,
+    state_partitions,
+    stream_file_paths,
+)
 from tests.conftest import SF_DIR, assert_frames_match
 
 SPECS = load_all_queries()
@@ -35,6 +47,23 @@ LOOP_JOB_BUDGETS = {
     "q_entity_resolution": 17,
     "q_bfs_hops": 17,
 }
+
+# Warm jobs per query at sf0.001 for the streams and sinks of the udf_stream
+# benchmark. They took 5, 6 and 5 while the stream stage's schema, the sink
+# read-backs' schemas and the memory-sink copy each cost a job.
+STREAM_JOB_BUDGETS = {
+    "q_stream_tumbling": 3,
+    "q_stream_file_sink": 4,
+    "q_partitioned_sink": 4,
+}
+
+# Streaming queries that write a memory sink, through run_to_table or not.
+MEMORY_SINK_QUERIES = sorted(
+    name
+    for name, spec in SPECS.items()
+    if "streaming" in spec.tags
+    and any(s in inspect.getsource(spec.fn) for s in ("run_to_table(", '.format("memory")'))
+)
 
 
 def next_job_id(spark) -> int:
@@ -77,7 +106,8 @@ def test_schema_memo_follows_a_rewritten_file(spark, tmp_path):
 def test_reused_stage_follows_a_rewritten_source(spark, tmp_path):
     """q_compact_small_files reuses its fragmented and compacted stages once
     written; they are keyed on the source's fingerprint, so a table
-    rewritten at the same path is staged again, never read stale."""
+    rewritten at the same path is staged again, never read stale. On these
+    3- and 5-row tables its file counts (3/3, then 5/4) match the oracle."""
     path = tmp_path / "orders.parquet"
     spec = SPECS["q_compact_small_files"]
     for prices in ([1.25, 2.5, 3.0], [10.0, 20.01, 30.02, 40.03, 50.04]):
@@ -85,8 +115,15 @@ def test_reused_stage_follows_a_rewritten_source(spark, tmp_path):
             pa.table({"o_orderkey": pa.array(range(len(prices)), pa.int64()), "o_totalprice": prices}),
             path,
         )
-        row = spec.fn(spark, str(tmp_path)).collect()[0]
-        assert (row.n_rows, row.revenue) == (len(prices), round(sum(prices), 2))
+        got = spec.fn(spark, str(tmp_path)).toPandas()
+        assert (got.n_rows[0], got.revenue[0]) == (len(prices), round(sum(prices), 2))
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{path}')")
+            want = con.execute(spec.oracle).df()
+        finally:
+            con.close()
+        assert_frames_match(got, want, spec.name)
 
 
 def test_amortization_closed_form_edges_match_recursive_oracle(spark, tmp_path):
@@ -219,3 +256,79 @@ def test_kcore_multi_round_peel_matches_oracle(spark, tmp_path, monkeypatch):
     assert len(rounds) == 3
     assert sorted(want["part_id"]) == [1, 2, 3]
     assert_frames_match(got, want, spec.name)
+
+
+@pytest.mark.parametrize("name", sorted(STREAM_JOB_BUDGETS))
+def test_stream_and_sink_job_budget(spark, name):
+    """Warm, a stream reads its stage with the schema it was staged with,
+    the sinks are read back with the schema written, and the memory sink's
+    rows are returned without a copy: none of these starts a job."""
+    fn = SPECS[name].fn
+    fn(spark, SF_DIR).collect()
+    first = next_job_id(spark)
+    fn(spark, SF_DIR).collect()
+    if os.path.basename(SF_DIR) == "sf0.001":  # the tier the budgets were measured on
+        assert next_job_id(spark) - first <= STREAM_JOB_BUDGETS[name]
+
+
+def temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize("name", MEMORY_SINK_QUERIES)
+def test_memory_sink_query_leaves_no_temp_view(spark, name):
+    """The memory sink's view is dropped once its rows are taken, so
+    repeated calls pin nothing for the session's lifetime."""
+    before = temp_views(spark)
+    for _ in range(2):
+        SPECS[name].fn(spark, SF_DIR)
+    assert temp_views(spark) == before
+
+
+def test_state_partitions_follow_the_input_size(spark):
+    """One state partition per advisory partition size of the stream's
+    files, clamped to [1, defaultParallelism]; a source with no files
+    keeps the session's shuffle-partition count."""
+    events = read_events_stream(spark, SF_DIR)
+    if os.path.basename(SF_DIR) == "sf0.001":
+        assert state_partitions(events) == 1
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        assert state_partitions(events) == spark.sparkContext.defaultParallelism
+    finally:
+        spark.conf.set(key, prev)
+
+    ticks_src.register(spark)
+    ticks = spark.readStream.format("synthetic_ticks").load()
+    assert stream_file_paths(ticks) == []
+    assert state_partitions(ticks) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+@pytest.mark.parametrize(
+    "reader", [read_events_stream, read_events_stream_ordered, read_documents_stream]
+)
+def test_stream_stage_schema_is_the_written_schema(spark, reader):
+    stream = reader(spark, SF_DIR)
+    (stage,) = stream_file_paths(stream)
+    assert stream.schema == spark.read.parquet(stage).schema
+
+
+def file_scans(df):
+    """(root path, read schema) of each parquet relation ``df`` reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    scans = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            root = leaf.relation().location().rootPaths().apply(0).toString()
+            scans.append((root, StructType.fromJson(json.loads(leaf.schema().json()))))
+    return scans
+
+
+@pytest.mark.parametrize("name", ["q_stream_file_sink", "q_partitioned_sink"])
+def test_sink_read_back_schema_is_the_inferred_schema(spark, name):
+    (scan,) = file_scans(SPECS[name].fn(spark, SF_DIR))
+    root, schema = scan
+    assert schema == spark.read.parquet(root).schema
