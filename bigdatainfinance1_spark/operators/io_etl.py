@@ -13,8 +13,8 @@ production (inference is a full extra pass); the parquet sink partitions by
 a low-cardinality derived column (order year) which is what enables static
 and dynamic partition pruning on re-read — the re-read query below filters
 on the partition column, and tests/test_plans.py asserts the pruned scan.
-Scratch staging lives under /tmp keyed by the source table's fingerprint
-(catalog.source_key, shared with the streaming source staging).
+Scratch paths come from catalog.scratch_dir, keyed by the source table's
+fingerprint; a stage reused once written goes through catalog.staged.
 """
 
 from __future__ import annotations
@@ -30,18 +30,10 @@ from bigdatainfinance1_spark.sources.catalog import (
     load_table,
     read_csv,
     read_json,
-    source_key,
+    scratch_dir,
+    staged,
     write_parquet,
 )
-
-_SCRATCH = "/tmp/bigdatainfinance1_etl_scratch"
-
-
-def _stage_dir(kind: str, sf_dir: str, table: str) -> str:
-    """Scratch dir for ``kind``, keyed on the fingerprint of its source
-    ``table``: a stage reused once written is rebuilt when the table is
-    rewritten at the same path."""
-    return os.path.join(_SCRATCH, kind + "_" + source_key(sf_dir, table))
 
 
 @query(
@@ -64,7 +56,7 @@ def csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Key/count aggregates are textually lossless, so the result
     must equal querying the parquet directly — which is the oracle."""
     nation = load_table(spark, sf_dir, "nation")
-    path = _stage_dir("csv_nation", sf_dir, "nation")
+    path = scratch_dir("csv_nation", sf_dir, "nation")
     nation.write.mode("overwrite").option("header", "true").csv(path)
     back = read_csv(spark, path, inferSchema="false")
     # header=true preserves names; re-apply dtypes from the parquet schema
@@ -104,7 +96,7 @@ def json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = _stage_dir("json_orders", sf_dir, "orders")
+    path = scratch_dir("json_orders", sf_dir, "orders")
     orders.write.mode("overwrite").json(path)
     back = read_json(spark, path, schema=orders.schema)
     return back.groupBy("o_orderstatus").agg(
@@ -136,7 +128,7 @@ def partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     that keeps a 100 TB date-partitioned table queryable); verified in
     tests/test_plans.py via the plan's PartitionFilters."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("orders_by_year", sf_dir, "orders")
+    path = scratch_dir("orders_by_year", sf_dir, "orders")
     write_parquet(
         orders.withColumn("o_year", F.year("o_orderdate")), path, partition_by=("o_year",)
     )
@@ -302,7 +294,7 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate"
     )
-    path = _stage_dir("orc_orders", sf_dir, "orders")
+    path = scratch_dir("orc_orders", sf_dir, "orders")
     orders.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("o_orderpriority").agg(
@@ -387,17 +379,18 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-only operation — data pages are untouched, so the read cost is
     identical to a homogeneous directory."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("schema_evo", sf_dir, "orders")
-    if not os.path.exists(os.path.join(path, "_STAGED")):
+
+    def write(path: str) -> None:
         v1 = orders.filter(F.year("o_orderdate") < 1998).select("o_orderkey", "o_totalprice")
         v2 = orders.filter(F.year("o_orderdate") >= 1998).select(
             "o_orderkey",
             "o_totalprice",
             F.substring("o_orderpriority", 1, 1).cast("int").alias("o_priority_rank"),
         )
-        v1.write.mode("overwrite").parquet(os.path.join(path, "batch=v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(path, "batch=v2"))
-        open(os.path.join(path, "_STAGED"), "w").close()
+        v1.write.parquet(os.path.join(path, "batch=v1"))
+        v2.write.parquet(os.path.join(path, "batch=v2"))
+
+    path = staged("schema_evo", sf_dir, "orders", write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(path, "batch=v1"), os.path.join(path, "batch=v2")
     )
@@ -444,16 +437,17 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~shuffle-partition-sized outputs (maxRecordsPerFile / AQE coalesce);
     4 files is the local-mode stand-in."""
     orders = load_table(spark, sf_dir, "orders")
-    frag = _stage_dir("frag_orders", sf_dir, "orders")
-    compact = _stage_dir("compact_orders", sf_dir, "orders")
 
     def by_key(df: DataFrame, n: int) -> DataFrame:
         return df.repartitionById(n, F.pmod("o_orderkey", F.lit(n)).cast("int"))
 
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        by_key(orders, 64).write.mode("overwrite").parquet(frag)
-    if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-        by_key(spark.read.schema(orders.schema).parquet(frag), 4).write.mode("overwrite").parquet(compact)
+    frag = staged("frag_orders", sf_dir, "orders", by_key(orders, 64).write.parquet)
+    compact = staged(
+        "compact_orders",
+        sf_dir,
+        "orders",
+        lambda p: by_key(spark.read.schema(orders.schema).parquet(frag), 4).write.parquet(p),
+    )
     n_before = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
     n_after = len([f for f in os.listdir(compact) if f.endswith(".parquet")])
     return (
@@ -500,10 +494,9 @@ def csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import csv as _csv
 
     nation = load_table(spark, sf_dir, "nation")
-    path = _stage_dir("csv_malformed", sf_dir, "nation")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
+
+    def write(path: str) -> None:
+        os.makedirs(path)
         rows = nation.orderBy("n_nationkey").collect()
         with open(os.path.join(path, "data.csv"), "w", newline="") as f:
             wr = _csv.writer(f)
@@ -515,7 +508,8 @@ def csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write("x,y,z\n")
             f.write("abc,MISSING_KEY,q\n")
             f.write(",,,,,,,,\n")
-        open(marker, "w").close()
+
+    path = staged("csv_malformed", sf_dir, "nation", write)
     schema = "n_nationkey LONG, n_name STRING, n_regionkey LONG, _corrupt STRING"
     permissive = (
         spark.read.schema(schema)
@@ -571,7 +565,7 @@ def fixed_width_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse is a narrow JVM map (no UDF), exactly how a production
     fixed-width ingest should look."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _stage_dir("fixedwidth_orders", sf_dir, "orders")
+    path = scratch_dir("fixedwidth_orders", sf_dir, "orders")
     lines = orders.select(
         F.format_string(
             "%012d%s%012d%s",
@@ -629,7 +623,7 @@ def compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     out = {}
     for codec in ("snappy", "zstd"):
-        path = _stage_dir(f"codec_{codec}", sf_dir, "lineitem")
+        path = scratch_dir(f"codec_{codec}", sf_dir, "lineitem")
         li.write.mode("overwrite").option("compression", codec).parquet(path)
         nbytes = sum(
             os.path.getsize(p) for p in _glob.glob(os.path.join(path, "*.parquet"))
@@ -679,8 +673,8 @@ def python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the aggregate reduces map-side before the sink sees rows; the
     sink itself is embarrassingly parallel (one file per partition, no
     driver funnel) — the structure that matters when the 'sink' is a
-    vendor API taking 100 TB of results. The temp dir is wiped first so
-    reruns and other scale factors can't cross-contaminate."""
+    vendor API taking 100 TB of results. The scratch dir is wiped first,
+    so a rerun never reads the last call's files."""
     import shutil
 
     from bigdatainfinance1_spark.sources import jsonl_sink
@@ -706,9 +700,7 @@ def python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev_cents"),
         )
     )
-    path = os.path.join(
-        "/tmp/spark_graft_jsonl_sink", os.path.basename(os.path.normpath(sf_dir))
-    )
+    path = scratch_dir("jsonl_sink", sf_dir, "orders")
     shutil.rmtree(path, ignore_errors=True)
     agg.write.format("jsonl_sink").option("path", path).mode("append").save()
     # manifest-driven readback (NOT a glob): only the files commit()

@@ -27,24 +27,23 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.registry import query, sql_query
-from bigdatainfinance1_spark.sources.catalog import load_table, source_key
+from bigdatainfinance1_spark.sources.catalog import load_table, scratch_dir
 
 N_BUCKETS = 16
 N_SALT = 8
-_STAGE = "/tmp/bigdatainfinance1_bucket_stage"
 
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Stage orders+lineitem as bucketed catalog tables (once per source
-    fingerprint, catalog.source_key). Bucketing metadata lives in the
-    session catalog; data files are external under /tmp so re-runs in a
-    fresh session re-register cheaply."""
-    tbl_o = f"orders_bkt_{source_key(sf_dir, 'orders')}"
-    tbl_l = f"lineitem_bkt_{source_key(sf_dir, 'lineitem')}"
-    for tbl, name, key in ((tbl_o, "orders", "o_orderkey"), (tbl_l, "lineitem", "l_orderkey")):
-        if spark.catalog.tableExists(tbl):
+    fingerprint, catalog.scratch_dir). Bucketing metadata lives in the
+    session catalog; data files are external, in the table's scratch
+    directory, so re-runs in a fresh session re-register cheaply."""
+    tables = []
+    for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        path = scratch_dir(f"{name}_bkt", sf_dir, name)
+        tables.append(os.path.basename(path))
+        if spark.catalog.tableExists(tables[-1]):
             continue
-        path = os.path.join(_STAGE, tbl)
         (
             load_table(spark, sf_dir, name)
             .write.mode("overwrite")
@@ -52,9 +51,9 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .option("path", path)
             .bucketBy(N_BUCKETS, key)
             .sortBy(key)
-            .saveAsTable(tbl)
+            .saveAsTable(tables[-1])
         )
-    return tbl_o, tbl_l
+    return tables[0], tables[1]
 
 
 @query(

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -96,9 +98,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def source_key(sf_dir: str, name: str, tag: str = "") -> str:
+# Every path a query writes lies under this root, one directory per kind of
+# scratch data and source table (``scratch_dir``). Removing it resets every
+# stage.
+SCRATCH_ROOT = "/tmp/bigdatainfinance1_scratch"
+
+
+def source_key(sf_dir: str, name: str) -> str:
     """Stage key for a scratch copy derived from table ``name``: an md5 over
-    ``sf_dir``, ``tag`` and each source file's name, size and mtime. A table
+    ``sf_dir`` and each source file's name, size and mtime. A table
     rewritten at the same path gets a new key, so a stage built from the
     old rows is never read again."""
     src = os.path.join(sf_dir, f"{name}.parquet")
@@ -111,8 +119,27 @@ def source_key(sf_dir: str, name: str, tag: str = "") -> str:
     else:
         st = os.stat(src)
         parts.append(f"{name}.parquet:{st.st_size}:{st.st_mtime_ns}")
-    fingerprint = "|".join([sf_dir, *([tag] if tag else []), *parts])
+    fingerprint = "|".join([sf_dir, *parts])
     return hashlib.md5(fingerprint.encode()).hexdigest()[:12]
+
+
+def scratch_dir(kind: str, sf_dir: str, table: str) -> str:
+    """``<SCRATCH_ROOT>/<kind>_<source_key>``: where a query writes its
+    ``kind`` of scratch data derived from ``table``."""
+    return os.path.join(SCRATCH_ROOT, f"{kind}_{source_key(sf_dir, table)}")
+
+
+def staged(kind: str, sf_dir: str, table: str, write: Callable[[str], None]) -> str:
+    """``scratch_dir(kind, sf_dir, table)``, written once by ``write(path)``
+    and then marked ``_STAGED`` (Spark's readers skip ``_`` files). A
+    directory without the marker is an interrupted write and is redone."""
+    path = scratch_dir(kind, sf_dir, table)
+    marker = os.path.join(path, "_STAGED")
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        open(marker, "w").close()
+    return path
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

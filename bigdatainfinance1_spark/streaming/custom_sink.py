@@ -21,6 +21,7 @@ from pyspark.sql.datasource import (
 )
 
 from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.sources.catalog import scratch_dir
 from bigdatainfinance1_spark.streaming.jobs import read_events_stream, run_to_table
 
 
@@ -134,10 +135,7 @@ def stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     spark.dataSource.register(JsonLinesStreamSink)
-    base = os.path.join(
-        "/tmp/spark_graft_jsonl_stream",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base = scratch_dir("jsonl_stream", sf_dir, "events")
     path, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir).select(

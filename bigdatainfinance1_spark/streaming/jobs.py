@@ -20,6 +20,8 @@ the slowest choice for a small input, and the count is capped by the cores.
 
 from __future__ import annotations
 
+import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,10 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from bigdatainfinance1_spark.registry import query
-from bigdatainfinance1_spark.sources.catalog import load_table, source_key
-
-
-_STREAM_STAGE = "/tmp/bigdatainfinance1_stream_stage"
+from bigdatainfinance1_spark.sources.catalog import load_table, scratch_dir, staged
 
 
 def _stage_stream(spark: SparkSession, sf_dir: str, table: str, ordered: bool = False) -> DataFrame:
@@ -41,20 +40,17 @@ def _stage_stream(spark: SparkSession, sf_dir: str, table: str, ordered: bool = 
     into a multi-file parquet directory (ts already truncated to
     microseconds by the catalog, identical to DuckDB's read of the
     original). The 4-file staging + maxFilesPerTrigger=2 gives a genuine
-    multi-micro-batch replay. The stage is keyed by ``catalog.source_key``,
-    so a regenerated table restages instead of silently reusing stale data.
+    multi-micro-batch replay. The stage is written by ``catalog.staged``,
+    keyed by the source's fingerprint, so a regenerated table restages
+    instead of silently reusing stale data.
 
     ``ordered`` range-partitions by ts (see read_events_stream_ordered) and
     sets strictly increasing mtimes in sorted-path order on every call
     (idempotent; the key is the SOURCE's mtimes, so utime never restages).
     """
-    import os
-
-    stage = os.path.join(_STREAM_STAGE, source_key(sf_dir, table, "ordered" if ordered else ""))
     src = load_table(spark, sf_dir, table)
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        df = src.repartitionByRange(4, "ts").sortWithinPartitions("ts") if ordered else src.repartition(4)
-        df.write.mode("overwrite").parquet(stage)
+    df = src.repartitionByRange(4, "ts").sortWithinPartitions("ts") if ordered else src.repartition(4)
+    stage = staged("stream_ordered" if ordered else "stream", sf_dir, table, df.write.parquet)
     if ordered:
         part_files = sorted(
             os.path.join(stage, f)
@@ -726,10 +722,10 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same aggregate over the source — which is the oracle — proving no
     loss and no duplication across micro-batches. Checkpoint + _spark_metadata
     give exactly-once at any scale; partitionBy(event_type) makes the sink
-    partition-prunable for downstream readers."""
-    import uuid as _uuid
-
-    base = f"/tmp/bigdatainfinance1_stream_sink/{_uuid.uuid4().hex[:12]}"
+    partition-prunable for downstream readers. Each call clears and reuses
+    its source's scratch directory."""
+    base = scratch_dir("stream_file_sink", sf_dir, "events")
+    shutil.rmtree(base, ignore_errors=True)
     ev = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("value") > 50)
@@ -780,11 +776,9 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate over the whole source, which is the oracle, proving no
     loss and no double-counting across micro-batches. State per key is one
     (count, sum) row — the target table is key-cardinality-sized, never
-    event-sized."""
-    import os
-    import uuid as _uuid
-
-    base = f"/tmp/bigdatainfinance1_foreach_upsert/{_uuid.uuid4().hex[:12]}"
+    event-sized. Each call clears and reuses its source's scratch directory."""
+    base = scratch_dir("foreach_upsert", sf_dir, "events")
+    shutil.rmtree(base, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir).select("user_id", "value")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:

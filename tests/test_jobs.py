@@ -1,6 +1,7 @@
 """Spark job-count budgets, the fixed-point helper, the catalog's schema
-memo and its source-keyed scratch stages, and the streaming runner's
-state-partition sizing, memory-sink views and known schemas.
+memo and its source-keyed scratch stages, the sink queries' one scratch
+directory per source, and the streaming runner's state-partition sizing,
+memory-sink views and known schemas.
 
 Scheduler overhead is paid per job, so a query that creeps from 3 jobs back
 to a hundred is a regression even when its results stay right. Jobs are
@@ -26,7 +27,13 @@ from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.operators import graph
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.sources import ticks as ticks_src
-from bigdatainfinance1_spark.sources.catalog import TABLES, load_table, register_views
+from bigdatainfinance1_spark.sources.catalog import (
+    SCRATCH_ROOT,
+    TABLES,
+    load_table,
+    register_views,
+    source_key,
+)
 from bigdatainfinance1_spark.streaming.jobs import (
     read_documents_stream,
     read_events_stream,
@@ -332,3 +339,22 @@ def test_sink_read_back_schema_is_the_inferred_schema(spark, name):
     (scan,) = file_scans(SPECS[name].fn(spark, SF_DIR))
     root, schema = scan
     assert schema == spark.read.parquet(root).schema
+
+
+@pytest.mark.parametrize("name", ["q_stream_file_sink", "q_stream_foreach_upsert"])
+def test_sink_query_keeps_one_scratch_dir_per_source(spark, duck, name):
+    """A sink query writes its sink and checkpoint to one directory per
+    source under the scratch root and clears it at the start of each call:
+    three calls read back from the same directory, and the last result,
+    which reads it, still matches the oracle."""
+    dirs = set()
+    for _ in range(3):
+        out = SPECS[name].fn(spark, SF_DIR)
+        ((root, _),) = file_scans(out)
+        rel = os.path.relpath(root.removeprefix("file:"), SCRATCH_ROOT)
+        assert not rel.startswith(".."), f"{name} reads {root}, outside {SCRATCH_ROOT}"
+        dirs.add(rel.split(os.sep)[0])
+    assert len(dirs) == 1, f"{name} wrote a new directory per call: {sorted(dirs)}"
+    (entry,) = dirs
+    assert entry.endswith("_" + source_key(SF_DIR, "events"))
+    assert_frames_match(out.toPandas(), duck.execute(SPECS[name].oracle).df(), name)

@@ -184,6 +184,23 @@ def test_one_text_queries_are_sql_query_declarations():
     assert not found, f"declare these with sql_query(name, text, ...): {found}"
 
 
+def test_only_the_catalog_spells_a_tmp_path():
+    """Every path the package writes is named by ``catalog.scratch_dir``
+    under the catalog's one scratch root, so no other module carries a
+    string constant starting with ``/tmp`` (f-string parts included)."""
+    pkg = REPO / "bigdatainfinance1_spark"
+    found = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "sources" / "catalog.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/tmp")
+    ]
+    assert not found, f"name these paths with catalog.scratch_dir: {found}"
+
+
 def test_sql_query_oracle_is_the_spark_text(spark):
     """``sql_query`` registers the views and runs its text; the oracle is
     that same text object."""

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdatainfinance1_spark.registry import load_all_queries
-from bigdatainfinance1_spark.sources.catalog import load_table
+from bigdatainfinance1_spark.sources.catalog import load_table, scratch_dir
 from bigdatainfinance1_spark.streaming.jobs import read_events_stream, run_to_table
 from tests.conftest import SF_DIR
 
@@ -147,19 +147,12 @@ def test_ordered_stage_mtimes_follow_path_order(spark):
     range partitioning itself: later files hold later ts ranges."""
     import os
 
-    from bigdatainfinance1_spark.streaming.jobs import read_events_stream_ordered
-
-    read_events_stream_ordered(spark, SF_DIR)  # ensures the stage exists
-    # recompute the stage path exactly like the producer does
-    import hashlib
-
-    src = os.path.join(SF_DIR, "events.parquet")
-    st = os.stat(src)
-    fingerprint = SF_DIR + "|ordered|" + f"events.parquet:{st.st_size}:{st.st_mtime_ns}"
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
+    from bigdatainfinance1_spark.streaming.jobs import (
+        read_events_stream_ordered,
+        stream_file_paths,
     )
+
+    (stage,) = stream_file_paths(read_events_stream_ordered(spark, SF_DIR))
     parts = sorted(
         p for p in os.listdir(stage) if p.startswith("part-") and p.endswith(".parquet")
     )
@@ -224,19 +217,13 @@ def test_python_sink_two_phase_commit_artifacts(spark):
 
     specs = load_all_queries()
     out = specs["q_python_datasink"].fn(spark, SF_DIR).collect()
-    base = os.path.join(
-        "/tmp/spark_graft_jsonl_sink", os.path.basename(os.path.normpath(SF_DIR))
-    )
+    base = scratch_dir("jsonl_sink", SF_DIR, "orders")
     manifest = json.loads(open(os.path.join(base, "_MANIFEST.json")).read())
     assert manifest["rows"] == len(out) > 0
     assert all(os.path.exists(f) for f in manifest["files"])
 
     rows = specs["q_stream_python_sink"].fn(spark, SF_DIR).collect()
-    sbase = os.path.join(
-        "/tmp/spark_graft_jsonl_stream",
-        os.path.basename(os.path.normpath(SF_DIR)),
-        "out",
-    )
+    sbase = os.path.join(scratch_dir("jsonl_stream", SF_DIR, "events"), "out")
     batches = [
         json.loads(line)
         for line in open(os.path.join(sbase, "_MANIFEST.jsonl"))
@@ -262,9 +249,7 @@ def test_sink_readback_ignores_orphan_attempt_files(spark):
     specs = load_all_queries()
     # --- batch sink ---
     out = specs["q_python_datasink"].fn(spark, SF_DIR).collect()
-    base = os.path.join(
-        "/tmp/spark_graft_jsonl_sink", os.path.basename(os.path.normpath(SF_DIR))
-    )
+    base = scratch_dir("jsonl_sink", SF_DIR, "orders")
     orphan = os.path.join(base, "part-00000-99999999.jsonl")
     with open(orphan, "w") as f:
         f.write(json.dumps({"n_name": "ZOMBIE", "n_orders": 1, "rev_cents": 1}) + "\n")
@@ -279,11 +264,7 @@ def test_sink_readback_ignores_orphan_attempt_files(spark):
 
     # --- streaming sink: orphan file + replayed-batch manifest line ---
     specs["q_stream_python_sink"].fn(spark, SF_DIR).collect()
-    sbase = os.path.join(
-        "/tmp/spark_graft_jsonl_stream",
-        os.path.basename(os.path.normpath(SF_DIR)),
-        "out",
-    )
+    sbase = os.path.join(scratch_dir("jsonl_stream", SF_DIR, "events"), "out")
     sorphan = os.path.join(sbase, "part-99999999-0000.jsonl")
     open(sorphan, "w").write(json.dumps({"event_id": -1, "event_type": "z", "cents": 0}) + "\n")
     files = custom_sink.committed_stream_files(sbase)
