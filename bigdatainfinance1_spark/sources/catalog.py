@@ -17,7 +17,9 @@ against the fact tables never shuffle the big side.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import re
 import shutil
 from collections.abc import Callable
 
@@ -104,12 +106,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 SCRATCH_ROOT = "/tmp/bigdatainfinance1_scratch"
 
 
+def _source_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def source_key(sf_dir: str, name: str) -> str:
     """Stage key for a scratch copy derived from table ``name``: an md5 over
     ``sf_dir`` and each source file's name, size and mtime. A table
     rewritten at the same path gets a new key, so a stage built from the
     old rows is never read again."""
-    src = os.path.join(sf_dir, f"{name}.parquet")
+    src = _source_path(sf_dir, name)
     parts = []
     if os.path.isdir(src):  # spark-written table: a directory of part files
         for root, _, files in os.walk(src):
@@ -132,14 +138,42 @@ def scratch_dir(kind: str, sf_dir: str, table: str) -> str:
 def staged(kind: str, sf_dir: str, table: str, write: Callable[[str], None]) -> str:
     """``scratch_dir(kind, sf_dir, table)``, written once by ``write(path)``
     and then marked ``_STAGED`` (Spark's readers skip ``_`` files). A
-    directory without the marker is an interrupted write and is redone."""
+    directory without the marker is an interrupted write and is redone.
+
+    The marker names the source file and its key. Writing a stage first
+    removes the stages of the same kind whose marker names this source under
+    another key, or a source that no longer exists: a rewritten or deleted
+    source leaves no stage behind. Only a stage write looks, so a call that
+    reuses its stage does no more work than before."""
     path = scratch_dir(kind, sf_dir, table)
     marker = os.path.join(path, "_STAGED")
     if not os.path.exists(marker):
+        source = os.path.abspath(_source_path(sf_dir, table))
+        _drop_stale_stages(kind, source)
         shutil.rmtree(path, ignore_errors=True)
         write(path)
-        open(marker, "w").close()
+        with open(marker, "w") as f:
+            json.dump({"source": source, "key": source_key(sf_dir, table)}, f)
     return path
+
+
+def _drop_stale_stages(kind: str, source: str) -> None:
+    """Remove the ``kind`` stages whose marker names ``source`` or a source
+    that is gone. A stage with no readable marker is being written, or
+    predates the marker's contents, and is left alone."""
+    if not os.path.isdir(SCRATCH_ROOT):
+        return
+    name = re.compile(rf"{re.escape(kind)}_[0-9a-f]{{12}}")
+    for entry in os.scandir(SCRATCH_ROOT):
+        if not name.fullmatch(entry.name):
+            continue
+        try:
+            with open(os.path.join(entry.path, "_STAGED")) as f:
+                staged_from = json.load(f)["source"]
+        except (OSError, ValueError):
+            continue
+        if staged_from == source or not os.path.exists(staged_from):
+            shutil.rmtree(entry.path, ignore_errors=True)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

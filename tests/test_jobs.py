@@ -1,7 +1,7 @@
-"""Spark job-count budgets, the fixed-point helper, the catalog's schema
-memo and its source-keyed scratch stages, the sink queries' one scratch
-directory per source, and the streaming runner's state-partition sizing,
-memory-sink views and known schemas.
+"""Spark job-count and process-start budgets, the fixed-point helper, the
+catalog's schema memo and its source-keyed scratch stages, the sink queries'
+one scratch directory per source, and the streaming runner's state-partition
+sizing, memory-sink views and known schemas.
 
 Scheduler overhead is paid per job, so a query that creeps from 3 jobs back
 to a hundred is a regression even when its results stay right. Jobs are
@@ -11,9 +11,11 @@ group (the same count the benchmark reports).
 
 from __future__ import annotations
 
+import collections
 import inspect
 import json
 import os
+import tempfile
 
 import duckdb
 import pyarrow as pa
@@ -32,6 +34,7 @@ from bigdatainfinance1_spark.sources.catalog import (
     TABLES,
     load_table,
     register_views,
+    scratch_dir,
     source_key,
 )
 from bigdatainfinance1_spark.streaming.jobs import (
@@ -131,6 +134,34 @@ def test_reused_stage_follows_a_rewritten_source(spark, tmp_path):
         finally:
             con.close()
         assert_frames_match(got, want, spec.name)
+
+
+def test_stage_write_drops_stages_of_a_rewritten_or_deleted_source(spark, tmp_path):
+    """Writing a stage removes the same kind's stages built from an earlier
+    version of the same source, or from a source that is gone, so temporary
+    and rewritten tables leave nothing in the scratch root."""
+    fn = SPECS["q_compact_small_files"].fn
+    kinds = ("frag_orders", "compact_orders")
+
+    def stage(sf_dir, n_rows):
+        pq.write_table(
+            pa.table({"o_orderkey": pa.array(range(n_rows), pa.int64()), "o_totalprice": [1.5] * n_rows}),
+            sf_dir / "orders.parquet",
+        )
+        fn(spark, str(sf_dir)).toPandas()
+        paths = [scratch_dir(kind, str(sf_dir), "orders") for kind in kinds]
+        assert all(os.path.isdir(p) for p in paths)
+        return paths
+
+    first, second = tmp_path / "first", tmp_path / "second"
+    first.mkdir()
+    second.mkdir()
+    old = stage(first, 3)
+    rewritten = stage(first, 5)
+    assert not any(os.path.exists(p) for p in old)
+    os.remove(first / "orders.parquet")
+    stage(second, 4)
+    assert not any(os.path.exists(p) for p in rewritten)
 
 
 def test_amortization_closed_form_edges_match_recursive_oracle(spark, tmp_path):
@@ -276,6 +307,42 @@ def test_stream_and_sink_job_budget(spark, name):
     fn(spark, SF_DIR).collect()
     if os.path.basename(SF_DIR) == "sf0.001":  # the tier the budgets were measured on
         assert next_job_id(spark) - first <= STREAM_JOB_BUDGETS[name]
+
+
+def process_starts(spark, call) -> collections.Counter:
+    """Programs the driver JVM starts during ``call()``, by name, from an
+    in-JVM JFR recording of ``jdk.ProcessStart`` (JDK 17+)."""
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        call()
+    finally:
+        rec.stop()
+    fd, dump = tempfile.mkstemp(suffix=".jfr")
+    os.close(fd)
+    try:
+        rec.dump(jvm.java.io.File(dump).toPath())
+        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(jvm.java.io.File(dump).toPath())
+        return collections.Counter(
+            os.path.basename(e.getString("command").split()[0]) for e in events
+        )
+    finally:
+        rec.close()
+        os.remove(dump)
+
+
+@pytest.mark.parametrize("name", sorted(STREAM_JOB_BUDGETS))
+def test_stream_and_sink_start_no_chmod_or_readlink(spark, name):
+    """Warm, the streams' checkpoint commits and the sinks' writes start no
+    process: without libhadoop, Hadoop's local filesystem forks `chmod` per
+    file created and `readlink` per rename end (139, 143 and 28 such forks
+    per call), and the session's local filesystem does both in-process."""
+    fn = SPECS[name].fn
+    fn(spark, SF_DIR).collect()
+    starts = process_starts(spark, lambda: fn(spark, SF_DIR).collect())
+    assert starts["chmod"] == 0 and starts["readlink"] == 0, dict(starts)
 
 
 def temp_views(spark) -> set[str]:
