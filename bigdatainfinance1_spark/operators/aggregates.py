@@ -49,9 +49,9 @@ def global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_distinct_agg_monthly",
-    oracle="""
+    """
     SELECT
       date_trunc('month', o_orderdate) AS order_month,
       count(DISTINCT o_custkey)        AS n_custs,
@@ -61,18 +61,8 @@ def global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY order_month
     """,
     tags=("agg",),
+    doc="""A3: per-month distinct-customer counts (expand+two-phase agg plan).""",
 )
-def distinct_agg_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: per-month distinct-customer counts (expand+two-phase agg plan)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(F.date_trunc("month", "o_orderdate").alias("order_month"))
-        .agg(
-            F.countDistinct("o_custkey").alias("n_custs"),
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0, 2).alias("total"),
-        )
-    )
 
 
 @query("q_approx_distinct", oracle=None, tags=("agg", "approx"))
@@ -149,9 +139,9 @@ def stats_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_rollup_revenue",
-    oracle="""
+    """
     SELECT
       coalesce(r.r_name, 'ALL')                             AS region_name,
       coalesce(n.n_name, 'ALL')                             AS nation_name,
@@ -165,35 +155,10 @@ def stats_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (r.r_name, n.n_name)
     """,
     tags=("agg", "olap"),
-)
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7: ROLLUP subtotal lattice (region → nation → grand total) with a
+    doc="""A7: ROLLUP subtotal lattice (region → nation → grand total) with a
     grouping id; null group keys coalesced to 'ALL' for a dialect-stable
-    representation."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    joined = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return (
-        joined.rollup("r_name", "n_name")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0, 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .select(
-            F.coalesce("r_name", F.lit("ALL")).alias("region_name"),
-            F.coalesce("n_name", F.lit("ALL")).alias("nation_name"),
-            "gid",
-            "revenue",
-            "n_orders",
-        )
-    )
+    representation.""",
+)
 
 
 @query(
@@ -227,9 +192,9 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_pivot_status",
-    oracle="""
+    """
     SELECT
       o_orderpriority,
       CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS status_f,
@@ -239,22 +204,9 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
     tags=("agg", "olap"),
+    doc="""A8: pivot priority × status into a count matrix. Explicit pivot values
+    keep the plan single-pass (no extra distinct-values job).""",
 )
-def pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8: pivot priority × status into a count matrix. Explicit pivot values
-    keep the plan single-pass (no extra distinct-values job)."""
-    orders = load_table(spark, sf_dir, "orders")
-    pivoted = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    return pivoted.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F"), F.lit(0)).alias("status_f"),
-        F.coalesce(F.col("O"), F.lit(0)).alias("status_o"),
-        F.coalesce(F.col("P"), F.lit(0)).alias("status_p"),
-    )
 
 
 @query(

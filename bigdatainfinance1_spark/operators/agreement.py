@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from bigdatainfinance1_spark.operators.quant_pricing import _norm_cdf_sql
 from bigdatainfinance1_spark.operators.stats_advanced import _norm_cdf_col
 from bigdatainfinance1_spark.operators.ts_mining import _MONTHLY_SQL, _monthly
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 CHI2_4_95 = 9.487729  # chi-square 4 df, 5%
@@ -794,9 +794,9 @@ _ICC_SQL = """
 """
 
 
-@query("q_icc", oracle=_ICC_SQL, tags=("stats", "reliability"))
-def icc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Intraclass correlation ICC(1,1) — the share of quantity variance
+sql_query(
+    "q_icc", _ICC_SQL, tags=("stats", "reliability"),
+    doc="""Intraclass correlation ICC(1,1) — the share of quantity variance
     attributable to the brand grouping, from the one-way ANOVA
     decomposition with the unequal-group correction k0 = (N - sum n^2/N)
     / (k-1): ICC = (MSB - MSW)/(MSB + (k0-1) MSW). The RELIABILITY
@@ -812,44 +812,5 @@ def icc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact values); MSB/MSW/k0/ICC compose them through identical
     double expressions over the bounded group relation, rounded 4/6.
     Scale: one fact-dim broadcast join reduced map-side to O(brands)
-    moments; O(1) after."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    obs = li.join(F.broadcast(part), li.l_partkey == F.col("p_partkey")).select(
-        F.col("p_brand").alias("g"), F.col("l_quantity").cast("long").alias("y")
-    )
-    grp = obs.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("s"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("q"),
-    )
-    tot = grp.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum("n").cast("long").alias("nn"),
-        F.sum("s").cast("long").alias("ss"),
-        F.sum(F.col("q").cast("double")).alias("qq"),
-        F.sum(F.col("s").cast("double") * F.col("s") / F.col("n")).alias("sb"),
-        F.sum(F.col("n").cast("double") * F.col("n")).alias("n2"),
-    )
-    ms = tot.select(
-        "k",
-        "nn",
-        (
-            (F.col("sb") - F.col("ss").cast("double") * F.col("ss") / F.col("nn"))
-            / (F.col("k") - 1)
-        ).alias("msb"),
-        ((F.col("qq") - F.col("sb")) / (F.col("nn") - F.col("k"))).alias("msw"),
-        ((F.col("nn") - F.col("n2") / F.col("nn")) / (F.col("k") - 1)).alias("k0"),
-    )
-    return ms.select(
-        F.col("k").alias("n_groups"),
-        F.col("nn").alias("n_obs"),
-        F.round("msb", 6).alias("msb"),
-        F.round("msw", 6).alias("msw"),
-        F.round("k0", 4).alias("k0"),
-        F.round(
-            (F.col("msb") - F.col("msw"))
-            / (F.col("msb") + (F.col("k0") - 1) * F.col("msw")),
-            6,
-        ).alias("icc1"),
-    )
+    moments; O(1) after.""",
+)

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -26,9 +26,9 @@ ISO_MAX_B = 9
 _POS_SQL = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
 
 
-@query(
+sql_query(
     "q_isotonic_calibration",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT CAST(least(floor(o_totalprice / {ISO_STEP}), {ISO_MAX_B}) AS BIGINT) AS b,
              CAST(count(*) AS BIGINT) AS n,
@@ -63,9 +63,7 @@ _POS_SQL = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
     ORDER BY bucket
     """,
     tags=("ml", "eval", "calibration"),
-)
-def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic calibration of the urgent-priority rate over ordered
+    doc="""Isotonic calibration of the urgent-priority rate over ordered
     order-value buckets — the pool-adjacent-violators fit computed by its
     MIN-MAX closed form iso(k) = max_{{i<=k}} min_{{j>=k}} rate(i..j),
     which needs no sequential merging and therefore no stateful pass:
@@ -80,61 +78,8 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     every rate is a ratio of integers, and min/max over identical
     doubles are order-free. Scale: ONE map-side histogram aggregate
     touches the corpus; everything after is O(B^3) arithmetic on 10
-    rows."""
-    orders = load_table(spark, sf_dir, "orders")
-    g = orders.groupBy(
-        F.least(F.floor(F.col("o_totalprice") / ISO_STEP), F.lit(ISO_MAX_B))
-        .cast("long")
-        .alias("b")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(
-            F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("r"),
-    )
-    a = g.select(F.col("b").alias("i"))
-    c = g.select(F.col("b").alias("j"))
-    m = g.select(F.col("b").alias("mb"), "r", "n")
-    seg = (
-        a.join(F.broadcast(c), F.col("i") <= F.col("j"))
-        .join(F.broadcast(m), F.col("mb").between(F.col("i"), F.col("j")))
-        .groupBy("i", "j")
-        .agg(F.sum("r").cast("long").alias("r"), F.sum("n").cast("long").alias("n"))
-    )
-    k = g.select(F.col("b").alias("k"))
-    mm = (
-        seg.join(F.broadcast(k), F.col("j") >= F.col("k"))
-        .groupBy("i", "k")
-        .agg(F.min(F.col("r") * F.lit(1.0) / F.col("n")).alias("mn"))
-    )
-    iso = (
-        mm.filter(F.col("i") <= F.col("k"))
-        .groupBy(F.col("k").alias("b"))
-        .agg(F.max("mn").alias("iso_rate"))
-    )
-    nxt = g.select((F.col("b") - 1).alias("b"), (F.col("r") * F.lit(1.0) / F.col("n")).alias("next_rate"))
-    viol = (
-        g.join(F.broadcast(nxt), "b")
-        .filter(F.col("next_rate") < F.col("r") * F.lit(1.0) / F.col("n"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-    )
-    return (
-        g.join(F.broadcast(iso), "b")
-        .crossJoin(F.broadcast(viol))
-        .select(
-            F.col("b").alias("bucket"),
-            F.col("n").alias("n_orders"),
-            F.round(F.col("r") * F.lit(1.0) / F.col("n"), 6).alias("raw_rate"),
-            F.round(F.col("iso_rate"), 6).alias("iso_rate"),
-            F.round(F.abs(F.col("r") * F.lit(1.0) / F.col("n") - F.col("iso_rate")), 6).alias(
-                "adjustment"
-            ),
-            "n_violations",
-        )
-        .orderBy("bucket")
-    )
+    rows.""",
+)
 
 
 
@@ -189,9 +134,9 @@ _FAIR_SQL = f"""
 """
 
 
-@query("q_fairness_metrics", oracle=_FAIR_SQL, tags=("ml", "eval", "governance"))
-def fairness_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-fairness audit of the threshold classifier (predict urgent
+sql_query(
+    "q_fairness_metrics", _FAIR_SQL, tags=("ml", "eval", "governance"),
+    doc="""Group-fairness audit of the threshold classifier (predict urgent
     when order value >= {FAIR_THRESHOLD}) across customer regions as the
     protected attribute: per-group positive rate (demographic parity),
     TPR/FPR, disparate impact vs the most-favored group with the EEOC
@@ -205,77 +150,8 @@ def fairness_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: confusion cells are exact integer counts; every rate
     divides exact BIGINTs, rounded 6, and the four-fifths flag compares
     ROUNDED ratios. Scale: one fact shuffle (dims broadcast) to
-    O(groups) confusion moments; O(1) after."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    scored = (
-        orders.join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nat.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(reg.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select(
-            F.col("r_name").alias("grp"),
-            F.when(F.col("o_totalprice") >= FAIR_THRESHOLD, 1).otherwise(0).alias("yhat"),
-            F.expr(f"CASE WHEN {FAIR_POS} THEN 1 ELSE 0 END").alias("y"),
-        )
-    )
-    g = scored.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("yhat").cast("long").alias("npred"),
-        F.sum("y").cast("long").alias("npos"),
-        F.sum(F.col("yhat") * F.col("y")).cast("long").alias("tp"),
-        F.sum(F.col("yhat") * (1 - F.col("y"))).cast("long").alias("fp"),
-    )
-    rates = g.select(
-        "grp",
-        "n",
-        F.round(F.col("npred") * F.lit(1.0) / F.col("n"), 6).alias("positive_rate"),
-        F.round(F.col("tp") * F.lit(1.0) / F.col("npos"), 6).alias("tpr"),
-        F.round(F.col("fp") * F.lit(1.0) / (F.col("n") - F.col("npos")), 6).alias(
-            "fpr"
-        ),
-    )
-    ref = rates.agg(
-        F.max("positive_rate").alias("max_pr"),
-        F.max("tpr").alias("max_tpr"),
-        F.min("tpr").alias("min_tpr"),
-        F.max("fpr").alias("max_fpr"),
-        F.min("fpr").alias("min_fpr"),
-    )
-    di = F.round(F.col("positive_rate") / F.col("max_pr"), 6)
-    return (
-        rates.crossJoin(F.broadcast(ref))
-        .select(
-            "grp",
-            "n",
-            "positive_rate",
-            "tpr",
-            "fpr",
-            di.alias("disparate_impact"),
-            (di < FAIR_DI_FLOOR).alias("fails_four_fifths"),
-            F.round(F.col("max_tpr") - F.col("min_tpr"), 6).alias(
-                "equal_opportunity_gap"
-            ),
-            F.round(
-                F.greatest(
-                    F.col("max_tpr") - F.col("min_tpr"),
-                    F.col("max_fpr") - F.col("min_fpr"),
-                ),
-                6,
-            ).alias("equalized_odds_gap"),
-        )
-        .orderBy("grp")
-    )
+    O(groups) confusion moments; O(1) after.""",
+)
 
 
 # ---------------------------------------------------------------------------

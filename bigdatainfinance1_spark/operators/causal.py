@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -80,9 +80,9 @@ _IV_SQL = f"""
 """
 
 
-@query("q_iv_wald_2sls", oracle=_IV_SQL, tags=("stats", "analytics", "finance"))
-def iv_wald_2sls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Instrumental-variable estimate of net-revenue response to list
+sql_query(
+    "q_iv_wald_2sls", _IV_SQL, tags=("stats", "analytics", "finance"),
+    doc="""Instrumental-variable estimate of net-revenue response to list
     value per customer region, instrumented by a binary cost shifter.
     OLS of y (discounted revenue) on x (list value) is confounded
     wherever the discount decision responds to x; the part's base retail
@@ -105,87 +105,8 @@ def iv_wald_2sls(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-fact shuffle (lineitem x orders on orderkey); every
     dimension including part rides broadcast; the median is one
     O(|part|) aggregate reduced to a 1-row broadcast scalar; everything
-    after mom is O(regions)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    part = load_table(spark, sf_dir, "part")
-    pmed = part.select(
-        F.round(F.col("p_retailprice") * 100).cast("long").alias("rp")
-    ).agg(F.round(2 * F.median("rp")).cast("long").alias("m2"))
-    obs = (
-        li.join(
-            orders.select("o_orderkey", "o_custkey"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nat.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(reg.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .join(
-            F.broadcast(part.select("p_partkey", "p_retailprice")),
-            li.l_partkey == F.col("p_partkey"),
-        )
-        .crossJoin(F.broadcast(pmed))
-        .select(
-            F.col("r_name").alias("rg"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("x"),
-            F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100)
-            .cast("long")
-            .alias("y"),
-            F.when(
-                2 * F.round(F.col("p_retailprice") * 100).cast("long") > F.col("m2"), 1
-            )
-            .otherwise(0)
-            .alias("z"),
-        )
-    )
-
-    def dsum(expr):
-        return F.sum(expr.cast("decimal(19,0)")).cast("decimal(38,0)").cast("double")
-
-    mom = obs.groupBy("rg").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("z").cast("long").alias("sz"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        F.sum(F.col("x").cast("decimal(19,0)") * F.col("x"))
-        .cast("decimal(38,0)")
-        .cast("double")
-        .alias("sxx"),
-        F.sum(F.col("x").cast("decimal(19,0)") * F.col("y"))
-        .cast("decimal(38,0)")
-        .cast("double")
-        .alias("sxy"),
-        dsum(F.when(F.col("z") == 1, F.col("x")).otherwise(0)).alias("szx"),
-        dsum(F.when(F.col("z") == 1, F.col("y")).otherwise(0)).alias("szy"),
-    )
-    n, sz = F.col("n"), F.col("sz")
-    sx, sy = F.col("sx"), F.col("sy")
-    beta_ols = (n * F.col("sxy") - sx * sy) / (n * F.col("sxx") - sx * sx)
-    beta_iv = (n * F.col("szy") - sz * sy) / (n * F.col("szx") - sz * sx)
-    r2_fs = ((n * F.col("szx") - sz * sx) * (n * F.col("szx") - sz * sx)) / (
-        (sz * F.lit(1.0) * (n - sz)) * (n * F.col("sxx") - sx * sx)
-    )
-    fstat = F.round((n - 2) * r2_fs / (1 - r2_fs), 2)
-    return mom.select(
-        "rg",
-        "n",
-        F.round(beta_ols, 6).alias("beta_ols"),
-        F.round(beta_iv, 6).alias("beta_iv"),
-        fstat.alias("first_stage_f"),
-        (fstat < IV_WEAK_F).alias("weak_instrument"),
-    ).orderBy("rg")
+    after mom is O(regions).""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -238,9 +159,9 @@ def _simpson_sql() -> str:
     """
 
 
-@query("q_simpsons_paradox", oracle=_simpson_sql(), tags=("stats", "analytics"))
-def simpsons_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregation-reversal (Simpson's paradox) audit per brand market:
+sql_query(
+    "q_simpsons_paradox", _simpson_sql(), tags=("stats", "analytics"),
+    doc="""Aggregation-reversal (Simpson's paradox) audit per brand market:
     the discount->quantity slope computed on POOLED data vs the
     stratum-pooled within-region slope (sum of within-region
     cross-moments over sum of within-region x-variation — the
@@ -258,76 +179,8 @@ def simpsons_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 5 region terms — reorder noise ~1e-13, rounded at 6, the
     q_kruskal_wallis posture), and the reversal flag reads only ROUNDED
     slopes. Scale: one lineitem-orders shuffle (part/customer/nation/
-    region broadcast); everything after g is O(markets x regions)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    part = load_table(spark, sf_dir, "part")
-    obs = (
-        li.join(
-            orders.select("o_orderkey", "o_custkey"),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .join(
-            F.broadcast(part.select("p_partkey", "p_brand")),
-            li.l_partkey == F.col("p_partkey"),
-        )
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nat.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(reg.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select(
-            F.col("p_brand").alias("market"),
-            F.col("r_name").alias("rg"),
-            F.round(F.col("l_discount") * 100).cast("long").alias("x"),
-            F.col("l_quantity").cast("long").alias("y"),
-        )
-    )
-    g = obs.groupBy("market", "rg").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    nn = F.sum("n").cast("double")
-    so = (nn * F.sum("sxy") - F.sum("sx").cast("double") * F.sum("sy")) / (
-        nn * F.sum("sxx") - F.sum("sx").cast("double") * F.sum("sx")
-    )
-    sw = F.sum(
-        F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col("sy") / F.col("n")
-    ) / F.sum(
-        F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col("sx") / F.col("n")
-    )
-    brand = g.groupBy("market").agg(
-        F.sum("n").cast("long").alias("n"),
-        F.round(so, 6).alias("slope_overall"),
-        F.round(sw, 6).alias("slope_within"),
-    )
-    return brand.select(
-        "market",
-        "n",
-        "slope_overall",
-        "slope_within",
-        F.round(F.col("slope_overall") - F.col("slope_within"), 6).alias(
-            "confounding_gap"
-        ),
-        (
-            (F.abs(F.col("slope_overall")) > SIMPSON_EPS)
-            & (F.abs(F.col("slope_within")) > SIMPSON_EPS)
-            & (F.signum("slope_overall") != F.signum("slope_within"))
-        ).alias("reversal"),
-    ).orderBy("market")
+    region broadcast); everything after g is O(markets x regions).""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.operators.ts_mining import _MONTHLY_SQL, _monthly
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 ESD_CRIT = 3.2  # approximate two-sided 5% Grubbs critical value, n ~ 78-80
@@ -471,9 +471,9 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_median_polish",
-    oracle="""
+    """
     WITH cells AS (
       SELECT t.moy, t.region,
              round(CAST(sum(CAST(round(t.v * 1e5) AS BIGINT)) AS DOUBLE)
@@ -537,9 +537,7 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY moy, res3.region
     """,
     tags=("stats", "analytics", "quality"),
-)
-def median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey median polish (two unrolled sweeps) of the month-of-year ×
+    doc="""Tukey median polish (two unrolled sweeps) of the month-of-year ×
     region average-revenue table: alternately subtract row and column
     LOWER MEDIANS (the rank-⌊(n+1)/2⌋ element with an explicit tie-break,
     so the pick is exact on both engines) to decompose each cell into
@@ -552,79 +550,8 @@ def median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one dim-chain aggregate to the 12×5 cell table, then four
     partitioned window ranks + equi-joins over that 60-row relation.
     Every median is an exact element pick of 6-dp values and every
-    residual a difference of them — zero float ambiguity anywhere."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    from pyspark.sql import Window
-
-    monthly = (
-        orders.join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nat.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(reg.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy(
-            (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias(
-                "mi"
-            ),
-            F.col("r_name").alias("region"),
-        )
-        .agg((F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0, 2) / 1000.0).alias("v"))
-    )
-    cells = monthly.groupBy((F.col("mi") % 12).alias("moy"), "region").agg(
-        F.round(
-            F.sum(F.round(F.col("v") * 1e5).cast("long")).cast("double")
-            / F.count(F.lit(1))
-            / 1e5,
-            6,
-        ).alias("v")
-    )
-
-    def group_median(df: DataFrame, part: str, val: str, tie: str, rank: int) -> DataFrame:
-        w = Window.partitionBy(part).orderBy(F.col(val), F.col(tie))
-        return (
-            df.select(part, val, tie)
-            .withColumn("rn", F.row_number().over(w))
-            .groupBy(part)
-            .agg(F.min(F.when(F.col("rn") == rank, F.col(val))).alias("m"))
-        )
-
-    rm1 = group_median(cells, "moy", "v", "region", 3)
-    res1 = cells.join(F.broadcast(rm1), "moy").select(
-        "moy", "region", "v", (F.col("v") - F.col("m")).alias("e"), F.col("m").alias("re1")
-    )
-    cm1 = group_median(res1, "region", "e", "moy", 6)
-    res2 = res1.join(F.broadcast(cm1), "region").select(
-        "moy", "region", "v", "re1", (F.col("e") - F.col("m")).alias("e"),
-        F.col("m").alias("ce1"),
-    )
-    rm2 = group_median(res2, "moy", "e", "region", 3)
-    res3 = res2.join(F.broadcast(rm2), "moy").select(
-        "moy", "region", "v", (F.col("re1") + F.col("m")).alias("row_eff"), "ce1",
-        (F.col("e") - F.col("m")).alias("e"),
-    )
-    cm2 = group_median(res3, "region", "e", "moy", 6)
-    return (
-        res3.join(F.broadcast(cm2), "region")
-        .select(
-            F.col("moy").cast("long").alias("moy"),
-            "region",
-            F.round(F.col("v"), 6).alias("cell"),
-            F.round(F.col("row_eff"), 6).alias("row_eff"),
-            F.round(F.col("ce1") + F.col("m"), 6).alias("col_eff"),
-            F.round(F.col("e") - F.col("m"), 6).alias("residual"),
-        )
-        .orderBy("moy", "region")
-    )
+    residual a difference of them — zero float ambiguity anywhere.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -908,9 +835,9 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 SMK_Z95 = 1.959964
 
 
-@query(
+sql_query(
     "q_seasonal_mann_kendall",
-    oracle=f"""
+    f"""
     WITH m AS (
       SELECT CAST(year(o_orderdate) AS BIGINT) * 12 + month(o_orderdate) AS mi,
              round(sum(CAST(round((o_totalprice) * 100) AS BIGINT))
@@ -948,9 +875,7 @@ SMK_Z95 = 1.959964
     FROM stat
     """,
     tags=("stats", "timeseries"),
-)
-def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonal Mann-Kendall trend test: the sign statistic S computed
+    doc="""Seasonal Mann-Kendall trend test: the sign statistic S computed
     WITHIN each month-of-year season (January vs later Januaries only,
     never January vs July) and summed with the per-season variances —
     the Hirsch-Slack test that keeps q_mann_kendall's distribution-free
@@ -962,49 +887,8 @@ def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     of ≤7 observations → ~250 pairs, calendar-bounded), per-season
     closed-form variances, one sum. S is an exact integer; ties are
     impossible at 6-dp revenue, and the tie term is retained as zero by
-    construction. Rounded at 6."""
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("mi")
-    ).agg(F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100e0 / 1000000.0, 6).alias("z"))
-    a = m.select((F.col("mi") % 12).alias("moy"), F.col("mi").alias("ma"), F.col("z").alias("za"))
-    b = m.select((F.col("mi") % 12).alias("moy"), F.col("mi").alias("mb"), F.col("z").alias("zb"))
-    s = (
-        a.join(F.broadcast(b), "moy")
-        .filter(F.col("mb") > F.col("ma"))
-        .groupBy("moy")
-        .agg(
-            F.sum(
-                F.when(F.col("zb") > F.col("za"), 1)
-                .when(F.col("zb") < F.col("za"), -1)
-                .otherwise(0)
-            ).alias("sm")
-        )
-    )
-    nm = m.groupBy((F.col("mi") % 12).alias("moy")).agg(F.count(F.lit(1)).alias("n"))
-    stat = s.join(nm, "moy").agg(
-        F.sum("sm").alias("s_total"),
-        (
-            F.sum(F.col("n") * (F.col("n") - 1) * (2 * F.col("n") + 5)).cast("double")
-            / 18.0
-        ).alias("var_total"),
-        F.count(F.lit(1)).alias("k_seasons"),
-    )
-    zc = (
-        F.when(F.col("s_total") > 0, (F.col("s_total") - 1) / F.sqrt(F.col("var_total")))
-        .when(F.col("s_total") < 0, (F.col("s_total") + 1) / F.sqrt(F.col("var_total")))
-        .otherwise(F.lit(0.0))
-    )
-    return stat.select(
-        F.col("k_seasons").cast("long").alias("k_seasons"),
-        F.col("s_total").cast("long").alias("s"),
-        F.round(F.col("var_total"), 6).alias("var_s"),
-        F.round(zc, 6).alias("z_stat"),
-        F.when((F.col("s_total") > 0) & (zc > SMK_Z95), F.lit("increasing"))
-        .when((F.col("s_total") < 0) & (zc < -SMK_Z95), F.lit("decreasing"))
-        .otherwise(F.lit("no_trend"))
-        .alias("trend"),
-    )
+    construction. Rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

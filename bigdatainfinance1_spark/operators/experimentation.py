@@ -9,14 +9,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.operators.quant_pricing import _norm_cdf_sql
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
-@query(
+sql_query(
     "q_ratio_delta_method",
-    oracle="""
+    """
     WITH cf AS (
       SELECT o_custkey AS cust,
              CAST(count(*) AS BIGINT) AS yv,
@@ -59,9 +58,7 @@ from bigdatainfinance1_spark.sources.catalog import load_table
     FROM stats
     """,
     tags=("analytics", "experimentation", "stats"),
-)
-def ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-method standard error for a RATIO metric (revenue per order
+    doc="""Delta-method standard error for a RATIO metric (revenue per order
     at the customer grain) — the correction every experimentation platform
     needs because the unit of randomization (customer) differs from the
     metric denominator (orders), so naive per-order variance is wrong:
@@ -71,55 +68,8 @@ def ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt at the end, rounded at 4 dp in dollars. Pairs with
     q_cuped_adjustment (variance reduction) and q_two_proportion_ztest
     (binary metrics) to complete the experiment-readout kit. Scale: one
-    customer-grain aggregate + a 2-row arm aggregate."""
-    orders = load_table(spark, sf_dir, "orders")
-    cf = orders.groupBy(F.col("o_custkey").alias("cust")).agg(
-        F.count(F.lit(1)).cast("long").alias("yv"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("xv"),
-    )
-    frame = cf.select(
-        F.when(F.substring(F.md5(F.col("cust").cast("string")), 1, 1) < "8", "treat")
-        .otherwise("control")
-        .alias("arm"),
-        "xv",
-        "yv",
-    )
-    m = frame.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("xv").cast("long").alias("sx"),
-        F.sum("yv").cast("long").alias("sy"),
-        F.sum(F.col("xv").cast("decimal(19,0)") * F.col("xv").cast("decimal(19,0)"))
-        .cast("double")
-        .alias("sxx"),
-        # same widening AND landing as sxx: the decimal(19,0) product sum
-        # cast to double (not back to long, which would reinstate the int64
-        # ceiling the widening exists to remove — round-7 ADVICE). sxy is
-        # only consumed via * 1.0, so double is its natural type; both
-        # engines round the same exact decimal sum to the same double.
-        F.sum(F.col("xv").cast("decimal(19,0)") * F.col("yv"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum(F.col("yv") * F.col("yv")).cast("long").alias("syy"),
-    )
-    mx = F.col("sx") * F.lit(1.0) / F.col("n")
-    my = F.col("sy") * F.lit(1.0) / F.col("n")
-    vx = F.col("sxx") / F.col("n") - mx * mx
-    vy = F.col("syy") * F.lit(1.0) / F.col("n") - my * my
-    cxy = F.col("sxy") * F.lit(1.0) / F.col("n") - mx * my
-    return m.select(
-        "arm",
-        "n",
-        F.round(mx / my / 100, 4).alias("revenue_per_order"),
-        F.round(
-            F.sqrt(
-                (mx / my) * (mx / my)
-                * (vx / (mx * mx) - F.lit(2.0) * cxy / (mx * my) + vy / (my * my))
-                / F.col("n")
-            )
-            / 100,
-            4,
-        ).alias("se_delta"),
-    )
+    customer-grain aggregate + a 2-row arm aggregate.""",
+)
 
 
 # Shared experiment frame: customer-level pre/post revenue (exact cents)

@@ -568,7 +568,6 @@ def amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_deflated_sharpe — Sharpe ratio deflated for non-normality and trials
 # ---------------------------------------------------------------------------
 
-DSR_TRIALS = 10  # number of strategy variants "tried" (selection pressure)
 DSR_EULER = 0.5772156649015329  # Euler-Mascheroni, for the E[max] approximation
 
 

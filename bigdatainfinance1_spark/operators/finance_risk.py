@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(
@@ -449,9 +448,9 @@ def revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_stress_scenarios",
-    oracle="""
+    """
     WITH scenarios(scenario, shock) AS (
       VALUES ('base', 0e0), ('mild_down', -0.05e0), ('severe_down', -0.2e0),
              ('boom', 0.1e0), ('crisis', -0.35e0)
@@ -474,9 +473,7 @@ def revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM regional g CROSS JOIN scenarios s
     """,
     tags=("analytics", "finance"),
-)
-def stress_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scenario-grid stress test: regional revenue re-priced under a
+    doc="""Scenario-grid stress test: regional revenue re-priced under a
     5-scenario shock table (the regulatory stress-testing shape — a small
     scenario dim cross-joined against portfolio aggregates, here revenue
     as the exposure proxy). Base aggregates are exact integer cents; each
@@ -485,32 +482,8 @@ def stress_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically on both engines; margins to the cent boundary are ≥1e-10).
     Scale: the aggregate is region-grain (tiny) before the cross join —
     the scenario fan-out multiplies a 5-row dim against a 5-row relation,
-    never against facts."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    region = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    regional = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("cents")
-        )
-    )
-    scenarios = spark.createDataFrame(
-        [("base", 0.0), ("mild_down", -0.05), ("severe_down", -0.2), ("boom", 0.1), ("crisis", -0.35)],
-        "scenario string, shock double",
-    )
-    rev = F.col("cents") / 100.0
-    return regional.crossJoin(F.broadcast(scenarios)).select(
-        "scenario",
-        "r_name",
-        F.round(rev, 2).alias("base_revenue"),
-        F.round(rev * (1.0 + F.col("shock")), 2).alias("shocked_revenue"),
-        F.round(rev * F.col("shock"), 2).alias("delta"),
-    )
+    never against facts.""",
+)
 
 
 @query(
@@ -673,9 +646,9 @@ def decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_pvm_bridge",
-    oracle="""
+    """
     WITH y AS (
       SELECT p.p_brand AS brand,
              CAST(year(o.o_orderdate) AS BIGINT) AS yr,
@@ -703,9 +676,7 @@ def decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM wide
     """,
     tags=("analytics", "finance", "decomposition"),
-)
-def pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Price-volume-mix bridge per brand, 1997→1998 — the FP&A
+    doc="""Price-volume-mix bridge per brand, 1997→1998 — the FP&A
     decomposition ΔRev = Δp·q₀ + p₀·Δq + Δp·Δq (price, volume, cross
     effects; the identity is exact, property of the algebra, and
     q_revenue_bridge is the customer-cohort sibling). Average unit prices
@@ -713,38 +684,8 @@ def pvm_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect products are doubles with identical expression shape on both
     engines, rounded to 4 dp. Scale: one (brand, year) aggregate — the
     fact table is scanned once with the year predicate pushed down, part's
-    brand broadcast; the bridge itself is a 25-brand-row self-join."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    y = (
-        li.join(orders.select("o_orderkey", "o_orderdate"),
-                li["l_orderkey"] == F.col("o_orderkey"))
-        .filter(F.year("o_orderdate").isin(1997, 1998))
-        .join(F.broadcast(part.select("p_partkey", "p_brand")),
-              li["l_partkey"] == F.col("p_partkey"))
-        .groupBy(F.col("p_brand").alias("brand"), F.year("o_orderdate").cast("long").alias("yr"))
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).cast("long").alias("qty"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("long").alias("cents"),
-        )
-    )
-    a = y.filter(F.col("yr") == 1997).select(
-        "brand", F.col("qty").alias("q0"), F.col("cents").alias("r0")
-    )
-    b = y.filter(F.col("yr") == 1998).select(
-        "brand", F.col("qty").alias("q1"), F.col("cents").alias("r1")
-    )
-    wide = a.join(b, "brand")
-    p0 = F.col("r0") * F.lit(1.0) / F.col("q0")
-    p1 = F.col("r1") * F.lit(1.0) / F.col("q1")
-    return wide.select(
-        "brand",
-        F.round((F.col("r1") - F.col("r0")) / F.lit(100.0), 2).alias("delta_rev"),
-        F.round((p1 - p0) * F.col("q0") / 100, 4).alias("price_effect"),
-        F.round(p0 * (F.col("q1") - F.col("q0")) / 100, 4).alias("volume_effect"),
-        F.round((p1 - p0) * (F.col("q1") - F.col("q0")) / 100, 4).alias("cross_effect"),
-    )
+    brand broadcast; the bridge itself is a 25-brand-row self-join.""",
+)
 
 
 # FIFO allocation as interval algebra: per part, order both sides by ship
@@ -1086,9 +1027,9 @@ def evt_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_roll_measure",
-    oracle="""
+    """
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS d,
              round(sum(CAST(round((o_totalprice) * 100) AS BIGINT))
@@ -1117,9 +1058,7 @@ def evt_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM mom
     """,
     tags=("finance", "timeseries", "risk"),
-)
-def roll_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Roll's implied bid-ask spread: s = 2√(−cov(Δpₜ, Δpₜ₋₁)) — the
+    doc="""Roll's implied bid-ask spread: s = 2√(−cov(Δpₜ, Δpₜ₋₁)) — the
     1984 estimator that reads the effective spread off nothing but the
     negative serial covariance bid-ask bounce induces in transaction
     price changes (no quote data needed), on the daily revenue proxy
@@ -1131,32 +1070,8 @@ def roll_measure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one daily aggregate, two consecutive-day equi-joins, one
     moment pass, closed form — day-bounded past the scan. Δp is a
-    difference of 6-dp values; rounded at 6."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100e0 / 1000.0, 6).alias("p")
-    )
-    prev = daily.select(F.date_add("d", 1).alias("d"), F.col("p").alias("pp"))
-    dp = daily.join(F.broadcast(prev), "d").select(
-        "d", F.round(F.col("p") - F.col("pp"), 6).alias("dp")
-    )
-    lag = dp.select(F.date_add("d", 1).alias("d"), F.col("dp").alias("y"))
-    pairs = dp.join(F.broadcast(lag), "d").select(F.col("dp").alias("x"), "y")
-    mom = pairs.agg(
-        F.count(F.lit(1)).alias("n"),
-        (
-            F.sum(F.col("x") * F.col("y")) / F.count(F.lit(1))
-            - (F.sum("x") / F.count(F.lit(1))) * (F.sum("y") / F.count(F.lit(1)))
-        ).alias("cov1"),
-    )
-    return mom.select(
-        F.col("n").cast("long").alias("n_obs"),
-        F.round(F.col("cov1"), 6).alias("serial_cov"),
-        F.round(
-            F.when(F.col("cov1") < 0, 2.0 * F.sqrt(-F.col("cov1"))), 6
-        ).alias("roll_spread"),
-        (F.col("cov1") < 0).alias("estimable"),
-    )
+    difference of 6-dp values; rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

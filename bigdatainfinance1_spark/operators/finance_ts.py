@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(

@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(
@@ -405,9 +404,9 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_gdpr_erasure",
-    oracle="""
+    """
     WITH targets AS (
       SELECT DISTINCT user_id FROM events WHERE user_id % 97 = 0
     ),
@@ -424,9 +423,7 @@ def order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM kept
     """,
     tags=("analytics", "quality", "governance"),
-)
-def gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Right-to-erasure batch: remove every event belonging to a deletion
+    doc="""Right-to-erasure batch: remove every event belonging to a deletion
     list (users with id ≡ 0 mod 97 — the deterministic stand-in for a DSR
     queue) via a broadcast anti-join, and emit the audit record a DPO
     actually files: rows before, users and rows erased, rows and users
@@ -434,19 +431,8 @@ def gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     (re-identification risk) this completes the governance trio. Scale:
     the deletion list is always small → broadcast anti-join, one scan,
     no shuffle of the fact; on a lake the same plan feeds a partition
-    overwrite (q_merge_upsert's write path)."""
-    ev = load_table(spark, sf_dir, "events")
-    targets = ev.filter(F.col("user_id") % 97 == 0).select("user_id").distinct()
-    kept = ev.join(F.broadcast(targets), "user_id", "left_anti")
-    n_before = ev.count()
-    n_targets = targets.count()
-    return kept.agg(
-        F.lit(n_before).cast("long").alias("n_before"),
-        F.lit(n_targets).cast("long").alias("n_users_erased"),
-        (F.lit(n_before) - F.count(F.lit(1))).cast("long").alias("n_rows_erased"),
-        F.count(F.lit(1)).cast("long").alias("n_after"),
-        F.count_distinct("user_id").cast("long").alias("n_users_after"),
-    )
+    overwrite (q_merge_upsert's write path).""",
+)
 
 
 # The synthetic CDC log derived deterministically from orders: every row an
@@ -546,9 +532,9 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_l_diversity",
-    oracle="""
+    """
     WITH tagged AS (
       SELECT c_mktsegment, c_nationkey,
              CASE WHEN c_acctbal < 0 THEN 'neg'
@@ -572,9 +558,7 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cells
     """,
     tags=("analytics", "quality", "privacy"),
-)
-def l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity screen, the companion to q_k_anonymity on the same
+    doc="""l-diversity screen, the companion to q_k_anonymity on the same
     quasi-identifier cells (mktsegment × nationkey): a cell can be
     k-anonymous yet still leak if everyone in it shares the sensitive
     value, so this measures the DISTINCT sensitive values (account-balance
@@ -582,31 +566,8 @@ def l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     second gate before releasing a coarsened extract. Scale: one groupBy
     on the cell key with a distinct-agg (Spark expands to two-phase
     partial aggregation), then a 5-number global summary — nothing wide
-    anywhere."""
-    cust = load_table(spark, sf_dir, "customer")
-    tagged = cust.select(
-        "c_mktsegment",
-        "c_nationkey",
-        F.when(F.col("c_acctbal") < 0, "neg")
-        .when(F.col("c_acctbal") < 5000, "mid")
-        .otherwise("high")
-        .alias("sens"),
-    )
-    cells = tagged.groupBy("c_mktsegment", "c_nationkey").agg(
-        F.count(F.lit(1)).cast("long").alias("cell_n"),
-        F.count_distinct("sens").cast("long").alias("l"),
-    )
-    return cells.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.min("l").cast("long").alias("min_l"),
-        F.count(F.when(F.col("l") < 2, 1)).cast("long").alias("cells_below_l2"),
-        F.sum(F.when(F.col("l") < 2, F.col("cell_n")).otherwise(0)).cast("long").alias("rows_at_risk"),
-        F.round(
-            F.sum(F.when(F.col("l") < 2, F.col("cell_n")).otherwise(0)) * F.lit(1.0)
-            / F.sum("cell_n"),
-            6,
-        ).alias("risk_share"),
-    )
+    anywhere.""",
+)
 
 
 @query(
@@ -674,9 +635,9 @@ def calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_duplicate_payments",
-    oracle="""
+    """
     WITH pairs AS (
       SELECT a.l_orderkey AS k,
              least(CAST(round(a.l_extendedprice * 100) AS BIGINT),
@@ -693,9 +654,7 @@ def calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs
     """,
     tags=("analytics", "audit", "fraud"),
-)
-def duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate line-item screen — the first query every AP audit runs:
+    doc="""Duplicate line-item screen — the first query every AP audit runs:
     the same part billed twice on the same order under different line
     numbers (double-entry candidates; 48 genuine hits in this data at
     sf0.01 — the first cut of this screen keyed on same-customer
@@ -707,30 +666,8 @@ def duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     linenumber keeps each pair once. Integer cents throughout. Scale: one
     shuffle on the composite key the fact table is usually already
     clustered by — in a real AP system this screen rides the ingest
-    partitioning for free."""
-    li = load_table(spark, sf_dir, "lineitem")
-    a = li.select(
-        F.col("l_orderkey").alias("k"),
-        F.col("l_partkey").alias("p"),
-        F.col("l_linenumber").alias("lna"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("ca"),
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("k"),
-        F.col("l_partkey").alias("p"),
-        F.col("l_linenumber").alias("lnb"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cb"),
-    )
-    pairs = (
-        a.join(b, ["k", "p"])
-        .filter(F.col("lna") < F.col("lnb"))
-        .select("k", F.least("ca", "cb").alias("exposure"))
-    )
-    return pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_suspect_pairs"),
-        F.count_distinct("k").cast("long").alias("n_orders"),
-        F.sum("exposure").cast("long").alias("exposure_cents"),
-    )
+    partitioning for free.""",
+)
 
 
 @query(

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 def _pagerank_oracle(iters: int = 5, d: float = 0.85) -> str:

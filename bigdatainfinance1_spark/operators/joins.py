@@ -474,9 +474,9 @@ def funnel_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_galaxy_join",
-    oracle="""
+    """
     SELECT
       r.r_name,
       p.p_brand,
@@ -494,9 +494,7 @@ def funnel_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r.r_name, p.p_brand
     """,
     tags=("join",),
-)
-def galaxy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The widest join in the repo: a 7-table galaxy — both fact tables
+    doc="""The widest join in the repo: a 7-table galaxy — both fact tables
     (lineitem ⋈ orders, the only shuffling join, keyed on orderkey) plus
     FIVE dimension hops (customer, nation, region, part, supplier), every
     one broadcast-pinned so the fact flow is shuffled exactly once. This
@@ -507,35 +505,8 @@ def galaxy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     discount are 2-decimal quantities, so cents·(100−bp) is an exact
     BIGINT): at these group sizes (~5k lines/group) a floating sum lands
     on half-cent boundaries often enough that round-2 flips between
-    engines — integer arithmetic removes the boundary entirely."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    part = load_table(spark, sf_dir, "part")
-    supp = load_table(spark, sf_dir, "supplier")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .groupBy("r_name", "p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.round(
-                F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
-                    * (100 - F.round(F.col("l_discount") * 100).cast("long"))
-                )
-                / F.lit(10000.0),
-                2,
-            ).alias("revenue"),
-            F.count_distinct("s_nationkey").alias("n_supp_nations"),
-        )
-    )
+    engines — integer arithmetic removes the boundary entirely.""",
+)
 
 
 @query(

@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -374,9 +374,9 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_cross_source_dedup",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT doc_id, source, lang, n_chars,
              row_number() OVER (
@@ -395,9 +395,7 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY source
     """,
     tags=("llm", "pipeline", "dedup"),
-)
-def cross_source_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source precedence dedup — the curation rule multi-feed
+    doc="""Cross-source precedence dedup — the curation rule multi-feed
     corpora need: when the SAME normalized text arrives from several
     feeds, the highest-priority source keeps it and the rest yield
     (priority = the source's numeric id here; in production, a curated
@@ -407,18 +405,8 @@ def cross_source_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     source as kept/yielded counts and surviving chars. One window
     partitioned by the text hash (uniform md5 key — no skew), ordered by
     (priority, doc_id) — a total order. Scale: identical shuffle budget
-    to exact dedup; text never shuffles (hash key only)."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.md5(F.lower(F.trim("text")))).orderBy(
-        F.substring("source", 4, 10).cast("int"), "doc_id"
-    )
-    ranked = docs.withColumn("rn", F.row_number().over(w))
-    return ranked.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).cast("long").alias("n_kept"),
-        F.sum(F.when(F.col("rn") > 1, 1).otherwise(0)).cast("long").alias("n_yielded"),
-        F.sum(F.when(F.col("rn") == 1, F.col("n_chars")).otherwise(0)).cast("long").alias("kept_chars"),
-    )
+    to exact dedup; text never shuffles (hash key only).""",
+)
 
 
 @query(

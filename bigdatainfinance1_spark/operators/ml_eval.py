@@ -8,7 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -318,9 +318,9 @@ def confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_ols_two_factor",
-    oracle="""
+    """
     WITH obs AS (
       SELECT CAST(l_quantity AS BIGINT)                       AS x1,
              CAST(round(l_discount * 10000) AS BIGINT)        AS x2,
@@ -360,9 +360,7 @@ def confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     """,
     tags=("analytics", "stats", "finance"),
-)
-def ols_two_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-factor OLS by closed-form normal equations: extended price
+    doc="""Two-factor OLS by closed-form normal equations: extended price
     regressed on quantity and discount simultaneously — the multivariate
     step past the built-in bivariate regr_* family (q_regr_by_brand).
     Every moment (Σx, Σx², Σxy, cross-moments) is an EXACT BIGINT: x₁ is
@@ -374,52 +372,8 @@ def ols_two_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically, divisions divide identical doubles, and the 6/4-dp
     rounds absorb nothing beyond ulp. Unit rescaling (/100, /1e6) maps
     betas back to dollars. One single-pass aggregation; nothing but the
-    9 moments ever shuffles."""
-    li = load_table(spark, sf_dir, "lineitem")
-    obs = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
-    )
-    m = obs.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x1").cast("long").alias("s1"),
-        F.sum("x2").cast("long").alias("s2"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
-        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).cast("long").alias("s2y"),
-    )
-    c = m.select(
-        "n",
-        (F.col("n") * F.lit(1.0) * F.col("s11") - F.col("s1") * F.lit(1.0) * F.col("s1")).alias("a11"),
-        (F.col("n") * F.lit(1.0) * F.col("s12") - F.col("s1") * F.lit(1.0) * F.col("s2")).alias("a12"),
-        (F.col("n") * F.lit(1.0) * F.col("s22") - F.col("s2") * F.lit(1.0) * F.col("s2")).alias("a22"),
-        (F.col("n") * F.lit(1.0) * F.col("s1y") - F.col("s1") * F.lit(1.0) * F.col("sy")).alias("b1"),
-        (F.col("n") * F.lit(1.0) * F.col("s2y") - F.col("s2") * F.lit(1.0) * F.col("sy")).alias("b2"),
-        "s1",
-        "s2",
-        "sy",
-    )
-    det = F.col("a11") * F.col("a22") - F.col("a12") * F.col("a12")
-    b_qty = (F.col("b1") * F.col("a22") - F.col("b2") * F.col("a12")) / det
-    b_disc = (F.col("b2") * F.col("a11") - F.col("b1") * F.col("a12")) / det
-    return c.select(
-        "n",
-        F.round(b_qty / 100, 6).alias("beta_qty"),
-        F.round(b_disc / 1_000_000, 6).alias("beta_disc"),
-        F.round(
-            (
-                F.col("sy") * F.lit(1.0) / F.col("n")
-                - b_qty * (F.col("s1") * F.lit(1.0) / F.col("n"))
-                - b_disc * (F.col("s2") * F.lit(1.0) / F.col("n"))
-            )
-            / 100,
-            4,
-        ).alias("intercept"),
-    )
+    9 moments ever shuffles.""",
+)
 
 
 @query(
@@ -518,9 +472,9 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_auc_by_month",
-    oracle="""
+    """
     WITH scored AS (
       SELECT
         CAST(year(o_orderdate) AS BIGINT) * 12 + month(o_orderdate) AS m,
@@ -555,9 +509,7 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY m
     """,
     tags=("analytics", "ml-eval", "stats"),
-)
-def auc_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-based ROC-AUC per order month: how well o_totalprice separates
+    doc="""Rank-based ROC-AUC per order month: how well o_totalprice separates
     finalized ('F') orders from the rest — the Mann-Whitney formulation
     (q_mann_whitney is the hypothesis-test twin; this is the ML-eval
     reading of the same statistic). Ties get the standard half credit:
@@ -567,39 +519,8 @@ def auc_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines sum exactly, with ONE double division at the end, rounded
     to 6 dp. Scale: one groupBy on (month, score) absorbs the row count;
     the cumulative window is partitioned by month (bounded group ≈ distinct
-    scores per month) — linear, no global ordering anywhere."""
-    orders = load_table(spark, sf_dir, "orders")
-    scored = orders.select(
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("m"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("pos"),
-    )
-    per_score = scored.groupBy("m", "cents").agg(
-        F.sum("pos").cast("long").alias("np"),
-        F.sum(F.lit(1) - F.col("pos")).cast("long").alias("nn"),
-    )
-    w = (
-        Window.partitionBy("m")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = per_score.withColumn("cum_nn", F.coalesce(F.sum("nn").over(w), F.lit(0)))
-    return cum.groupBy("m").agg(
-        F.sum("np").cast("long").alias("n_pos"),
-        F.sum("nn").cast("long").alias("n_neg"),
-        F.round(
-            F.when(
-                (F.sum("np") == 0) | (F.sum("nn") == 0), F.lit(None).cast("double")
-            ).otherwise(
-                F.sum(
-                    F.lit(2) * F.col("np") * F.col("cum_nn")
-                    + F.col("np") * F.col("nn")
-                ).cast("double")
-                / (F.lit(2.0) * F.sum("np") * F.sum("nn"))
-            ),
-            6,
-        ).alias("auc"),
-    )
+    scores per month) — linear, no global ordering anywhere.""",
+)
 
 
 @query(

@@ -164,9 +164,9 @@ def pca_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_mahalanobis_outliers",
-    oracle=f"""
+    f"""
     WITH {_CUST_SQL}, {_MOM_SQL},
     d AS (
       SELECT c.o_custkey, c.x, c.y,
@@ -182,9 +182,7 @@ def pca_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY round(d2, 6) DESC, o_custkey LIMIT 10
     """,
     tags=("ml", "stats", "multivariate", "quality"),
-)
-def mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 multivariate outliers by Mahalanobis distance on the
+    doc="""Top-10 multivariate outliers by Mahalanobis distance on the
     (spend, order count) plane — the covariance-aware upgrade of the
     per-feature z-score screens (q_iqr_outliers, q_mad_outliers): a
     customer can be unremarkable on each axis yet far off the joint
@@ -196,29 +194,8 @@ def mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked on round(d2, 6) with custkey as total-order tiebreak. Scale:
     one aggregate to customers, the 1-row moment relation broadcast back
     over them (O(n) map work), TakeOrdered top-10 — no shuffle beyond the
-    customer aggregate."""
-    feat = _cust_features(spark, sf_dir)
-    cv = _cov_relation(feat)
-    dx = F.col("x") - F.col("mx")
-    dy = F.col("y") - F.col("my")
-    cxx, cyy, cxy = F.col("cxx"), F.col("cyy"), F.col("cxy")
-    d2 = (dx * (cyy * dx - cxy * dy) + dy * (cxx * dy - cxy * dx)) / (
-        cxx * cyy - cxy * cxy
-    )
-    return (
-        feat.crossJoin(F.broadcast(cv))
-        .select(
-            "o_custkey",
-            F.col("x").alias("spend_k"),
-            F.col("y").alias("n_orders"),
-            F.round(d2, 4).alias("mahalanobis_d2"),
-            (F.round(d2, 4) > CHI2_2_975).alias("beyond_975"),
-            F.round(d2, 6).alias("_ord"),
-        )
-        .orderBy(F.col("_ord").desc(), "o_custkey")
-        .limit(10)
-        .drop("_ord")
-    )
+    customer aggregate.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -273,9 +250,9 @@ _SEG_MOM_SQL = f"""
 """
 
 
-@query(
+sql_query(
     "q_hotelling_t2",
-    oracle=f"""
+    f"""
     WITH {_CUST_SQL}, {_SEG_MOM_SQL},
     t AS (
       SELECT n1, n2, dx, dy, pxx, pyy, pxy,
@@ -293,9 +270,7 @@ _SEG_MOM_SQL = f"""
     FROM t
     """,
     tags=("ml", "stats", "multivariate", "experimentation"),
-)
-def hotelling_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Hotelling T-squared: do BUILDING and AUTOMOBILE
+    doc="""Two-sample Hotelling T-squared: do BUILDING and AUTOMOBILE
     customers differ in JOINT (spend, order count) mean? The multivariate
     extension of q_welch_ttest — two features tested at once with their
     correlation accounted for, so two individually-insignificant shifts
@@ -306,60 +281,8 @@ def hotelling_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries, mean gap, and T^2 are one closed-form double expression both
     engines share, rounded at 6. Scale: customer aggregate -> broadcast
     dim join -> one 2-group aggregate pivoted to a single row; everything
-    past the scans is O(1)."""
-    feat = _cust_features(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    seg = feat.join(
-        F.broadcast(cust), feat["o_custkey"] == cust["c_custkey"]
-    ).filter(F.col("c_mktsegment").isin(_SEG_A, _SEG_B))
-    gm = seg.groupBy(F.col("c_mktsegment").alias("g")).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-
-    def pick(col: str, seg_name: str):
-        return F.max(F.when(F.col("g") == seg_name, F.col(col)))
-
-    ab = gm.agg(
-        *[pick(c, _SEG_A).alias(c + "1") for c in ("n", "sx", "sy", "sxx", "syy", "sxy")],
-        *[pick(c, _SEG_B).alias(c + "2") for c in ("n", "sx", "sy", "sxx", "syy", "sxy")],
-    )
-    n1, n2 = F.col("n1"), F.col("n2")
-    dx = F.col("sx1") * 1.0 / n1 - F.col("sx2") * 1.0 / n2
-    dy = F.col("sy1") * 1.0 / n1 - F.col("sy2") * 1.0 / n2
-    denom = n1 + n2 - 2
-    pxx = (
-        (F.col("sxx1") - F.col("sx1") * 1.0 * F.col("sx1") / n1)
-        + (F.col("sxx2") - F.col("sx2") * 1.0 * F.col("sx2") / n2)
-    ) / denom
-    pyy = (
-        (F.col("syy1") - F.col("sy1") * 1.0 * F.col("sy1") / n1)
-        + (F.col("syy2") - F.col("sy2") * 1.0 * F.col("sy2") / n2)
-    ) / denom
-    pxy = (
-        (F.col("sxy1") - F.col("sx1") * 1.0 * F.col("sy1") / n1)
-        + (F.col("sxy2") - F.col("sx2") * 1.0 * F.col("sy2") / n2)
-    ) / denom
-    t2 = (
-        (n1 * 1.0 * n2 / (n1 + n2))
-        * (dx * (pyy * dx - pxy * dy) + dy * (pxx * dy - pxy * dx))
-        / (pxx * pyy - pxy * pxy)
-    )
-    return ab.select(
-        n1.alias(f"n_{_SEG_A.lower()}"),
-        n2.alias(f"n_{_SEG_B.lower()}"),
-        F.round(dx, 6).alias("diff_spend_k"),
-        F.round(dy, 6).alias("diff_orders"),
-        F.round(pxx, 6).alias("pooled_var_spend"),
-        F.round(pyy, 6).alias("pooled_var_orders"),
-        F.round(pxy, 6).alias("pooled_cov"),
-        F.round(t2, 6).alias("t2_stat"),
-        (F.round(t2, 6) > CHI2_2_95).alias("reject_95"),
-    )
+    past the scans is O(1).""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -29,9 +29,9 @@ EOQ_LEAD_DAYS = 7.0  # replenishment lead time
 EOQ_Z95 = 1.644854  # 95% cycle-service-level z
 
 
-@query(
+sql_query(
     "q_eoq_policy",
-    oracle=f"""
+    f"""
     WITH bd AS (
       SELECT p.p_brand AS brand, date_trunc('day', l.l_shipdate) AS day,
              CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q,
@@ -72,9 +72,7 @@ EOQ_Z95 = 1.644854  # 95% cycle-service-level z
     ORDER BY brand
     """,
     tags=("operations", "finance"),
-)
-def eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand inventory policy from first principles: EOQ =
+    doc="""Per-brand inventory policy from first principles: EOQ =
     sqrt(2DK/h) on annualized demand (K = $100/order, h = 20% of the
     brand's realized unit price), plus the service-level layer — daily
     demand sigma from exact integer moments, safety stock z*sigma*sqrt(LT)
@@ -87,51 +85,8 @@ def eoq_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     those integers (identical expression both engines), rounded at 2-6.
     Scale: one fact-dim broadcast join reduced to O(brands x days) cells
     map-side, then O(brands) closed forms — replication grows cell
-    heights, not the relation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    bd = (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy(
-            F.col("p_brand").alias("brand"),
-            F.date_trunc("day", "l_shipdate").alias("day"),
-        )
-        .agg(
-            F.sum(F.col("l_quantity").cast("long")).cast("long").alias("q"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    b = bd.groupBy("brand").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("q").cast("long").alias("d_total"),
-        F.sum(F.col("q") * F.col("q")).cast("long").alias("d_sq"),
-        F.sum("cents").cast("long").alias("cents"),
-    )
-    n_days, d_total = F.col("n_days"), F.col("d_total")
-    unit_price = F.col("cents") * F.lit(1.0) / 100 / d_total
-    d_annual = d_total * F.lit(1.0) / EOQ_YEARS
-    mu_daily = d_total * F.lit(1.0) / n_days
-    sigma = F.sqrt(
-        (n_days * F.lit(1.0) * F.col("d_sq") - d_total * F.lit(1.0) * d_total)
-        / (n_days * F.lit(1.0) * (n_days - 1))
-    )
-    ss = F.lit(EOQ_Z95) * sigma * F.sqrt(F.lit(EOQ_LEAD_DAYS))
-    return b.select(
-        "brand",
-        d_total.alias("total_demand"),
-        F.round(unit_price, 4).alias("unit_price"),
-        F.round(d_annual, 2).alias("annual_demand"),
-        F.round(
-            F.sqrt(F.lit(2.0) * d_annual * EOQ_ORDER_COST / (F.lit(EOQ_HOLD_RATE) * unit_price)),
-            4,
-        ).alias("eoq_units"),
-        F.round(mu_daily, 6).alias("mean_daily_demand"),
-        F.round(sigma, 6).alias("sigma_daily_demand"),
-        F.round(ss, 4).alias("safety_stock"),
-        F.round(mu_daily * EOQ_LEAD_DAYS + ss, 4).alias("reorder_point"),
-    ).orderBy("brand")
+    heights, not the relation.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -200,7 +155,6 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 UCB_ARMS = ("click", "error", "purchase", "signup", "view")  # sorted, index-pinned
-UCB_DAYS = 30  # the events calendar
 
 
 def _ucb_oracle() -> str:

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 MIN_MONTHS = 12  # drop nations with too-short return history for moments
@@ -568,9 +568,9 @@ def information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_amihud_illiquidity",
-    oracle="""
+    """
     WITH daily AS (
       SELECT CAST(o_orderdate AS DATE) AS d,
              round(sum(CAST(round((o_totalprice) * 100) AS BIGINT))
@@ -595,9 +595,7 @@ def information_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m ORDER BY mi
     """,
     tags=("finance", "timeseries", "analytics"),
-)
-def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly Amihud illiquidity: the month's average of |daily
+    doc="""Monthly Amihud illiquidity: the month's average of |daily
     return| / daily dollar volume (revenue standing in for both the
     price path and the volume, as in the classic ILLIQ = avg |r_d| /
     DVOL_d), ×1000 for readability — the standard price-impact proxy;
@@ -608,37 +606,8 @@ def amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), one consecutive-calendar-day self equi-join, one monthly
     aggregate — day-bounded past the scan. |Δrev|/rev rounds at 8
     before the volume division; the monthly mean divides identical
-    doubles, rounded at 6."""
-    orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100e0 / 1000.0, 6).alias("rev")
-    )
-    prev = daily.select(F.date_add(F.col("d"), 1).alias("d"), F.col("rev").alias("pv"))
-    dret = daily.join(F.broadcast(prev), "d").select(
-        (F.year("d").cast("long") * 12 + F.month("d")).alias("mi"),
-        (
-            F.round(F.abs(F.col("rev") - F.col("pv")) / F.col("pv"), 8) / F.col("rev")
-        ).alias("impact"),
-    )
-    m = (
-        dret.groupBy("mi")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.round(
-                F.sum(F.round(F.col("impact") * 1e12).cast("long")).cast("double")
-                / F.count(F.lit(1))
-                / 1e12
-                * 1000.0,
-                6,
-            ).alias("amihud"),
-        )
-        .filter(F.col("n_days") >= 5)
-    )
-    return m.select(
-        F.col("mi").cast("long").alias("mi"),
-        F.col("n_days").cast("long").alias("n_days"),
-        "amihud",
-    ).orderBy("mi")
+    doubles, rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -10,12 +10,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
-@query(
+sql_query(
     "q_cohort_retention",
-    oracle="""
+    """
     WITH firsts AS (
       SELECT o_custkey,
              min(CAST(year(o_orderdate) AS BIGINT) * 12 + month(o_orderdate)) AS cohort_m
@@ -30,23 +29,13 @@ from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
     GROUP BY cohort_m, months_since
     """,
     tags=("analytics", "finance"),
-)
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: customers bucketed by first-order month,
+    doc="""Cohort retention matrix: customers bucketed by first-order month,
     counted distinct per (cohort, months-since-cohort). Month arithmetic is
     integer (year*12+month) so both engines bucket identically. Scale shape:
     one groupBy for cohorts, one shuffle join back on custkey (both sides
     keyed the same — AQE reuses the partitioning), one distinct-count
-    aggregation; no windows, no collects."""
-    orders = load_table(spark, sf_dir, "orders")
-    month_idx = (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).cast("long")
-    firsts = orders.groupBy("o_custkey").agg(F.min(month_idx).alias("cohort_m"))
-    return (
-        orders.join(firsts, "o_custkey")
-        .select("o_custkey", F.col("cohort_m"), (month_idx - F.col("cohort_m")).alias("months_since"))
-        .groupBy("cohort_m", "months_since")
-        .agg(F.count_distinct("o_custkey").alias("n_custs"))
-    )
+    aggregation; no windows, no collects.""",
+)
 
 
 @query(
@@ -1066,9 +1055,9 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_stickiness",
-    oracle="""
+    """
     WITH du AS (
       SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
     ),
@@ -1098,34 +1087,13 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rolled r JOIN monthly mo ON r.m = mo.m
     """,
     tags=("analytics", "product", "growth"),
-)
-def stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU/MAU stickiness per month — the habit ratio next to
+    doc="""DAU/MAU stickiness per month — the habit ratio next to
     q_power_user_curve's distribution and q_growth_accounting's flows:
     average daily actives over monthly actives, computed as ONE division
     of exact integers (Σ daily-distinct / (days × MAU)) so no
     mean-of-ratios drift exists between engines. Scale: the user-day
-    dedup is the only wide step; both aggregates reuse it."""
-    ev = load_table(spark, sf_dir, "events")
-    du = ev.select(F.col("ts").cast("date").alias("d"), "user_id").distinct()
-    m = F.year("d").cast("long") * 12 + F.month("d")
-    daily = du.groupBy(m.alias("m"), "d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-    monthly = du.groupBy(m.alias("m")).agg(
-        F.count_distinct("user_id").cast("long").alias("mau")
-    )
-    rolled = daily.groupBy("m").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("dau").cast("long").alias("sum_dau"),
-    )
-    return rolled.join(monthly, "m").select(
-        "m",
-        "n_days",
-        "mau",
-        F.round(F.col("sum_dau") * F.lit(1.0) / F.col("n_days"), 4).alias("avg_dau"),
-        F.round(
-            F.col("sum_dau") * F.lit(1.0) / (F.col("n_days") * F.col("mau")), 6
-        ).alias("stickiness"),
-    )
+    dedup is the only wide step; both aggregates reuse it.""",
+)
 
 
 @query(

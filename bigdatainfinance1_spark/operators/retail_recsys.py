@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(
@@ -668,9 +667,9 @@ def user_cf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_new_vs_returning",
-    oracle="""
+    """
     WITH firsts AS (
       SELECT o_custkey, min(o_orderdate) AS first_dt FROM orders GROUP BY o_custkey
     ),
@@ -686,9 +685,7 @@ def user_cf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM labeled GROUP BY m, cohort
     """,
     tags=("analytics", "retail", "product"),
-)
-def new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New-vs-returning revenue split per month — the commerce health
+    doc="""New-vs-returning revenue split per month — the commerce health
     decomposition (acquisition revenue vs retention revenue) that
     q_growth_accounting computes for USERS, here at the revenue grain: an
     order is 'new' iff its date equals its customer's first-order date
@@ -696,20 +693,8 @@ def new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly order counts and exact-cents revenue split by that label.
     Scale shape: one customer-grain min (broadcastable — customer
     cardinality), one equi-join back to orders, one (month, cohort)
-    aggregation."""
-    orders = load_table(spark, sf_dir, "orders")
-    firsts = orders.groupBy("o_custkey").agg(F.min("o_orderdate").alias("first_dt"))
-    labeled = orders.join(firsts, "o_custkey").select(
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("m"),
-        F.when(F.col("o_orderdate") == F.col("first_dt"), "new")
-        .otherwise("returning")
-        .alias("cohort"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    return labeled.groupBy("m", "cohort").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("revenue_cents"),
-    )
+    aggregation.""",
+)
 
 
 # ---------------------------------------------------------------------------

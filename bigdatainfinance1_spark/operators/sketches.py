@@ -6,11 +6,10 @@ unchanged — git follows the move via --find-copies.
 """
 
 from __future__ import annotations
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(

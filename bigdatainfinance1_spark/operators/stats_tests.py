@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
-from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
 
 
 @query(
@@ -415,9 +414,9 @@ _WMEDIAN_SQL = """
 """
 
 
-@query("q_weighted_median", oracle=_WMEDIAN_SQL, tags=("analytics", "stats"))
-def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted median: the price at which half the total QUANTITY sits on
+sql_query(
+    "q_weighted_median", _WMEDIAN_SQL, tags=("analytics", "stats"),
+    doc="""Weighted median: the price at which half the total QUANTITY sits on
     either side, per return flag — the inventory-weighted location
     estimate. Cumulative integer weights over a per-group total order;
     the half-total crossing test is `cumw·2 ≥ totw` in exact BIGINT
@@ -436,40 +435,8 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     remaining cost — 32 buckets measured the same, the floor is the
     one-pass materialize + offset join over the fact). DuckDB keeps the plain-window SQL (its
     vectorized single-node window is fine at oracle tiers); values are
-    identical integer cumsums either way."""
-    from bigdatainfinance1_spark.functions.ranks import grouped_running_sum
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        "l_extendedprice",
-        F.col("l_quantity").cast("long").alias("w"),
-        "l_orderkey",
-        "l_linenumber",
-    )
-    cum = grouped_running_sum(
-        li,
-        ["l_returnflag"],
-        ["l_extendedprice", "l_orderkey", "l_linenumber"],
-        "w",
-        "cumw",
-    )
-    tot = cum.groupBy("l_returnflag").agg(F.sum("w").alias("totw"))
-    return (
-        cum.join(F.broadcast(tot), "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(
-            F.min("totw").cast("long").alias("total_weight"),
-            F.round(
-                F.min(
-                    F.when(
-                        F.col("cumw") * 2 >= F.col("totw"),
-                        F.col("l_extendedprice"),
-                    )
-                ),
-                2,
-            ).alias("weighted_median_price"),
-        )
-    )
+    identical integer cumsums either way.""",
+)
 
 
 @query(
@@ -1281,9 +1248,9 @@ def brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_power_analysis",
-    oracle="""
+    """
     WITH base AS (
       SELECT user_id, CAST(ts AS DATE) AS day,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
@@ -1302,9 +1269,7 @@ def brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM effects e CROSS JOIN p0 p
     """,
     tags=("analytics", "stats", "events"),
-)
-def power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experiment sample-size (power) analysis from observed data: for
+    doc="""Experiment sample-size (power) analysis from observed data: for
     each candidate relative minimum-detectable-effect, the per-variant n
     required at α=0.05 (two-sided) and 80% power — n = 2(z_α+z_β)²p(1−p)/
     (p·mde)² — against the observed user-day conversion baseline (same
@@ -1313,24 +1278,8 @@ def power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     p is an avg of exact 0/1 integers, so the ceil argument is an
     identical double (ceil is exact — margins to integers are ≥1e-6 times
     n ≫ ulp). Scale: one user-day aggregation, one scalar, a 4-row
-    effect grid."""
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("converted")
-    )
-    p0 = base.agg(F.avg("converted").alias("p"), F.count(F.lit(1)).cast("long").alias("n"))
-    effects = spark.createDataFrame([(0.01,), (0.02,), (0.05,), (0.1,)], "mde_rel double")
-    z = (1.959964 + 0.841621) ** 2
-    n_req = F.ceil(
-        F.lit(2.0) * F.lit(z) * F.col("p") * (F.lit(1.0) - F.col("p"))
-        / (F.col("p") * F.col("mde_rel") * F.col("p") * F.col("mde_rel"))
-    )
-    return effects.crossJoin(F.broadcast(p0)).select(
-        "mde_rel",
-        F.round("p", 6).alias("baseline_rate"),
-        n_req.cast("long").alias("n_per_variant"),
-        F.col("n").alias("n_observed"),
-    )
+    effect grid.""",
+)
 
 
 @query(

@@ -9,10 +9,10 @@ table-layout job runs before choosing sort keys and partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -145,9 +145,9 @@ _RLE_SQL = """
 """
 
 
-@query("q_rle_audit", oracle=_RLE_SQL, tags=("scale", "layout"))
-def rle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run-length encoding audit: count value runs of o_orderpriority
+sql_query(
+    "q_rle_audit", _RLE_SQL, tags=("scale", "layout"),
+    doc="""Run-length encoding audit: count value runs of o_orderpriority
     within each month partition under ARRIVAL order (orderkey) vs
     CLUSTERED order (sorted by the column) — the measured answer to
     "what does sorting this table by its low-cardinality column buy the
@@ -161,37 +161,8 @@ def rle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: run boundaries are IS DISTINCT FROM comparisons over
     totally ordered frames; everything is exact integer counting,
     ratios rounded 4/6. Scale: two window passes sharing the month
-    shuffle; O(1) output."""
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("mi"),
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("v"),
-    )
-
-    def runs(order_cols, label):
-        w = Window.partitionBy("mi").orderBy(*order_cols)
-        flagged = base.select(
-            F.when(
-                ~F.col("v").eqNullSafe(F.lag("v").over(w)), 1
-            ).otherwise(0).alias("new_run")
-        )
-        return flagged.agg(
-            F.lit(label).alias("layout"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("new_run").cast("long").alias("n_runs"),
-        )
-
-    both = runs(["k"], "arrival").unionByName(runs(["v", "k"], "clustered"))
-    return both.select(
-        "layout",
-        "n_rows",
-        "n_runs",
-        F.round(F.col("n_rows") * F.lit(1.0) / F.col("n_runs"), 4).alias(
-            "avg_run_len"
-        ),
-        F.round(F.col("n_runs") * F.lit(1.0) / F.col("n_rows"), 6).alias("rle_ratio"),
-    ).orderBy("layout")
+    shuffle; O(1) output.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -309,7 +309,6 @@ def periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 SAX_SEG = 4  # PAA segment length (months)
-SAX_WORD = 3  # symbols per word
 # N(0,1) quartile breakpoints for a 4-symbol alphabet
 SAX_BP = (-0.6745, 0.0, 0.6745)
 

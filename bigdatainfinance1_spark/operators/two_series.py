@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.operators.econometrics import EG_CRIT_5, F_1_CRIT_5
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -606,9 +606,9 @@ SC_SPLIT = "1999-01-01"  # pre-period fit / post-period effect window
 SC_GRAIN = 10000  # monthly revenue at 1e-4 M$ integer grain
 
 
-@query(
+sql_query(
     "q_synthetic_control",
-    oracle=f"""
+    f"""
     WITH rm AS (
       SELECT r.r_name AS region,
              CAST(year(o.o_orderdate) AS BIGINT) * 12 + month(o.o_orderdate) AS mi,
@@ -667,9 +667,7 @@ SC_GRAIN = 10000  # monthly revenue at 1e-4 M$ integer grain
     FROM w
     """,
     tags=("stats", "causal", "timeseries"),
-)
-def synthetic_control(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic control with a two-donor pool: fit the convex weight w on
+    doc="""Synthetic control with a two-donor pool: fit the convex weight w on
     pre-{SC_SPLIT} months so w*ASIA + (1-w)*AMERICA tracks EUROPE's
     monthly revenue, then read the post-period gap between EUROPE and its
     synthetic twin as the average monthly treatment effect — the
@@ -684,77 +682,8 @@ def synthetic_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     S_zz - 2w S_zx + w^2 S_xx — no residual pass, no ordered double
     sums), and the ATT are closed-form doubles of those integers, rounded
     at 6. Scale: one dim-chain aggregate to O(3 x months) cells pivoted
-    per month; O(1) after."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    reg = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    mm = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg), F.col("n_regionkey") == F.col("r_regionkey"))
-        .filter(F.col("r_name").isin(SC_TREATED, SC_DONOR_1, SC_DONOR_2))
-        .groupBy(
-            F.col("r_name").alias("region"),
-            (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("mi"),
-        )
-        .agg(
-            F.round(
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 1e8 * SC_GRAIN
-            )
-            .cast("long")
-            .alias("v"),
-            (F.min("o_orderdate") < F.lit(SC_SPLIT).cast("timestamp")).alias("pre"),
-        )
-    )
-
-    def pick(region: str):
-        return F.max(F.when(F.col("region") == region, F.col("v")))
-
-    piv = (
-        mm.groupBy("mi")
-        .agg(
-            F.min("pre").alias("pre"),
-            pick(SC_TREATED).alias("y"),
-            pick(SC_DONOR_1).alias("d1"),
-            pick(SC_DONOR_2).alias("d2"),
-        )
-        .filter(
-            F.col("y").isNotNull() & F.col("d1").isNotNull() & F.col("d2").isNotNull()
-        )
-    )
-    z = F.col("y") - F.col("d2")
-    x = F.col("d1") - F.col("d2")
-    fit = piv.agg(
-        F.sum(F.when(F.col("pre"), 1).otherwise(0)).cast("long").alias("n_pre"),
-        F.sum(F.when(F.col("pre"), 0).otherwise(1)).cast("long").alias("n_post"),
-        F.sum(F.when(F.col("pre"), z * x).otherwise(0)).cast("long").alias("szx"),
-        F.sum(F.when(F.col("pre"), x * x).otherwise(0)).cast("long").alias("sxx"),
-        F.sum(F.when(F.col("pre"), z * z).otherwise(0)).cast("long").alias("szz"),
-        F.sum(F.when(F.col("pre"), 0).otherwise(F.col("y"))).cast("long").alias("py"),
-        F.sum(F.when(F.col("pre"), 0).otherwise(F.col("d1"))).cast("long").alias("pd1"),
-        F.sum(F.when(F.col("pre"), 0).otherwise(F.col("d2"))).cast("long").alias("pd2"),
-    )
-    w1 = F.least(F.greatest(F.col("szx") * F.lit(1.0) / F.col("sxx"), F.lit(0.0)), F.lit(1.0))
-    synth_post = w1 * F.col("pd1") + (F.lit(1.0) - w1) * F.col("pd2")
-    return fit.select(
-        "n_pre",
-        "n_post",
-        F.round(w1, 6).alias(f"w_{SC_DONOR_1.lower()}"),
-        F.round(F.lit(1.0) - w1, 6).alias(f"w_{SC_DONOR_2.lower()}"),
-        F.round(
-            F.sqrt(
-                (F.col("szz") - F.lit(2.0) * w1 * F.col("szx") + w1 * w1 * F.col("sxx"))
-                / F.col("n_pre")
-            )
-            / SC_GRAIN,
-            6,
-        ).alias("pre_rmse"),
-        F.round((F.col("py") - synth_post) / F.col("n_post") / SC_GRAIN, 6).alias(
-            "att_monthly"
-        ),
-        F.round((F.col("py") - synth_post) / synth_post, 6).alias("att_pct"),
-    )
+    per month; O(1) after.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,34 @@ def duck():
     con.close()
 
 
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def plan_nodes(df):
+    """Every node of ``df``'s physical plan (``queryExecution().sparkPlan()``),
+    the plans of its subqueries included. A subquery is still a logical plan
+    there, so it is planned with the session's planner."""
+    planner = df.sparkSession._jsparkSession.sessionState().planner()
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(_seq(node.children()))
+        stack.extend(planner.plan(sub).next() for sub in _seq(node.subqueries()))
+
+
+def global_windows(df) -> int:
+    """Window operators in ``df``'s plan with an empty ``partitionSpec``
+    (``OVER ()``, ``OVER (ORDER BY ...)``, or a constant key that the
+    optimizer drops): each runs in a single task at any scale."""
+    return sum(
+        1 for node in plan_nodes(df) if node.nodeName() == "Window" and node.partitionSpec().isEmpty()
+    )
+
+
 def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
     """Sort columns by name, then rows by all columns — order-insensitive."""
     df = df.reindex(sorted(df.columns), axis=1)

@@ -7,17 +7,50 @@ from __future__ import annotations
 import pytest
 
 from bigdatainfinance1_spark.registry import load_all_queries
-from tests.conftest import SF_DIR, assert_frames_match
+from tests.conftest import SF_DIR, assert_frames_match, global_windows
 
 SPECS = load_all_queries()
 WITH_ORACLE = sorted(name for name, s in SPECS.items() if s.oracle is not None)
 ROWS_ONLY = sorted(name for name, s in SPECS.items() if s.oracle is None)
 
+# The queries whose plan holds a window with no partition key, each over a
+# relation whose size does not grow with the data.
+GLOBAL_WINDOW_SITES = {
+    "q_share_of_total": "sum() OVER () runs on the 25-row per-nation revenue aggregate",
+    "q_kmv_overlap": "row_number() runs on the merged sketch: at most 2 x 64 hash values",
+    "q_hist_quantile_sketch": "the running bucket count runs on at most 256 bucket rows",
+    "q_placebo_did": "the rank and the unit count run on the 25 per-nation effects",
+    "q_boxcox_lambda": "max(loglik) runs on the 5-point lambda grid",
+    "q_doremi_weights": "the weight total runs on one row per document source (20 domains)",
+    "q_haar_wavelet": "the energy total runs on the 7 wavelet bands",
+    "q_linear_shap": "the importance total runs on the 2 explained features",
+    "q_lorenz_curve": "the cumulative shares run on the 10 decile rows",
+    "q_modularity_brands": "the modularity sum runs on one row per brand (25)",
+    "q_periodogram": "max(power) runs on the 12 harmonics",
+    "q_profit_curve": "max(expected_profit) runs on at most 21 threshold buckets",
+    "q_threshold_metrics": "max(f1) runs on at most 21 threshold buckets",
+    "q_weighted_reservoir_es": "row_number() runs on the 20-row TakeOrdered sample",
+}
+
+
+def assert_partitioned_windows(df, name: str) -> None:
+    """Single-partition rule (VERDICT round-1 task 8), on the physical plan so
+    that SQL ``OVER (...)`` is seen as well as ``Window`` specs: total-order
+    computations go through functions/ranks.py, and only the bounded sites
+    above may window without a partition key."""
+    n = global_windows(df)
+    if name in GLOBAL_WINDOW_SITES:
+        assert n > 0, f"{name}: no unpartitioned window left; drop it from GLOBAL_WINDOW_SITES"
+    else:
+        assert n == 0, f"{name}: {n} window(s) with an empty partitionSpec (single-partition at scale)"
+
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
 def test_query_matches_oracle(spark, duck, name):
     spec = SPECS[name]
-    spark_pdf = spec.fn(spark, SF_DIR).toPandas()
+    df = spec.fn(spark, SF_DIR)
+    spark_pdf = df.toPandas()
+    assert_partitioned_windows(df, name)
     duck_pdf = duck.execute(spec.oracle).df()
     # Vacuous-oracle guard: an empty relation hash-matches trivially and
     # proves nothing (the round-2 judge caught q_power_user_curve passing
@@ -85,3 +118,4 @@ def test_rows_only_query_runs(spark, name):
     df = spec.fn(spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+    assert_partitioned_windows(df, name)

@@ -154,22 +154,6 @@ def test_python_datasource_parallel_partitions(spark):
     assert t.rdd.getNumPartitions() == ticks_src.TICK_PARTS
 
 
-def test_no_unpartitioned_windows_in_operators():
-    """Every Window spec in operators/ must start with partitionBy — global
-    ordered windows are single-partition at scale (VERDICT round-1 task 8);
-    total-order computations go through functions/ranks.py instead."""
-    import pathlib
-    import re
-
-    root = pathlib.Path("bigdatainfinance1_spark/operators")
-    offenders = []
-    for p in sorted(root.glob("*.py")):
-        for i, line in enumerate(p.read_text().splitlines(), 1):
-            if re.search(r"\bWindow\.orderBy\(", line):
-                offenders.append(f"{p}:{i}")
-    assert not offenders, f"unpartitioned Window.orderBy in: {offenders}"
-
-
 def test_global_row_number_is_exact_and_deterministic(spark):
     """ranks.global_row_number must equal a literal 1..n sequence over the
     total order, twice (rerun-identical), with no single-partition window."""
