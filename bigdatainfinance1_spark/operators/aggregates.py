@@ -114,9 +114,9 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_stats_volatility",
-    oracle="""
+    """
     SELECT
       l_returnflag,
       round(stddev_samp(l_extendedprice), 2)       AS price_std,
@@ -127,16 +127,8 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
     tags=("agg", "stats"),
+    doc="""A6: volatility & correlation statistics per return flag.""",
 )
-def stats_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6: volatility & correlation statistics per return flag."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.stddev_samp("l_extendedprice"), 2).alias("price_std"),
-        F.round(F.avg("l_extendedprice"), 4).alias("price_mean"),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price_corr"),
-        F.round(F.covar_samp("l_quantity", "l_discount"), 6).alias("qty_disc_covar"),
-    )
 
 
 sql_query(
@@ -161,9 +153,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_cube_orders",
-    oracle="""
+    """
     SELECT
       coalesce(o_orderstatus, 'ALL')   AS status,
       coalesce(o_orderpriority, 'ALL') AS priority,
@@ -173,23 +165,8 @@ sql_query(
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
     tags=("agg", "olap"),
+    doc="""A7: CUBE over status × priority (all 4 subtotal combinations).""",
 )
-def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7: CUBE over status × priority (all 4 subtotal combinations)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0, 2).alias("total"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n_orders",
-            "total",
-        )
-    )
 
 
 sql_query(
@@ -313,9 +290,9 @@ def histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_regr_beta",
-    oracle="""
+    """
     WITH per_type AS (
       SELECT event_type, date_trunc('day', ts) AS day, sum(value) AS y
       FROM events GROUP BY event_type, date_trunc('day', ts)
@@ -335,30 +312,14 @@ def histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.event_type
     """,
     tags=("agg", "finance", "stats"),
-)
-def regr_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Finance beta: per-event-type OLS regression of the type's daily value
+    doc="""Finance beta: per-event-type OLS regression of the type's daily value
     against the whole-market daily value (regr_slope/intercept/r2 — the
     linear-regression aggregate family). Two keyed pre-aggregations, a
     day-keyed join (both sides already day-partitioned, AQE-broadcast), and
     one tiny group-by: every stage shuffles at most one row per (type, day).
     Same aggregate names and double arithmetic on both engines; round(…,6)
-    absorbs summation-order ulps."""
-    ev = load_table(spark, sf_dir, "events")
-    per_type = ev.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum("value").alias("y")
-    )
-    market = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(F.sum("value").alias("x"))
-    return (
-        per_type.join(market, "day")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_days"),
-            F.round(F.regr_slope("y", "x"), 6).alias("beta"),
-            F.round(F.regr_intercept("y", "x"), 6).alias("alpha"),
-            F.round(F.regr_r2("y", "x"), 6).alias("r2"),
-        )
-    )
+    absorbs summation-order ulps.""",
+)
 
 
 _PROFILE_COLS = ("o_orderstatus", "o_orderpriority", "o_custkey", "o_totalprice")

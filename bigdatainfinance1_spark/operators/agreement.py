@@ -559,9 +559,9 @@ _BA_SQL = f"""
 """
 
 
-@query("q_bland_altman", oracle=_BA_SQL, tags=("stats", "quality"))
-def bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bland-Altman agreement + Lin's concordance between two pipelines
+sql_query(
+    "q_bland_altman", _BA_SQL, tags=("stats", "quality"),
+    doc="""Bland-Altman agreement + Lin's concordance between two pipelines
     measuring 'monthly revenue': the order-book path (o_totalprice by
     order date) vs the shipment path (discounted extendedprice by ship
     date). Bias, 95% limits of agreement (bias +/- {BA_Z95} sd of the
@@ -575,60 +575,8 @@ def bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments are ~80-term double sums (reorder ~1e-14, outputs round at
     6); the outside-LoA count compares each 6-dp difference against
     limits derived from identical doubles. Scale: two map-side monthly
-    aggregates; O(months) after."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ym = orders.groupBy(
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("mi")
-    ).agg(F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100e0 / 1000000.0, 6).alias("y"))
-    xm = li.groupBy(
-        (F.year("l_shipdate").cast("long") * 12 + F.month("l_shipdate")).alias("mi")
-    ).agg(
-        F.round(F.sum(F.round((F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 100).cast("long")) / 100e0 / 1000000.0, 6).alias("x")
-    )
-    p = ym.join(xm, "mi").select(
-        "mi", "x", "y", (F.col("x") - F.col("y")).alias("d")
-    ).localCheckpoint()  # O(months); feeds moments AND the outside-LoA count
-    mom = p.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.avg("d").alias("bias"),
-        F.sqrt(F.avg(F.col("d") * F.col("d")) - F.avg("d") * F.avg("d")).alias("sd"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        (F.avg(F.col("x") * F.col("x")) - F.avg("x") * F.avg("x")).alias("vx"),
-        (F.avg(F.col("y") * F.col("y")) - F.avg("y") * F.avg("y")).alias("vy"),
-        (F.avg(F.col("x") * F.col("y")) - F.avg("x") * F.avg("y")).alias("cxy"),
-    )
-    lim = mom.select(
-        "n",
-        "bias",
-        (F.col("bias") - BA_Z95 * F.col("sd")).alias("lo"),
-        (F.col("bias") + BA_Z95 * F.col("sd")).alias("hi"),
-        (
-            2
-            * F.col("cxy")
-            / (
-                F.col("vx")
-                + F.col("vy")
-                + (F.col("mx") - F.col("my")) * (F.col("mx") - F.col("my"))
-            )
-        ).alias("ccc"),
-        (F.col("cxy") / F.sqrt(F.col("vx") * F.col("vy"))).alias("r"),
-    )
-    outside = (
-        p.crossJoin(F.broadcast(lim.select("lo", "hi")))
-        .filter((F.col("d") < F.col("lo")) | (F.col("d") > F.col("hi")))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_outside_loa"))
-    )
-    return lim.crossJoin(F.broadcast(outside)).select(
-        F.col("n").alias("n_months"),
-        F.round("bias", 6).alias("bias"),
-        F.round("lo", 6).alias("loa_lo"),
-        F.round("hi", 6).alias("loa_hi"),
-        "n_outside_loa",
-        F.round("r", 6).alias("pearson_r"),
-        F.round("ccc", 6).alias("lin_ccc"),
-    )
+    aggregates; O(months) after.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.operators.ts_mining import _MONTHLY_SQL, _monthly
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 Z95 = 1.959964  # two-sided 5% normal
@@ -1465,9 +1465,9 @@ def panel_within_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_vif",
-    oracle="""
+    """
     WITH obs AS (
       SELECT CAST(l_quantity AS BIGINT) AS x1,
              CAST(round(l_discount * 10000) AS BIGINT) AS x2
@@ -1492,9 +1492,7 @@ def panel_within_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r
     """,
     tags=("stats", "ml"),
-)
-def vif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance inflation factor for q_ols_two_factor's regressors
+    doc="""Variance inflation factor for q_ols_two_factor's regressors
     (quantity, discount basis points): VIF = 1/(1−R²) of one regressor
     on the other — the multicollinearity diagnostic that says how much
     the betas' variance is inflated by regressor overlap (VIF > 5 is
@@ -1504,36 +1502,8 @@ def vif(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combinable 6-moment aggregate; centered
     products in double with identical expression shape (the
-    q_ols_two_factor int64-overflow posture). Rounded at 6."""
-    li = load_table(spark, sf_dir, "lineitem")
-    obs = li.select(
-        F.col("l_quantity").cast("long").alias("x1"),
-        F.round(F.col("l_discount") * 10000).cast("long").alias("x2"),
-    )
-    mm = obs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-    )
-    num = F.col("n") * 1.0 * F.col("s12") - F.col("s1") * 1.0 * F.col("s2")
-    r2 = (
-        num
-        * num
-        / (
-            (F.col("n") * 1.0 * F.col("s11") - F.col("s1") * 1.0 * F.col("s1"))
-            * (F.col("n") * 1.0 * F.col("s22") - F.col("s2") * 1.0 * F.col("s2"))
-        )
-    )
-    r = mm.select("n", r2.alias("r2"))
-    return r.select(
-        F.col("n").cast("long").alias("n_obs"),
-        F.round(F.col("r2"), 6).alias("r2_between_regressors"),
-        F.round(1.0 / (1.0 - F.col("r2")), 6).alias("vif"),
-        (1.0 / (1.0 - F.col("r2")) > 5.0).alias("collinearity_concern"),
-    )
+    q_ols_two_factor int64-overflow posture). Rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -235,9 +235,9 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_diff_in_diff",
-    oracle=f"""
+    f"""
     WITH {_EXPERIMENT_SQL},
     cells AS (
       SELECT arm,
@@ -258,9 +258,7 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN (SELECT * FROM cells WHERE arm = 'control') c
     """,
     tags=("analytics", "experimentation", "stats"),
-)
-def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences on the same experiment frame as
+    doc="""Difference-in-differences on the same experiment frame as
     q_cuped_adjustment: per-customer pre/post revenue means in the 2×2
     (arm × period) grid, DiD = (treat_post − treat_pre) − (control_post −
     control_pre) — the parallel-trends estimator every quasi-experiment
@@ -271,64 +269,8 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     divided once and rounded BEFORE differencing (the DiD combines
     already-rounded cells, so the 4-dp result is engine-stable by
     construction). Scale: one customer-grain aggregation, a 2-row grid,
-    a scalar cross join."""
-    orders = load_table(spark, sf_dir, "orders")
-    cents = F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long")
-    cut = F.lit("1996-01-01").cast("timestamp")
-    universe = orders.select(F.col("o_custkey").alias("cust")).distinct()
-    arms = universe.select(
-        "cust",
-        F.when(F.substring(F.md5(F.col("cust").cast("string")), 1, 1) < "8", "treat")
-        .otherwise("control")
-        .alias("arm"),
-    )
-    pre = (
-        orders.filter(F.col("o_orderdate") < cut)
-        .groupBy(F.col("o_custkey").alias("cust"))
-        .agg(cents.alias("x"))
-    )
-    post = (
-        orders.filter(F.col("o_orderdate") >= cut)
-        .groupBy(F.col("o_custkey").alias("cust"))
-        .agg(cents.alias("y"))
-    )
-    frame = (
-        arms.join(pre, "cust", "left")
-        .join(post, "cust", "left")
-        .select(
-            "arm",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-    )
-    cells = frame.groupBy("arm").agg(
-        F.round(F.sum("x") * F.lit(1.0) / F.count(F.lit(1)) / 100, 4).alias("pre_mean"),
-        F.round(F.sum("y") * F.lit(1.0) / F.count(F.lit(1)) / 100, 4).alias("post_mean"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    t = cells.filter(F.col("arm") == "treat").select(
-        F.col("n").alias("n_treat"),
-        F.col("pre_mean").alias("treat_pre"),
-        F.col("post_mean").alias("treat_post"),
-    )
-    c = cells.filter(F.col("arm") == "control").select(
-        F.col("n").alias("n_control"),
-        F.col("pre_mean").alias("control_pre"),
-        F.col("post_mean").alias("control_post"),
-    )
-    return t.crossJoin(c).select(
-        "n_treat",
-        "n_control",
-        "treat_pre",
-        "treat_post",
-        "control_pre",
-        "control_post",
-        F.round(
-            (F.col("treat_post") - F.col("treat_pre"))
-            - (F.col("control_post") - F.col("control_pre")),
-            4,
-        ).alias("did"),
-    )
+    a scalar cross join.""",
+)
 
 
 @query(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 KUPIEC_P = 0.05  # VaR confidence tail
@@ -1301,9 +1301,9 @@ def christoffersen_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_pairs_trading",
-    oracle="""
+    """
     WITH bm AS (
       SELECT p.p_brand AS b,
              CAST(year(l.l_shipdate) AS BIGINT) * 12 + month(l.l_shipdate) AS mi,
@@ -1344,9 +1344,7 @@ def christoffersen_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sel
     """,
     tags=("finance", "backtest", "pairs"),
-)
-def pairs_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distance-method pairs-trading screen (Gatev-Goetzmann-Rouwenhorst):
+    doc="""Distance-method pairs-trading screen (Gatev-Goetzmann-Rouwenhorst):
     normalize each brand's monthly unit price to its first-month level,
     rank brand pairs by sum of squared differences of the normalized
     index over shared months, and report the 5 closest pairs with their
@@ -1362,52 +1360,5 @@ def pairs_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered by (ssd, brand_a, brand_b). Scale: the fact scan reduces to
     O(brands x months); the pair join is O(brands^2 x months) over that
     dimension/calendar-bounded broadcast relation — invariant to fact-row
-    growth, so the plan is replication-proof by construction."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    bm = (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy(
-            F.col("p_brand").alias("b"),
-            (F.year("l_shipdate").cast("long") * 12 + F.month("l_shipdate")).alias("mi"),
-        )
-        .agg(
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
-                / F.sum(F.round(F.col("l_quantity") * 1000).cast("long")).cast("double")
-            ).alias("px")
-        )
-    )
-    f = bm.groupBy("b").agg(F.min_by("px", "mi").alias("px0"))
-    ix = bm.join(F.broadcast(f), "b").select(
-        "b", "mi", F.round(F.col("px") / F.col("px0") * 1e6).cast("long").alias("i6")
-    )
-    a, c = ix.alias("a"), ix.alias("c")
-    pm = a.join(
-        F.broadcast(c),
-        (F.col("a.mi") == F.col("c.mi")) & (F.col("a.b") < F.col("c.b")),
-    ).select(
-        F.col("a.b").alias("brand_a"),
-        F.col("c.b").alias("brand_b"),
-        F.col("a.mi").alias("mi"),
-        (F.col("a.i6") - F.col("c.i6")).alias("d"),
-    )
-    d = F.col("d")
-    agg = pm.groupBy("brand_a", "brand_b").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(d).cast("long").alias("sd"),
-        F.sum(d * d).cast("long").alias("sd2"),
-        F.max_by("d", "mi").cast("long").alias("dl"),
-    )
-    sel = agg.orderBy("sd2", "brand_a", "brand_b").limit(5)
-    n, sd, sd2, dl = (F.col(x) for x in ("n", "sd", "sd2", "dl"))
-    std = F.sqrt((n * sd2 - sd * sd) * 1.0 / (n * (n - 1)))
-    return sel.select(
-        "brand_a",
-        "brand_b",
-        n.alias("n_months"),
-        F.round(sd2 / F.lit(1e12), 6).alias("ssd"),
-        F.round(sd * 1.0 / n / 1e6, 6).alias("spread_mean"),
-        F.round(std / 1e6, 6).alias("spread_std"),
-        F.round((dl - sd * 1.0 / n) / F.nullif(std, F.lit(0.0)), 4).alias("z_last"),
-    )
+    growth, so the plan is replication-proof by construction.""",
+)

@@ -349,9 +349,9 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_revenue_bridge",
-    oracle="""
+    """
     WITH cm AS (
       SELECT o_custkey,
              CAST(year(o_orderdate) AS BIGINT) * 12 + month(o_orderdate) AS m,
@@ -382,9 +382,7 @@ def hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY m
     """,
     tags=("analytics", "finance"),
-)
-def revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-over-month revenue bridge (SaaS-style waterfall): each
+    doc="""Month-over-month revenue bridge (SaaS-style waterfall): each
     month's revenue change decomposed into new, expansion, contraction,
     and churned customer revenue — the FP&A decomposition behind every
     'why did revenue move' review. A customer-month revenue relation is
@@ -396,56 +394,8 @@ def revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents; the single divide-by-100 happens at the end, so round(x, 2) is
     exact on both engines. Scale: one shuffle to customer-month grain,
     then a self-join keyed (custkey, month) — both sides share the
-    partitioning, AQE reuses it; no windows, no driver state."""
-    orders = load_table(spark, sf_dir, "orders")
-    m = (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).cast("long")
-    cm = orders.groupBy(
-        "o_custkey", m.alias("m")
-    ).agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("cents"))
-    cur = cm.select(
-        F.col("o_custkey").alias("cur_key"), F.col("m").alias("cur_m"), F.col("cents").alias("cur_c")
-    )
-    prev = cm.select(
-        F.col("o_custkey").alias("prev_key"),
-        F.col("m").alias("prev_m"),
-        F.col("cents").alias("prev_c"),
-    )
-    br = cur.join(
-        prev,
-        (F.col("cur_key") == F.col("prev_key")) & (F.col("cur_m") == F.col("prev_m") + 1),
-        "full_outer",
-    ).select(
-        F.coalesce(F.col("cur_m"), F.col("prev_m") + 1).alias("m"),
-        F.when(F.col("prev_key").isNull(), F.col("cur_c")).otherwise(0).alias("new_c"),
-        F.when(F.col("cur_key").isNull(), -F.col("prev_c")).otherwise(0).alias("churn_c"),
-        F.when(
-            F.col("cur_key").isNotNull()
-            & F.col("prev_key").isNotNull()
-            & (F.col("cur_c") > F.col("prev_c")),
-            F.col("cur_c") - F.col("prev_c"),
-        )
-        .otherwise(0)
-        .alias("expand_c"),
-        F.when(
-            F.col("cur_key").isNotNull()
-            & F.col("prev_key").isNotNull()
-            & (F.col("cur_c") < F.col("prev_c")),
-            F.col("cur_c") - F.col("prev_c"),
-        )
-        .otherwise(0)
-        .alias("contract_c"),
-    )
-    return br.groupBy("m").agg(
-        F.round(F.sum("new_c") / 100.0, 2).alias("new_rev"),
-        F.round(F.sum("expand_c") / 100.0, 2).alias("expansion"),
-        F.round(F.sum("contract_c") / 100.0, 2).alias("contraction"),
-        F.round(F.sum("churn_c") / 100.0, 2).alias("churned"),
-        F.round(
-            F.sum(F.col("new_c") + F.col("expand_c") + F.col("contract_c") + F.col("churn_c"))
-            / 100.0,
-            2,
-        ).alias("net_change"),
-    )
+    partitioning, AQE reuses it; no windows, no driver state.""",
+)
 
 
 sql_query(
@@ -572,9 +522,9 @@ def price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_margin_waterfall",
-    oracle="""
+    """
     SELECT
       l_returnflag,
       round(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100e0, 2)
@@ -591,35 +541,20 @@ def price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
     tags=("analytics", "finance"),
-)
-def margin_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue waterfall per return flag: gross price → discount given →
+    doc="""Revenue waterfall per return flag: gross price → discount given →
     tax collected → net charge (the TPC-H charge algebra laid out as the
     FP&A bridge q_pricing_summary aggregates in one column). Each
     component is per-line rounded to cents BEFORE summation with the
     identical expression on both engines (the per-line products are
     2-decimal×2-decimal — exact at the half-cent grain after round — so
     both engines produce the same BIGINT per line; sums are then exact).
-    One scan, one 3-group aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    gross_c = F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-    disc_c = F.sum(F.round(F.col("l_extendedprice") * F.col("l_discount") * 100).cast("long"))
-    tax_c = F.sum(
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * F.col("l_tax") * 100).cast(
-            "long"
-        )
-    )
-    return li.groupBy("l_returnflag").agg(
-        F.round(gross_c / 100.0, 2).alias("gross"),
-        F.round(-disc_c / 100.0, 2).alias("discount_amt"),
-        F.round(tax_c / 100.0, 2).alias("tax_amt"),
-        F.round((gross_c - disc_c + tax_c) / 100.0, 2).alias("net_charge"),
-    )
+    One scan, one 3-group aggregation.""",
+)
 
 
-@query(
+sql_query(
     "q_decimal_money",
-    oracle="""
+    """
     SELECT
       CAST(year(o_orderdate) AS BIGINT) AS y,
       CAST(count(*) AS BIGINT)          AS n_orders,
@@ -628,9 +563,7 @@ def margin_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY y
     """,
     tags=("aggregate", "finance", "determinism"),
-)
-def decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decimal-native money arithmetic — the OTHER canonical exact-money
+    doc="""Decimal-native money arithmetic — the OTHER canonical exact-money
     pattern beside this repo's integer-cents convention: cast prices to
     DECIMAL(18,2) at the scan (the doubles are 2-dp-quantized, so the
     nearest decimal is unambiguous on both engines), sum in exact decimal,
@@ -638,12 +571,8 @@ def decimal_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison is digit-for-digit. This is what a real ledger schema
     declares at ingest so no operator downstream ever touches a float.
     Scale: a plain year aggregate; decimal sums carry through partial
-    aggregation (map-side combine) unchanged."""
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.groupBy(F.year("o_orderdate").cast("long").alias("y")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("string").alias("total_exact"),
-    )
+    aggregation (map-side combine) unchanged.""",
+)
 
 
 sql_query(

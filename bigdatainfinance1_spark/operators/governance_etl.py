@@ -247,9 +247,9 @@ def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_masked_view",
-    oracle="""
+    """
     SELECT
       c.c_custkey,
       substr(md5(c.c_name), 1, 8)                          AS name_mask,
@@ -262,9 +262,7 @@ def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.r_name = 'EUROPE'
     """,
     tags=("analytics", "quality", "governance"),
-)
-def masked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row- and column-level governance in one relation: the EUROPE-only
+    doc="""Row- and column-level governance in one relation: the EUROPE-only
     row filter (row-level security predicate pushed into the scan) with
     PII masking projected on top — names one-way-hashed to an 8-hex token
     (joinable, not reversible), account balances generalized to 1000-wide
@@ -272,22 +270,8 @@ def masked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     enforces). The masked relation is exactly what a governed export/BI
     view serves. floor on a 2-decimal double is boundary-safe (values are
     ≥0.01 from integers). Scale: narrow map over the filtered scan; the
-    nation→region dims broadcast."""
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
-    region = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    return (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == "EUROPE")
-        .select(
-            "c_custkey",
-            F.substring(F.md5("c_name"), 1, 8).alias("name_mask"),
-            (F.floor(F.col("c_acctbal") / 1000) * 1000).cast("long").alias("acctbal_band"),
-            "c_mktsegment",
-            F.col("n_name").alias("nation"),
-        )
-    )
+    nation→region dims broadcast.""",
+)
 
 
 @query(
@@ -670,9 +654,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_structuring_screen",
-    oracle="""
+    """
     WITH o AS (
       SELECT o_custkey AS cust,
              CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -691,9 +675,7 @@ sql_query(
     FROM near WHERE n_near >= 2
     """,
     tags=("analytics", "audit", "fraud"),
-)
-def structuring_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structuring (smurfing) screen — the AML pattern of repeatedly
+    doc="""Structuring (smurfing) screen — the AML pattern of repeatedly
     transacting near a cap: customers with ≥2 orders in the SAME month in
     the top band (> 400k) below the data's 500k price ceiling (40 flagged
     cust-months at sf0.01 — thresholds chosen to fire on this uniform
@@ -704,22 +686,8 @@ def structuring_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines — q_dow_seasonality lesson); the band predicate pushes
     to the parquet scan as an integer range. Scale: filter-then-aggregate
     on (customer, month) — the screen touches only the band slice of the
-    data."""
-    orders = load_table(spark, sf_dir, "orders")
-    o = orders.select(
-        F.col("o_custkey").alias("cust"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        (F.year("o_orderdate").cast("long") * 12 + F.month("o_orderdate")).alias("m"),
-    )
-    near = (
-        o.filter(F.col("cents") > 40000000)
-        .groupBy("cust", "m")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_near"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-    )
-    return near.filter(F.col("n_near") >= 2)
+    data.""",
+)
 
 
 TCLOSE_T = 0.2  # release gate threshold on the EMD

@@ -1124,9 +1124,9 @@ CA_TIER_STEP = 100000.0  # order-value tier width; 5 ordered tiers 0..4
 CA_Z95_SQ = 3.841459  # chi2(1) = z^2 at 5%
 
 
-@query(
+sql_query(
     "q_cochran_armitage",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT CAST(least(floor(o_totalprice / {CA_TIER_STEP}), 4) AS BIGINT) AS s,
              CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END
@@ -1159,9 +1159,7 @@ CA_Z95_SQ = 3.841459  # chi2(1) = z^2 at 5%
     FROM m
     """,
     tags=("stats", "inference"),
-)
-def cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Armitage trend test: does the urgent-priority share rise or
+    doc="""Cochran-Armitage trend test: does the urgent-priority share rise or
     fall MONOTONICALLY across ordered order-value tiers? The 2xk
     chi-square (q_chi2_independence) only asks "any difference"; this
     spends its single degree of freedom on the ordered alternative with
@@ -1172,41 +1170,8 @@ def cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs; numerator and variance are the standard closed forms
     evaluated in double with the identical expression shape on both
     engines (products of exact ints — the q_ols_two_factor posture),
-    rounded at 6. Scale: one map-side 5-group aggregate; O(1) after."""
-    orders = load_table(spark, sf_dir, "orders")
-    t = orders.select(
-        F.least(F.floor(F.col("o_totalprice") / CA_TIER_STEP), F.lit(4))
-        .cast("long")
-        .alias("s"),
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-        .otherwise(0)
-        .alias("pos"),
-    )
-    g = t.groupBy("s").agg(
-        F.count(F.lit(1)).cast("long").alias("n"), F.sum("pos").cast("long").alias("r")
-    )
-    m = g.agg(
-        F.sum("n").cast("long").alias("nn"),
-        F.sum("r").cast("long").alias("rr"),
-        F.sum(F.col("s") * F.col("r")).cast("long").alias("sr"),
-        F.sum(F.col("s") * F.col("n")).cast("long").alias("sn"),
-        F.sum(F.col("s") * F.col("s") * F.col("n")).cast("long").alias("ssn"),
-    )
-    nn, rr, sr, sn, ssn = (F.col(x) for x in ("nn", "rr", "sr", "sn", "ssn"))
-    num = nn * F.lit(1.0) * sr - rr * F.lit(1.0) * sn
-    var = rr * F.lit(1.0) * (nn - rr) * (nn * F.lit(1.0) * ssn - sn * F.lit(1.0) * sn) / nn
-    chi2 = F.round(F.pow(num, F.lit(2.0)) / var, 6)
-    return m.select(
-        nn.alias("n_total"),
-        rr.alias("n_pos"),
-        F.round(num / F.sqrt(var), 6).alias("ca_z"),
-        chi2.alias("ca_chi2"),
-        (chi2 > CA_Z95_SQ).alias("reject_95"),
-        F.when(num > 0, F.lit("increasing"))
-        .when(num < 0, F.lit("decreasing"))
-        .otherwise(F.lit("flat"))
-        .alias("trend"),
-    )
+    rounded at 6. Scale: one map-side 5-group aggregate; O(1) after.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1321,9 +1286,9 @@ ES_SEG_A = "BUILDING"
 ES_SEG_B = "AUTOMOBILE"
 
 
-@query(
+sql_query(
     "q_effect_sizes",
-    oracle=f"""
+    f"""
     WITH obs AS (
       SELECT c.c_mktsegment AS g, CAST(round(o.o_totalprice) AS BIGINT) AS y
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1369,9 +1334,7 @@ ES_SEG_B = "AUTOMOBILE"
     FROM d
     """,
     tags=("stats", "inference", "experimentation"),
-)
-def effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The standardized effect-size family for the BUILDING-vs-AUTOMOBILE
+    doc="""The standardized effect-size family for the BUILDING-vs-AUTOMOBILE
     order-value gap: Cohen's d (pooled SD), Hedges' g (the small-sample
     J-corrected d), Glass's delta (control-group SD — right when the
     treatment changes the variance too), and the 95% CI of d — the
@@ -1383,52 +1346,8 @@ def effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (explicitly ordered combinations, no engine-ordered double sums);
     every estimator is one closed-form double of those integers, rounded
     at 4/6. Scale: one broadcast dim join + one 2-group aggregate; O(1)
-    after."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    obs = (
-        orders.join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-        .filter(F.col("c_mktsegment").isin(ES_SEG_A, ES_SEG_B))
-        .select(
-            F.col("c_mktsegment").alias("g"),
-            F.round(F.col("o_totalprice")).cast("long").alias("y"),
-        )
-    )
-    gm = obs.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-
-    def pick(col: str, seg: str):
-        return F.max(F.when(F.col("g") == seg, F.col(col)))
-
-    piv = gm.agg(
-        *[pick(c, ES_SEG_A).alias(c + "1") for c in ("n", "sy", "syy")],
-        *[pick(c, ES_SEG_B).alias(c + "2") for c in ("n", "sy", "syy")],
-    )
-    n1, n2 = F.col("n1"), F.col("n2")
-    diff = F.col("sy1") * 1.0 / n1 - F.col("sy2") * 1.0 / n2
-    v1 = (n1 * F.lit(1.0) * F.col("syy1") - F.col("sy1") * F.lit(1.0) * F.col("sy1")) / (
-        n1 * F.lit(1.0) * (n1 - 1)
-    )
-    v2 = (n2 * F.lit(1.0) * F.col("syy2") - F.col("sy2") * F.lit(1.0) * F.col("sy2")) / (
-        n2 * F.lit(1.0) * (n2 - 1)
-    )
-    sp = F.sqrt(((n1 - 1) * v1 + (n2 - 1) * v2) / (n1 + n2 - 2))
-    d = diff / sp
-    se = F.sqrt((n1 + n2) * F.lit(1.0) / (n1 * F.lit(1.0) * n2) + d * d / (F.lit(2.0) * (n1 + n2)))
-    return piv.select(
-        n1.alias(f"n_{ES_SEG_A.lower()}"),
-        n2.alias(f"n_{ES_SEG_B.lower()}"),
-        F.round(diff, 4).alias("mean_diff"),
-        F.round(sp, 4).alias("pooled_sd"),
-        F.round(d, 6).alias("cohens_d"),
-        F.round(d * (1 - 3.0 / (4 * (n1 + n2 - 2) - 1)), 6).alias("hedges_g"),
-        F.round(diff / F.sqrt(v2), 6).alias("glass_delta"),
-        F.round(d - F.lit(1.959964) * se, 6).alias("d_ci_lo"),
-        F.round(d + F.lit(1.959964) * se, 6).alias("d_ci_hi"),
-    )
+    after.""",
+)
 
 
 # ---------------------------------------------------------------------------

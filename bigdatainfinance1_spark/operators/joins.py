@@ -145,9 +145,9 @@ def outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_full_outer_join",
-    oracle="""
+    """
     SELECT
       count(*)                                        AS n_rows,
       count(a.custkey)                                AS n_with_95,
@@ -160,26 +160,14 @@ def outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON a.custkey = b.custkey
     """,
     tags=("join",),
+    doc="""J3: full outer join — customer cohorts of 1995 vs 1996 with nulls on
+    both sides counted.""",
 )
-def full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3: full outer join — customer cohorts of 1995 vs 1996 with nulls on
-    both sides counted."""
-    orders = load_table(spark, sf_dir, "orders")
-    a = orders.filter(F.year("o_orderdate") == 1995).select(F.col("o_custkey").alias("custkey")).distinct()
-    b = orders.filter(F.year("o_orderdate") == 1996).select(F.col("o_custkey").alias("custkey_b")).distinct()
-    joined = a.join(b, a.custkey == b.custkey_b, "outer")
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("custkey").alias("n_with_95"),
-        F.count("custkey_b").alias("n_with_96"),
-        (F.count(F.lit(1)) - F.count("custkey")).alias("only_96"),
-        (F.count(F.lit(1)) - F.count("custkey_b")).alias("only_95"),
-    )
 
 
-@query(
+sql_query(
     "q_semi_join",
-    oracle="""
+    """
     SELECT c_custkey, c_mktsegment
     FROM customer c
     WHERE EXISTS (
@@ -188,15 +176,9 @@ def full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     tags=("join",),
+    doc="""J4: left semi join (existence) — never duplicates the left side and
+    only ships the join key of the right side.""",
 )
-def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: left semi join (existence) — never duplicates the left side and
-    only ships the join key of the right side."""
-    cust = load_table(spark, sf_dir, "customer")
-    pend = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "P")
-    return cust.join(pend, cust.c_custkey == pend.o_custkey, "left_semi").select(
-        "c_custkey", "c_mktsegment"
-    )
 
 
 @query(
@@ -220,21 +202,17 @@ def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_cross_join",
-    oracle="""
+    """
     SELECT r.r_name, s.o_orderstatus
     FROM region r
     CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
     """,
     tags=("join",),
+    doc="""J5: guarded cartesian of two tiny relations (5 × 3 rows). Only ever
+    cross-join provably tiny sides.""",
 )
-def cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5: guarded cartesian of two tiny relations (5 × 3 rows). Only ever
-    cross-join provably tiny sides."""
-    region = load_table(spark, sf_dir, "region").select("r_name")
-    statuses = load_table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
-    return region.crossJoin(statuses)
 
 
 @query(

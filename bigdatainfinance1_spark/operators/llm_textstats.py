@@ -409,9 +409,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_dataset_card",
-    oracle="""
+    """
     WITH base AS (
       SELECT source, lang, n_chars,
              md5(lower(trim(text))) AS h,
@@ -431,9 +431,7 @@ sql_query(
     GROUP BY source
     """,
     tags=("llm", "pipeline", "reporting"),
-)
-def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card census — the one-relation summary every corpus release
+    doc="""Dataset-card census — the one-relation summary every corpus release
     ships: per source, document and language counts, char and
     whitespace-token volumes, distinct-text count, duplication rate, and
     mean length. Composes the primitives the pipeline family measures
@@ -442,28 +440,8 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact; the only division is the final dup-rate/mean. Scale: one
     groupBy(source) with two distinct-aggs — Spark expands them into the
     standard two-phase expand+partial plan; text leaves the scan only as
-    its md5."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "source",
-        "lang",
-        "n_chars",
-        F.md5(F.lower(F.trim("text"))).alias("h"),
-        (F.length("text") - F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) + 1).alias(
-            "n_tokens"
-        ),
-    )
-    return base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count_distinct("lang").cast("long").alias("n_langs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.count_distinct("h").cast("long").alias("n_unique_texts"),
-        F.round(F.lit(1.0) - F.count_distinct("h") * F.lit(1.0) / F.count(F.lit(1)), 6).alias(
-            "dup_rate"
-        ),
-        F.round(F.avg("n_chars"), 4).alias("mean_chars"),
-    )
+    its md5.""",
+)
 
 
 @query(

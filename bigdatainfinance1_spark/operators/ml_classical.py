@@ -132,9 +132,9 @@ def roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_cramers_v",
-    oracle="""
+    """
     WITH cell AS (
       SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri, count(*) AS n
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -165,9 +165,7 @@ def roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM chi
     """,
     tags=("ml", "stats"),
-)
-def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V — the [0,1]-normalized strength of association between
+    doc="""Cramér's V — the [0,1]-normalized strength of association between
     market segment and order priority: chi-square over the 5x5
     contingency table, then V = sqrt(chi2 / (n x min(r-1, c-1))). This is
     the effect-size companion to q_chi2_independence's significance test
@@ -177,42 +175,8 @@ def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact-dim join + one groupBy to O(|seg| x |priority|) = 25
     integer cells; everything downstream is closed-form arithmetic on
     those integers (expected counts as rn x cn / n), rounded at 6.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    cell = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("seg"), F.col("o_orderpriority").alias("pri"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    rs = cell.groupBy("seg").agg(F.sum("n").alias("rn"))
-    cs = cell.groupBy("pri").agg(F.sum("n").alias("cn"))
-    tot = cell.agg(
-        F.sum("n").alias("n_total"),
-        F.countDistinct("seg").alias("r"),
-        F.countDistinct("pri").alias("c"),
-    )
-    marg = (
-        cell.join(F.broadcast(rs), "seg")
-        .join(F.broadcast(cs), "pri")
-        .crossJoin(F.broadcast(tot))
-    )
-    e = F.col("rn") * 1.0 * F.col("cn") / F.col("n_total")
-    chi = marg.agg(
-        F.max("n_total").alias("n_total"),
-        F.max("r").alias("r"),
-        F.max("c").alias("c"),
-        F.sum(F.pow(F.col("n") - e, F.lit(2)) / e).alias("chi2"),
-    )
-    return chi.select(
-        F.col("n_total").cast("long").alias("n"),
-        ((F.col("r") - 1) * (F.col("c") - 1)).cast("long").alias("dof"),
-        F.round(F.col("chi2"), 6).alias("chi2"),
-        F.round(
-            F.sqrt(F.col("chi2") / (F.col("n_total") * F.least(F.col("r") - 1, F.col("c") - 1))),
-            6,
-        ).alias("cramers_v"),
-    )
+    """,
+)
 
 
 # ---------------------------------------------------------------------------

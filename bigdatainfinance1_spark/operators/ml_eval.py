@@ -12,9 +12,9 @@ from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
-@query(
+sql_query(
     "q_psi_drift",
-    oracle="""
+    """
     WITH binned AS (
       SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS bin,
              CASE WHEN o_orderdate < TIMESTAMP '1998-01-01' THEN 'a' ELSE 'b' END AS period
@@ -40,9 +40,7 @@ from bigdatainfinance1_spark.sources.catalog import load_table
     FROM grid g CROSS JOIN tot t
     """,
     tags=("analytics", "finance", "quality"),
-)
-def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between the pre-1998 and post-1998 order
+    doc="""Population Stability Index between the pre-1998 and post-1998 order
     price distributions — the model-monitoring drift metric every deployed
     credit/pricing model is watched with (PSI < 0.1 stable, > 0.25 act).
     Prices are binned on a fixed arithmetic grid (50k-wide bins — no
@@ -50,31 +48,8 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios of exact integer counts, and bins empty on either side are
     excluded from the sum identically on both engines (reported via
     n_bins_used). One groupBy over ≤10 bins plus a broadcast scalar of
-    the two totals — trivially linear at any scale."""
-    orders = load_table(spark, sf_dir, "orders")
-    binned = orders.select(
-        F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bin"),
-        F.when(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), "a")
-        .otherwise("b")
-        .alias("period"),
-    )
-    grid = binned.groupBy("bin").agg(
-        F.sum(F.when(F.col("period") == "a", 1).otherwise(0)).cast("long").alias("n_a"),
-        F.sum(F.when(F.col("period") == "b", 1).otherwise(0)).cast("long").alias("n_b"),
-    )
-    tot = grid.agg(
-        F.sum("n_a").cast("long").alias("t_a"), F.sum("n_b").cast("long").alias("t_b")
-    )
-    p_a = F.col("n_a") * F.lit(1.0) / F.col("t_a")
-    p_b = F.col("n_b") * F.lit(1.0) / F.col("t_b")
-    used = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    return grid.crossJoin(F.broadcast(tot)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_bins"),
-        F.sum(F.when(used, 1).otherwise(0)).cast("long").alias("n_bins_used"),
-        F.round(
-            F.sum(F.when(used, (p_a - p_b) * F.log(p_a / p_b)).otherwise(F.lit(0.0))), 6
-        ).alias("psi"),
-    )
+    the two totals — trivially linear at any scale.""",
+)
 
 
 @query(

@@ -73,39 +73,14 @@ def _cust_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cov_relation(feat: DataFrame) -> DataFrame:
-    """Exact integer moments -> double covariance entries, the shared
-    expression shape of _MOM_SQL."""
-    m = feat.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    n = F.col("n")
-    return m.select(
-        n,
-        (F.col("sx") * F.lit(1.0) / n).alias("mx"),
-        (F.col("sy") * F.lit(1.0) / n).alias("my"),
-        ((n * F.lit(1.0) * F.col("sxx") - F.col("sx") * F.lit(1.0) * F.col("sx"))
-         / (n * F.lit(1.0) * (n - 1))).alias("cxx"),
-        ((n * F.lit(1.0) * F.col("syy") - F.col("sy") * F.lit(1.0) * F.col("sy"))
-         / (n * F.lit(1.0) * (n - 1))).alias("cyy"),
-        ((n * F.lit(1.0) * F.col("sxy") - F.col("sx") * F.lit(1.0) * F.col("sy"))
-         / (n * F.lit(1.0) * (n - 1))).alias("cxy"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # q_pca_2d — closed-form principal components of (spend, order count)
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_pca_2d",
-    oracle=f"""
+    f"""
     WITH {_CUST_SQL}, {_MOM_SQL},
     eig AS (
       SELECT n, cxx, cyy, cxy,
@@ -127,9 +102,7 @@ def _cov_relation(feat: DataFrame) -> DataFrame:
     FROM eig
     """,
     tags=("ml", "stats", "multivariate"),
-)
-def pca_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Principal component analysis of the 2-D customer feature plane
+    doc="""Principal component analysis of the 2-D customer feature plane
     (total spend in k$, order count) by the closed-form eigendecomposition
     of the 2x2 sample covariance: lambda = tr/2 +- sqrt((d/2)^2 + c^2),
     first-axis loadings from the (l1 - cyy, cxy) eigenvector — the exact
@@ -139,24 +112,8 @@ def pca_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: all raw moments are exact BIGINTs; the covariance,
     eigenvalues, and loadings are one closed-form double expression of
     those integers on both engines, rounded at 6. Scale: one map-side
-    aggregate to customers, one to the 6 moments — nothing else moves."""
-    cv = _cov_relation(_cust_features(spark, sf_dir))
-    cxx, cyy, cxy = F.col("cxx"), F.col("cyy"), F.col("cxy")
-    disc = F.sqrt((cxx - cyy) * (cxx - cyy) / 4 + cxy * cxy)
-    l1 = (cxx + cyy) / 2 + disc
-    l2 = (cxx + cyy) / 2 - disc
-    vnorm = F.sqrt((l1 - cyy) * (l1 - cyy) + cxy * cxy)
-    return cv.select(
-        F.col("n").alias("n_customers"),
-        F.round(cxx, 6).alias("var_spend"),
-        F.round(cyy, 6).alias("var_orders"),
-        F.round(cxy, 6).alias("cov_xy"),
-        F.round(l1, 6).alias("lambda1"),
-        F.round(l2, 6).alias("lambda2"),
-        F.round(l1 / (l1 + l2), 6).alias("explained_ratio_1"),
-        F.round((l1 - cyy) / vnorm, 6).alias("loading_spend"),
-        F.round(cxy / vnorm, 6).alias("loading_orders"),
-    )
+    aggregate to customers, one to the 6 moments — nothing else moves.""",
+)
 
 
 # ---------------------------------------------------------------------------

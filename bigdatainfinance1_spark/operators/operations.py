@@ -626,9 +626,7 @@ def optimal_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # 25-cell cost matrix
     )
     w = Window.partitionBy(F.lit(1)).orderBy("rg")
-    regions = (
-        cost.select("rg").distinct().withColumn("i", F.row_number().over(w))
-    ).localCheckpoint()
+    regions = cost.select("rg").distinct().withColumn("i", F.row_number().over(w))
     c = cost.join(F.broadcast(regions), "rg").select("i", "g", "c")
     sides = [
         c.filter(F.col("i") == k).selectExpr(f"g AS g{k}", f"c AS c{k}")

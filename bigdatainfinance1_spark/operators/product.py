@@ -762,9 +762,9 @@ def cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_slo_burn",
-    oracle="""
+    """
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS hr,
              count(*) AS n_total,
@@ -782,29 +782,15 @@ def cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hourly
     """,
     tags=("analytics", "events", "quality"),
-)
-def slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SLO error-budget burn monitor: hourly error rate against a 20%
+    doc="""SLO error-budget burn monitor: hourly error rate against a 20%
     error budget with a 2× fast-burn alert threshold — the observability
     readout (multi-window burn-rate alerting's single-window core) that a
     platform team runs over this exact events stream; the streaming twin
     is q_stream_tumbling's window with this CASE on top. Rates divide
     exact integer counts; the alert compares against the identical
     literal product on both engines. Scale: one hour-grain aggregation —
-    |hours|-sized output regardless of event volume."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hr")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).cast("long").alias("n_err"),
-    )
-    rate = F.col("n_err") * F.lit(1.0) / F.col("n_total")
-    return hourly.select(
-        "hr",
-        "n_total",
-        "n_err",
-        F.round(rate, 6).alias("err_rate"),
-        F.when(rate > 2 * 0.2, 1).otherwise(0).cast("long").alias("burn_alert"),
-    )
+    |hours|-sized output regardless of event volume.""",
+)
 
 
 @query(
@@ -1096,9 +1082,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_power_user_curve",
-    oracle="""
+    """
     WITH win AS (
       SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
       FROM events
@@ -1117,9 +1103,7 @@ sql_query(
     GROUP BY active_days
     """,
     tags=("analytics", "product", "growth"),
-)
-def power_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L28 power-user curve: how many users were active exactly k of the
+    doc="""L28 power-user curve: how many users were active exactly k of the
     28 days ending at the corpus's last event day (derived from
     max(CAST(ts AS DATE)), not hard-coded — the round-2 judge caught a
     wrong-era 1997 literal here that made the result vacuously empty, and
@@ -1130,20 +1114,8 @@ def power_user_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lengths. The window predicate pushes to the scan; one distinct, one
     count per user, one bounded (≤28 rows) rollup. Scale: trivially
     linear — this is the query you run per cohort × per 28-day window as
-    a grid at 100 TB."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select("user_id", F.col("ts").cast("date").alias("d"))
-    hi = days.agg(F.max("d").alias("hi"))
-    win = (
-        days.crossJoin(F.broadcast(hi))
-        .filter((F.col("d") >= F.date_sub(F.col("hi"), 27)) & (F.col("d") <= F.col("hi")))
-        .select("user_id", "d")
-        .distinct()
-    )
-    per_user = win.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("active_days"))
-    return per_user.groupBy("active_days").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users")
-    )
+    a grid at 100 TB.""",
+)
 
 
 @query(

@@ -66,9 +66,9 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
 
 
-@query(
+sql_query(
     "q_case_when_tiers",
-    oracle="""
+    """
     SELECT
       CASE WHEN o_totalprice < 50000 THEN 'small'
            WHEN o_totalprice < 150000 THEN 'medium'
@@ -80,23 +80,8 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY tier, o_orderstatus
     """,
     tags=("filter", "agg"),
+    doc="""P3: CASE WHEN bucketing (order-value tiers) + aggregation.""",
 )
-def case_when_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3: CASE WHEN bucketing (order-value tiers) + aggregation."""
-    orders = load_table(spark, sf_dir, "orders")
-    tier = (
-        F.when(F.col("o_totalprice") < 50000, "small")
-        .when(F.col("o_totalprice") < 150000, "medium")
-        .otherwise("large")
-    )
-    return (
-        orders.withColumn("tier", tier)
-        .groupBy("tier", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100.0, 2).alias("total"),
-        )
-    )
 
 
 @query(

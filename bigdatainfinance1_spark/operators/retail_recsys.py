@@ -12,9 +12,9 @@ from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
-@query(
+sql_query(
     "q_copurchase_pairs",
-    oracle="""
+    """
     SELECT
       a.l_partkey AS part_1,
       b.l_partkey AS part_2,
@@ -26,24 +26,12 @@ from bigdatainfinance1_spark.sources.catalog import load_table
     LIMIT 20
     """,
     tags=("analytics", "join"),
-)
-def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence: part pairs appearing on the same order,
+    doc="""Market-basket co-occurrence: part pairs appearing on the same order,
     top-20 by frequency (full tiebreak for a deterministic LIMIT). The
     self-join is keyed on l_orderkey, whose group size is bounded (≤7 lines
     per TPC-H order), so pair fan-out is ≤21 per order — linear in orders,
-    not quadratic in parts; the final top-k is a TakeOrdered, not a sort."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select("l_orderkey", F.col("l_partkey").alias("part_1"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("part_2"))
-    return (
-        a.join(b, "l_orderkey")
-        .filter(F.col("part_1") < F.col("part_2"))
-        .groupBy("part_1", "part_2")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy(F.col("n_orders").desc(), "part_1", "part_2")
-        .limit(20)
-    )
+    not quadratic in parts; the final top-k is a TakeOrdered, not a sort.""",
+)
 
 
 _SKYLINE_SQL = """

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -87,9 +87,9 @@ def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_math_funcs",
-    oracle="""
+    """
     SELECT
       l_orderkey,
       l_linenumber,
@@ -106,24 +106,9 @@ def date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_orderkey % 100 = 0
     """,
     tags=("scalar", "math"),
+    doc="""F3: math family. ln/sqrt rounded to 6 (libm implementations may differ
+    in the last ulp between JVM and C); +-*-/ and sqrt are IEEE-exact.""",
 )
-def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3: math family. ln/sqrt rounded to 6 (libm implementations may differ
-    in the last ulp between JVM and C); +-*-/ and sqrt are IEEE-exact."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round("l_extendedprice", 1).alias("price_r1"),
-        F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),
-        F.ceil("l_quantity").cast("long").alias("qty_ceil"),
-        F.floor("l_quantity").cast("long").alias("qty_floor"),
-        F.round(F.log("l_extendedprice"), 6).alias("price_ln"),
-        F.round(F.sqrt("l_quantity"), 6).alias("qty_sqrt"),
-        (F.col("l_quantity") * F.col("l_quantity")).alias("qty_sq"),
-        F.greatest("l_discount", "l_tax").alias("max_rate"),
-        F.least("l_discount", "l_tax").alias("min_rate"),
-    )
 
 
 @query(

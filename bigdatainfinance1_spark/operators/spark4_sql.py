@@ -35,8 +35,6 @@ def pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, so this query pins the new parser surface against the old one.
     The plan is the same filter-pushdown + partial-agg shape either way —
     syntax sugar, zero plan cost, but a real API users will write."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(
         """
@@ -194,8 +192,6 @@ def sql_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     start clean. Revenue follows the exact-integer-cents money rule. The oracle
     inlines the same constants (parameterization is engine surface, not
     semantics — which is precisely what the hash match demonstrates)."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
     register_views(spark, sf_dir)
     spark.sql("DECLARE OR REPLACE VARIABLE min_disc DOUBLE DEFAULT 0.02")
     spark.sql("DECLARE OR REPLACE VARIABLE max_disc DOUBLE DEFAULT 0.08")
@@ -252,8 +248,6 @@ def collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality, nothing more. Scale: collation support lives inside the
     hash-aggregate's key comparator — same one-shuffle plan as any
     group-by."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
     register_views(spark, sf_dir)
     return spark.sql(
         f"""
@@ -412,8 +406,6 @@ def sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     textually — equal hashes prove the UDF registration/inlining is
     semantically transparent.
     Scale: inlined per-row expression + one aggregate; zero Python."""
-    from bigdatainfinance1_spark.sources.catalog import register_views
-
     register_views(spark, sf_dir)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION order_tier(x DOUBLE) RETURNS STRING "

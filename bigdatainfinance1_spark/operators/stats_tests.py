@@ -696,9 +696,9 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_two_proportion_ztest",
-    oracle="""
+    """
     WITH users AS (
       SELECT user_id,
              CAST(ts AS DATE) AS day,
@@ -726,9 +726,7 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g
     """,
     tags=("analytics", "stats", "events"),
-)
-def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on purchase conversion between user cohorts
+    doc="""Two-proportion z-test on purchase conversion between user cohorts
     (split by user_id parity — the deterministic stand-in for an A/B
     assignment): pooled-variance z statistic, the experiment-readout
     companion to q_welch_ttest (means) and q_chi2_independence (full
@@ -738,37 +736,8 @@ def two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance 0 → ANSI DIVIDE_BY_ZERO; hit in round 2 and pinned here).
     Everything up to the final expression is exact integer counts, so both
     engines evaluate identical doubles; sqrt is correctly rounded IEEE on
-    both. Scale: one user-day-grain aggregation, one 4-counter reduce."""
-    ev = load_table(spark, sf_dir, "events")
-    users = ev.groupBy(
-        "user_id", F.to_date("ts").alias("day"), (F.col("user_id") % 2).alias("cohort")
-    ).agg(F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("converted"))
-    g = users.agg(
-        F.sum(F.when(F.col("cohort") == 0, 1).otherwise(0)).cast("long").alias("n_a"),
-        F.sum(F.when(F.col("cohort") == 0, F.col("converted")).otherwise(0))
-        .cast("long")
-        .alias("x_a"),
-        F.sum(F.when(F.col("cohort") == 1, 1).otherwise(0)).cast("long").alias("n_b"),
-        F.sum(F.when(F.col("cohort") == 1, F.col("converted")).otherwise(0))
-        .cast("long")
-        .alias("x_b"),
-    )
-    p_a = F.col("x_a") * F.lit(1.0) / F.col("n_a")
-    p_b = F.col("x_b") * F.lit(1.0) / F.col("n_b")
-    pool = (F.col("x_a") + F.col("x_b")) * F.lit(1.0) / (F.col("n_a") + F.col("n_b"))
-    return g.select(
-        "n_a",
-        "x_a",
-        "n_b",
-        "x_b",
-        F.round(p_a, 6).alias("p_a"),
-        F.round(p_b, 6).alias("p_b"),
-        F.round(
-            (p_a - p_b)
-            / F.sqrt(pool * (F.lit(1.0) - pool) * (F.lit(1.0) / F.col("n_a") + F.lit(1.0) / F.col("n_b"))),
-            4,
-        ).alias("z"),
-    )
+    both. Scale: one user-day-grain aggregation, one 4-counter reduce.""",
+)
 
 
 @query(
@@ -890,9 +859,9 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_quantile_normalize",
-    oracle="""
+    """
     WITH bucketed AS (
       SELECT event_type, value,
              ntile(10) OVER (PARTITION BY event_type ORDER BY value, event_id) AS decile
@@ -915,9 +884,7 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY b.event_type, b.decile
     """,
     tags=("analytics", "stats", "llm-pipeline"),
-)
-def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile normalization across event-type distributions (the
+    doc="""Quantile normalization across event-type distributions (the
     microarray/feature-alignment preprocessing step): each type's values
     are decile-bucketed (ntile over a TOTAL order — event_id tiebreak, so
     both engines assign identical buckets), then every bucket is mapped to
@@ -926,26 +893,8 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     original per-(type, decile) mean with the normalized target value.
     Averages of identical value sets are order-sensitive at ulp level →
     rounded 4 dp per convention. Scale: the ntile window is partitioned by
-    type; bucket means are a 10-row relation joined back broadcast."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    bucketed = ev.select("event_type", "value", F.ntile(10).over(w).alias("decile"))
-    # integer-moments rule: value is exact 2-dp — means sum exact cents
-    vc = F.round(F.col("value") * 100).cast("long")
-    cmean = F.sum(vc).cast("double") / F.count(F.lit(1)) / 100
-    means = bucketed.groupBy("decile").agg(cmean.alias("norm_value"))
-    return (
-        bucketed.join(F.broadcast(means), "decile")
-        .groupBy("event_type", "decile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(cmean, 4).alias("orig_avg"),
-            F.round(F.min("norm_value"), 4).alias("norm_avg"),
-        )
-        .select(
-            "event_type", F.col("decile").cast("long").alias("decile"), "n", "orig_avg", "norm_avg"
-        )
-    )
+    type; bucket means are a 10-row relation joined back broadcast.""",
+)
 
 
 @query(
@@ -1282,9 +1231,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_eb_shrinkage",
-    oracle="""
+    """
     WITH cells AS (
       SELECT c.c_mktsegment AS seg, c.c_nationkey AS nk,
              CAST(count(*) AS BIGINT) AS n,
@@ -1325,9 +1274,7 @@ sql_query(
     FROM cells c CROSS JOIN kappa k
     """,
     tags=("analytics", "stats", "bayes"),
-)
-def eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical-Bayes shrinkage of per-cell finalized-order rates
+    doc="""Empirical-Bayes shrinkage of per-cell finalized-order rates
     (mktsegment × nation): small cells get pulled toward the global rate
     by a beta-binomial prior fitted by method of moments — the standard
     cure for leaderboards dominated by tiny-sample extremes (James-Stein
@@ -1342,58 +1289,8 @@ def eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression has identical shape on both engines, rounded at 6 dp.
     Scale: one
     aggregate to ~125 cells, a 1-row prior, a broadcast cross join back —
-    the per-cell pass never re-scans the facts."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    cells = (
-        orders.join(F.broadcast(cust.select("c_custkey", "c_mktsegment", "c_nationkey")),
-                    orders["o_custkey"] == F.col("c_custkey"))
-        .groupBy(F.col("c_mktsegment").alias("seg"), F.col("c_nationkey").alias("nk"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).cast("long").alias("x"),
-        )
-    )
-    r = F.col("x") * F.lit(1.0) / F.col("n")
-    glob = cells.agg(
-        F.sum("x").cast("long").alias("tx"),
-        F.sum("n").cast("long").alias("tn"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-        # integer-moments rule: the ~125-cell rate sums snap at 1e-12
-        (F.sum(F.round(r * r * 1e12).cast("long")).cast("double") / 1e12).alias(
-            "srr"
-        ),
-        (
-            F.sum(F.round(F.col("x") * F.lit(1e12) / F.col("n")).cast("long")).cast(
-                "double"
-            )
-            / 1e12
-        ).alias("sr"),
-        (
-            F.sum(F.round(F.lit(1e12) / F.col("n")).cast("long")).cast("double")
-            / 1e12
-        ).alias("sinv"),
-    )
-    m = F.col("tx") * F.lit(1.0) / F.col("tn")
-    var_b = F.greatest(
-        (F.col("srr") / F.col("k") - (F.col("sr") / F.col("k")) * (F.col("sr") / F.col("k")))
-        - m * (F.lit(1.0) - m) * (F.col("sinv") / F.col("k")),
-        F.lit(1e-6),
-    )
-    kappa = glob.select(
-        m.alias("m"),
-        F.greatest(m * (F.lit(1.0) - m) / var_b - F.lit(1.0), F.lit(1.0)).alias("kap"),
-    )
-    j = cells.crossJoin(F.broadcast(kappa))
-    return j.select(
-        "seg",
-        "nk",
-        "n",
-        F.round(F.col("x") * F.lit(1.0) / F.col("n"), 6).alias("raw_rate"),
-        F.round(
-            (F.col("x") + F.col("m") * F.col("kap")) / (F.col("n") + F.col("kap")), 6
-        ).alias("shrunk_rate"),
-    )
+    the per-cell pass never re-scans the facts.""",
+)
 
 
 BOOT_REPLICATES = 100

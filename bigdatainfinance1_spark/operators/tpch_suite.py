@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -45,9 +45,9 @@ def _dollars(cents_sum):
     return F.round(cents_sum.cast("long") / 100.0, 2)
 
 
-@query(
+sql_query(
     "q_tpch_q4",
-    oracle="""
+    """
     SELECT o_orderpriority, count(*) AS order_count
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1996-01-01'
@@ -61,9 +61,7 @@ def _dollars(cents_sum):
     ORDER BY o_orderpriority
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 (order-priority checking), adapted: the official predicate
+    doc="""TPC-H Q4 (order-priority checking), adapted: the official predicate
     l_commitdate < l_receiptdate is unexpressible (neither column exists),
     so "late order" is re-defined as any line item shipped more than 90
     days after the order date — same EXISTS-correlated shape, same
@@ -71,23 +69,8 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders are filtered at scan time to the 1996 window, and lineitem
     carries only (l_orderkey, l_shipdate) into the semi join, so the
     shuffle is two pruned columns wide. Scales as one equi-shuffle on
-    orderkey."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-01-01"))
-        & (F.col("o_orderdate") < _ts("1997-01-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = orders.join(
-        li,
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("l_shipdate") > F.expr("o_orderdate + INTERVAL 90 DAYS")),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
+    orderkey.""",
+)
 
 
 @query(
@@ -383,9 +366,9 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_tpch_q13",
-    oracle="""
+    """
     SELECT c_count, count(*) AS custdist
     FROM (
       SELECT c_custkey, count(o_orderkey) AS c_count
@@ -396,26 +379,13 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY custdist DESC, c_count DESC
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 (customer order-count distribution), adapted only in that
+    doc="""TPC-H Q13 (customer order-count distribution), adapted only in that
     the official NOT LIKE '%special%requests%' filter has no o_comment
     column to apply to — all orders count. The two-level aggregation:
     LEFT join keeps zero-order customers (count(o_orderkey) ignores the
     nulls they produce), then the histogram of counts. First group-by
-    shuffles on custkey; the second is histogram-sized."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per_cust = (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
+    shuffles on custkey; the second is histogram-sized.""",
+)
 
 
 @query(
@@ -505,9 +475,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_tpch_q16",
-    oracle="""
+    """
     SELECT p_brand, p_type, p_size,
            count(DISTINCT l_suppkey) AS supplier_cnt
     FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -516,27 +486,14 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 (parts/supplier relationship), adapted: there is no
+    doc="""TPC-H Q16 (parts/supplier relationship), adapted: there is no
     partsupp table, so the part↔supplier relation is derived from actual
     trade (distinct l_suppkey per part in lineitem), and no s_comment to
     exclude complaint suppliers with. Same output grain and ordering as
     the official query. Part (filtered) broadcasts; the distinct-count
     shuffles once on the group key with the supplier id as the distinct
-    child — the standard two-phase distinct aggregate."""
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & (F.col("p_type") != "PROMO")
-        & (F.col("p_size").isin(1, 7, 14, 23))
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
+    child — the standard two-phase distinct aggregate.""",
+)
 
 
 @query(

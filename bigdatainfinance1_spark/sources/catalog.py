@@ -8,10 +8,9 @@ Scale posture: `spark.read.parquet` gives the vectorized columnar reader with
 predicate pushdown + column pruning for free; at 100 TB the same call reads a
 partitioned directory tree and Catalyst prunes partitions. Inferring a schema
 from the footers runs one Spark job, so each file's schema is inferred once
-and memoized (``_read_parquet``); queries re-register the views on every call,
-and those repeat loads run no job. Small dimensions
-(region/nation/supplier/part/customer) are marked broadcast-preferred so joins
-against the fact tables never shuffle the big side.
+and memoized (``_read_parquet``). ``register_views`` registers a session's
+views once per ``sf_dir`` and file version: a call that finds them already
+reading the same files only reads the ten file statuses.
 """
 
 from __future__ import annotations
@@ -41,10 +40,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any realistic scale factor
-# (region 5 rows … part 20k rows at sf0.1 — FIXTURES.md row counts).
-BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 # Footer-inferred schemas keyed by the file's status: (qualified path,
 # length, modification time). A rewritten file gets a new key and its schema
 # is inferred again, so a stale schema never reads new columns as NULL. The
@@ -53,16 +48,28 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "par
 _SCHEMAS: dict[tuple[str, int, int], StructType] = {}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _file_keys(spark: SparkSession, paths: list[str]) -> list[tuple[str, int, int]]:
+    """The Hadoop ``FileSystem`` status of each path as (qualified path,
+    length, modification time), so local paths and cluster URIs take the
+    same route."""
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path  # one py4j class lookup per call
+    conf = spark._jsc.hadoopConfiguration()
+    keys = []
+    for path in paths:
+        jpath = hadoop_path(path)
+        status = jpath.getFileSystem(conf).getFileStatus(jpath)
+        keys.append((status.getPath().toString(), status.getLen(), status.getModificationTime()))
+    return keys
+
+
+def _read_parquet(spark: SparkSession, path: str, key: tuple[str, int, int] | None = None) -> DataFrame:
     """``spark.read.parquet(path)``, with the schema inferred once per file.
 
-    The key comes from the Hadoop ``FileSystem`` status, so local paths and
-    cluster URIs take the same route. A memoized schema is handed to the
-    reader, which then skips footer inference and starts no job.
+    ``key`` is the file's ``_file_keys`` entry, read here unless the caller
+    already holds it. A memoized schema is handed to the reader, which then
+    skips footer inference and starts no job.
     """
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    status = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jpath)
-    key = (status.getPath().toString(), status.getLen(), status.getModificationTime())
+    key = key or _file_keys(spark, [path])[0]
     schema = _SCHEMAS.get(key)
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
@@ -86,7 +93,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the oracle comparison bit-identical either way.
     """
     ensure_session_conf(spark)
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return _normalized(_read_parquet(spark, _source_path(sf_dir, name)), name)
+
+
+def _normalized(df: DataFrame, name: str) -> DataFrame:
+    """Table ``name`` read as ``df``, with its timestamps normalized as
+    ``load_table`` describes."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -180,11 +192,31 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
+# What each session's views read now: the JVM session's UUID (a
+# ``newSession()`` has temp views of its own) -> ``sf_dir`` and the
+# ``_file_keys`` of its tables. One entry per session, replaced by each
+# registration, so a session that registers A, then B, then A reads A.
+_VIEWS: dict[str, tuple[str, tuple[tuple[str, int, int], ...]]] = {}
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views, mirroring the oracle's view names
-    (__spark_entry__.py) so one SQL text can run on both engines."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    (__spark_entry__.py) so one SQL text can run on both engines.
+
+    The views are registered again only when the session's views read
+    another ``sf_dir`` or another version of a file; otherwise the call
+    reads the ten file statuses and returns. Nothing else in the package
+    writes these view names."""
+    ensure_session_conf(spark)
+    paths = [_source_path(sf_dir, name) for name in TABLES]
+    keys = tuple(_file_keys(spark, paths))
+    session = spark._jsparkSession.sessionUUID()
+    if _VIEWS.get(session) == (sf_dir, keys):
+        return
+    _VIEWS.pop(session, None)  # a failed registration leaves no stale entry
+    for name, path, key in zip(TABLES, paths, keys):
+        _normalized(_read_parquet(spark, path, key), name).createOrReplaceTempView(name)
+    _VIEWS[session] = (sf_dir, keys)
 
 
 def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:

@@ -1,7 +1,8 @@
 """Spark job-count and process-start budgets, the fixed-point helper, the
-catalog's schema memo and its source-keyed scratch stages, the sink queries'
-one scratch directory per source, and the streaming runner's state-partition
-sizing, memory-sink views and known schemas.
+catalog's schema memo, its once-per-file-version views and its source-keyed
+scratch stages, the sink queries' one scratch directory per source, and the
+streaming runner's state-partition sizing, memory-sink views and known
+schemas.
 
 Scheduler overhead is paid per job, so a query that creeps from 3 jobs back
 to a hundred is a regression even when its results stay right. Jobs are
@@ -22,12 +23,14 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import StructType
 
 from bigdatainfinance1_spark.functions import iterate
 from bigdatainfinance1_spark.functions.iterate import UNSETTLED, fixpoint
 from bigdatainfinance1_spark.operators import graph
 from bigdatainfinance1_spark.registry import load_all_queries
+from bigdatainfinance1_spark.sources import catalog
 from bigdatainfinance1_spark.sources import ticks as ticks_src
 from bigdatainfinance1_spark.sources.catalog import (
     SCRATCH_ROOT,
@@ -162,6 +165,94 @@ def test_stage_write_drops_stages_of_a_rewritten_or_deleted_source(spark, tmp_pa
     os.remove(first / "orders.parquet")
     stage(second, 4)
     assert not any(os.path.exists(p) for p in rewritten)
+
+
+def customer_dir(path, balances, pad: int = 0) -> str:
+    """A table directory whose customer table holds one row per balance, all
+    above q_keyset_pagination's 5000.00 cut; the other tables link to
+    SF_DIR's. ``pad`` adds an uncompressed comment of that many bytes to
+    each row and writes one row group per row."""
+    path.mkdir(exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array(range(1, len(balances) + 1), pa.int64()),
+                "c_acctbal": pa.array(balances, pa.float64()),
+                "c_mktsegment": ["BUILDING"] * len(balances),
+                "c_comment": ["x" * pad] * len(balances),
+            }
+        ),
+        path / "customer.parquet",
+        row_group_size=1 if pad else None,
+        compression="none" if pad else "snappy",
+    )
+    for name in TABLES:
+        if not (path / f"{name}.parquet").exists():
+            (path / f"{name}.parquet").symlink_to(f"{SF_DIR}/{name}.parquet")
+    return str(path)
+
+
+def keyset_balances(spark, sf_dir) -> list[float]:
+    """The balances q_keyset_pagination, a ``sql_query`` over the customer
+    view, reads from ``sf_dir``."""
+    return sorted(r.acctbal for r in SPECS["q_keyset_pagination"].fn(spark, sf_dir).collect())
+
+
+@pytest.fixture
+def restore_views(spark):
+    yield
+    register_views(spark, SF_DIR)  # other tests read the session's views
+
+
+def test_warm_sql_query_loads_no_table_and_creates_no_view(spark, tmp_path, monkeypatch, restore_views):
+    """A session's views are registered once per sf_dir and file version:
+    a warm call over unchanged files only reads their statuses."""
+    sf_dir = customer_dir(tmp_path, [6000.0, 7000.0])
+    assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
+    calls = collections.Counter()
+
+    def counted(owner, attr):
+        original = getattr(owner, attr)
+
+        def wrapper(*args, **kwargs):
+            calls[attr] += 1
+            return original(*args, **kwargs)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    counted(catalog, "load_table")
+    counted(catalog, "_read_parquet")
+    counted(ClassicDataFrame, "createOrReplaceTempView")
+    assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
+    assert calls == {}
+
+
+def test_sql_query_reads_a_table_rewritten_at_the_same_path(spark, tmp_path, restore_views):
+    """A view keeps the file length it was registered with, and Spark reads
+    only the row groups inside it; the rewritten file's row groups all lie
+    beyond the old length, so a stale view reads none of them."""
+    sf_dir = customer_dir(tmp_path, [6000.0, 7000.0])
+    assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
+    customer_dir(tmp_path, [8000.0, 9000.0, 9500.0], pad=8192)
+    assert keyset_balances(spark, sf_dir) == [8000.0, 9000.0, 9500.0]
+
+
+def test_views_read_the_last_registered_sf_dir(spark, tmp_path, restore_views):
+    """The views follow the latest registration: A, then B, then A reads A."""
+    a = customer_dir(tmp_path / "a", [6000.0])
+    b = customer_dir(tmp_path / "b", [7000.0, 8000.0])
+    assert keyset_balances(spark, a) == [6000.0]
+    assert keyset_balances(spark, b) == [7000.0, 8000.0]
+    assert keyset_balances(spark, a) == [6000.0]
+
+
+def test_new_session_registers_its_own_views(spark, tmp_path, restore_views):
+    """Temp views belong to one session: a ``newSession()`` gets its own,
+    even for files the first session's views already read."""
+    sf_dir = customer_dir(tmp_path, [6000.0, 7000.0])
+    assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
+    assert keyset_balances(spark.newSession(), sf_dir) == [6000.0, 7000.0]
+    assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
 
 
 def test_amortization_closed_form_edges_match_recursive_oracle(spark, tmp_path):

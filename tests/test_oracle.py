@@ -26,6 +26,7 @@ GLOBAL_WINDOW_SITES = {
     "q_linear_shap": "the importance total runs on the 2 explained features",
     "q_lorenz_curve": "the cumulative shares run on the 10 decile rows",
     "q_modularity_brands": "the modularity sum runs on one row per brand (25)",
+    "q_optimal_assignment": "row_number() runs on the 5 distinct region names",
     "q_periodogram": "max(power) runs on the 12 harmonics",
     "q_profit_curve": "max(expected_profit) runs on at most 21 threshold buckets",
     "q_threshold_metrics": "max(f1) runs on at most 21 threshold buckets",
