@@ -29,6 +29,7 @@ from __future__ import annotations
 import gc
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -111,7 +112,9 @@ def quiesce(spark) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    # a directory named sf<number> records that scale factor, any other -1.0
+    m = re.search(r"sf(\d+(?:\.\d+)?)$", sf_dir.rstrip("/"))
+    sf = float(m.group(1)) if m else -1.0
     specs = load_all_queries()
     names = sys.argv[1:] or HEADLINE
     unknown = [n for n in names if n not in specs]

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from bench import materialize, quiesce
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.session import get_spark
-from bigdatainfinance1_spark.sources.catalog import TABLES, load_table
+from bigdatainfinance1_spark.sources.catalog import TABLES, load_table, register_views
 
 BASE_SF = "/root/testdata/sf0.1"
 # SPARK_GRAFT_SCALE_COPIES=100 builds a ~sf10 stage (100x replication) for
@@ -99,7 +99,14 @@ def main() -> None:
 
         shutil.rmtree(STAGE, ignore_errors=True)
     build_stage(spark)
+    # The stage's calls run on a session of their own: a session's views
+    # read one sf_dir, so alternating the two on one session would register
+    # all ten views again in every sql_query call. Both register before the
+    # loop, so no timed call pays it.
+    staged = spark.newSession()
     specs["q_pricing_summary"].fn(spark, BASE_SF).limit(1).collect()  # warmup
+    register_views(spark, BASE_SF)
+    register_views(staged, STAGE)
 
     for name in picked or specs:
         t0 = time.perf_counter()
@@ -107,7 +114,7 @@ def main() -> None:
         t_base = time.perf_counter() - t0
         quiesce(spark)
         t0 = time.perf_counter()
-        materialize(specs[name].fn(spark, STAGE))
+        materialize(specs[name].fn(staged, STAGE))
         t_10x = time.perf_counter() - t0
         quiesce(spark)
         print(

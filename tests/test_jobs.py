@@ -255,6 +255,26 @@ def test_new_session_registers_its_own_views(spark, tmp_path, restore_views):
     assert keyset_balances(spark, sf_dir) == [6000.0, 7000.0]
 
 
+def test_sessions_taking_turns_on_two_sf_dirs_stay_warm(spark, tmp_path, monkeypatch, restore_views):
+    """scale_check.py's pattern: the session on one sf_dir and a
+    ``newSession()`` on another, called in turns. Once each has registered
+    its views, no call creates a view."""
+    a = customer_dir(tmp_path / "a", [6000.0])
+    b = customer_dir(tmp_path / "b", [7000.0, 8000.0])
+    staged = spark.newSession()
+    assert keyset_balances(spark, a) == [6000.0]
+    assert keyset_balances(staged, b) == [7000.0, 8000.0]
+    views = []
+    create = ClassicDataFrame.createOrReplaceTempView
+    monkeypatch.setattr(
+        ClassicDataFrame, "createOrReplaceTempView", lambda df, name: views.append(name) or create(df, name)
+    )
+    for _ in range(2):
+        assert keyset_balances(spark, a) == [6000.0]
+        assert keyset_balances(staged, b) == [7000.0, 8000.0]
+    assert views == []
+
+
 def test_amortization_closed_form_edges_match_recursive_oracle(spark, tmp_path):
     """Closed form vs the oracle's recursive CTE on principals at the edges
     of floor(P / 12): P < 12, P % 12 == 0, P % 12 == 11 (via a floor-average
