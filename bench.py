@@ -32,9 +32,13 @@ import os
 import re
 import sys
 import time
+from functools import partial
 from pathlib import Path
+from typing import Callable
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from pyspark.sql import DataFrame
 
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.session import get_spark
@@ -110,6 +114,47 @@ def quiesce(spark) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warmup: JVM + catalog + one tiny action, then quiesce so any
+    preceding process activity (such as an oracle sweep run just before)
+    settles before the first timed pass."""
+    load_all_queries()["q_pricing_summary"].fn(spark, sf_dir).limit(1).collect()
+    quiesce(spark)
+    time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "3")))
+
+
+def sample(spark, calls: dict[str, Callable[[], DataFrame]]) -> dict[str, list[float]]:
+    """Time every call once per pass, SPARK_GRAFT_BENCH_RUNS (default 5)
+    interleaved passes: each sample builds the call's DataFrame and
+    materializes it, and the session is quiesced after every sample."""
+    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
+    samples: dict[str, list[float]] = {key: [] for key in calls}
+    for _ in range(runs):
+        for key, call in calls.items():
+            t0 = time.perf_counter()
+            materialize(call())
+            samples[key].append(round(time.perf_counter() - t0, 3))
+            quiesce(spark)
+    return samples
+
+
+def quantile(sorted_ts: list[float], q: float) -> float:
+    # linear interpolation (numpy default) over the sorted samples
+    idx = q * (len(sorted_ts) - 1)
+    lo, hi = int(idx), min(int(idx) + 1, len(sorted_ts) - 1)
+    return sorted_ts[lo] + (sorted_ts[hi] - sorted_ts[lo]) * (idx - lo)
+
+
+def dispersion(ts: list[float]) -> dict[str, float]:
+    """min, median and interquartile range of one call's samples."""
+    s = sorted(ts)
+    return {
+        "min": s[0],
+        "median": round(quantile(s, 0.5), 3),
+        "iqr": round(quantile(s, 0.75) - quantile(s, 0.25), 3),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # a directory named sf<number> records that scale factor, any other -1.0
@@ -122,39 +167,13 @@ def main() -> None:
         sys.exit(f"bench: unknown query name(s): {', '.join(unknown)}")
     r1_names = [n for n in names if n in HEADLINE[:R1_HEADLINE_N]]
     spark = get_spark(app_name="bigdatainfinance1_spark-bench")
-
-    # untimed warmup: JVM + catalog + one tiny action, then quiesce so any
-    # preceding process activity (the driver runs bench right after a
-    # 20-minute oracle sweep) settles before the first timed pass
-    specs["q_pricing_summary"].fn(spark, sf_dir).limit(1).collect()
-    quiesce(spark)
-    time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "3")))
-
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    samples: dict[str, list[float]] = {name: [] for name in names}
-    for r in range(runs):
-        for name in names:
-            t0 = time.perf_counter()
-            materialize(specs[name].fn(spark, sf_dir))
-            samples[name].append(round(time.perf_counter() - t0, 3))
-            quiesce(spark)
-
-    def quantile(sorted_ts: list[float], q: float) -> float:
-        # linear interpolation (numpy default) over the sorted samples
-        idx = q * (len(sorted_ts) - 1)
-        lo, hi = int(idx), min(int(idx) + 1, len(sorted_ts) - 1)
-        return sorted_ts[lo] + (sorted_ts[hi] - sorted_ts[lo]) * (idx - lo)
-
-    timings: dict[str, float] = {}
-    dispersion: dict[str, dict[str, float]] = {}
-    for name, ts in samples.items():
-        s = sorted(ts)
-        timings[name] = round(quantile(s, 0.5), 3)
-        dispersion[name] = {
-            "min": s[0],
-            "median": timings[name],
-            "iqr": round(quantile(s, 0.75) - quantile(s, 0.25), 3),
-        }
+    warm_up(spark, sf_dir)
+    samples = sample(
+        spark, {name: partial(specs[name].fn, spark, sf_dir) for name in names}
+    )
+    runs = len(samples[names[0]])
+    spread = {name: dispersion(ts) for name, ts in samples.items()}
+    timings = {name: d["median"] for name, d in spread.items()}
     total = round(sum(timings.values()), 3)
     r1_total = round(sum(timings[n] for n in r1_names), 3)
     # Contention forensics: host load arrives in WAVES that inflate whole
@@ -165,8 +184,8 @@ def main() -> None:
     pass_totals = [
         round(sum(samples[n][r] for n in names), 3) for r in range(runs)
     ]
-    total_min = round(sum(d["min"] for d in dispersion.values()), 3)
-    r1_total_min = round(sum(dispersion[n]["min"] for n in r1_names), 3)
+    total_min = round(sum(d["min"] for d in spread.values()), 3)
+    r1_total_min = round(sum(spread[n]["min"] for n in r1_names), 3)
     payload = json.dumps(
         {
             "metric": "headline_suite_seconds",
@@ -174,7 +193,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "samples": samples,
-            "dispersion": dispersion,
+            "dispersion": spread,
             "runs_per_query": runs,
             "aggregation": "median",
             "sf": sf,

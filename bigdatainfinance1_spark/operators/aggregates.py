@@ -208,36 +208,23 @@ def collect_set_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_conditional_agg",
-    oracle="""
+    """
     SELECT
       o_orderstatus,
       count(*)                                                              AS n_orders,
       CAST(sum(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS BIGINT) AS n_urgent,
       round(sum(CAST(round((CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0.0 END) * 100) AS BIGINT)) / 100e0, 2)
                                                                             AS urgent_total,
-      round(sum(CAST(round((CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0.0 END) * 100) AS BIGINT)) * 1.0
-            / sum(CAST(round(o_totalprice * 100) AS BIGINT)), 6)            AS urgent_share
+      CAST(round(sum(CAST(round((CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0.0 END) * 100) AS BIGINT)) * 1.0
+            / sum(CAST(round(o_totalprice * 100) AS BIGINT)), 6) AS DOUBLE) AS urgent_share
     FROM orders
     GROUP BY o_orderstatus
     """,
     tags=("agg",),
+    doc="""A10: sum(CASE WHEN …) share-of-segment metrics.""",
 )
-def conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10: sum(CASE WHEN …) share-of-segment metrics."""
-    orders = load_table(spark, sf_dir, "orders")
-    is_urgent = F.col("o_orderpriority") == "1-URGENT"
-    urgent_price = F.when(is_urgent, F.col("o_totalprice")).otherwise(F.lit(0.0))
-    # exact integer cents on both sides of the ratio (round-6 emission rule)
-    urgent_cents = F.sum(F.round(urgent_price * 100).cast("long"))
-    total_cents = F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-    return orders.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.when(is_urgent, 1).otherwise(0)).alias("n_urgent"),
-        F.round(urgent_cents / 100.0, 2).alias("urgent_total"),
-        F.round(urgent_cents * F.lit(1.0) / total_cents, 6).alias("urgent_share"),
-    )
 
 
 _GROUPING_SETS_SQL = """

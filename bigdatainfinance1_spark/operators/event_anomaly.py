@@ -559,9 +559,9 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_l28_engagement",
-    oracle="""
+    """
     WITH anchor AS (SELECT max(CAST(ts AS DATE)) AS d28 FROM events),
     act AS (
       SELECT e.user_id, count(DISTINCT CAST(e.ts AS DATE)) AS active_days
@@ -572,7 +572,7 @@ sql_query(
     tot AS (SELECT count(*) AS n_users FROM act)
     SELECT CAST(act.active_days AS BIGINT) AS active_days,
            CAST(count(*) AS BIGINT) AS n_users,
-           round(count(*) * 1.0 / tot.n_users, 6) AS share,
+           CAST(round(count(*) * 1.0 / tot.n_users, 6) AS DOUBLE) AS share,
            CASE WHEN act.active_days >= 15 THEN 'core'
                 WHEN act.active_days >= 5 THEN 'regular'
                 ELSE 'casual' END AS tier
@@ -581,9 +581,7 @@ sql_query(
     ORDER BY active_days
     """,
     tags=("events", "analytics", "product"),
-)
-def l28_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The L28 engagement histogram: for each user, the count of
+    doc="""The L28 engagement histogram: for each user, the count of
     distinct active days in the trailing 28-day window anchored at the
     corpus's last event date, bucketed into the classic
     casual (1-4) / regular (5-14) / core (15-28) tiers — THE
@@ -598,31 +596,8 @@ def l28_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded at 6. (The synthetic corpus is dense — every user lands in
     the core tier with 25-28 active days; the thresholds keep their
     standard industry semantics rather than being tuned to split this
-    particular corpus.)"""
-    ev = load_table(spark, sf_dir, "events")
-    anchor = ev.agg(F.max(F.to_date("ts")).alias("d28"))
-    act = (
-        ev.crossJoin(F.broadcast(anchor))
-        .filter(F.to_date("ts") > F.date_sub(F.col("d28"), 28))
-        .groupBy("user_id")
-        .agg(F.countDistinct(F.to_date("ts")).alias("active_days"))
-    )
-    tot = act.agg(F.count(F.lit(1)).alias("n_users"))
-    return (
-        act.crossJoin(F.broadcast(tot))
-        .groupBy("active_days", "n_users")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .select(
-            F.col("active_days").cast("long").alias("active_days"),
-            F.col("cnt").alias("n_users"),
-            F.round(F.col("cnt") * 1.0 / F.col("n_users"), 6).alias("share"),
-            F.when(F.col("active_days") >= 15, F.lit("core"))
-            .when(F.col("active_days") >= 5, F.lit("regular"))
-            .otherwise(F.lit("casual"))
-            .alias("tier"),
-        )
-        .orderBy("active_days")
-    )
+    particular corpus.)""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -643,12 +618,12 @@ def _hexfold(h: str, digits: int = 5) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-@query(
+sql_query(
     "q_systematic_sample",
-    oracle=f"""
+    f"""
     WITH hashed AS (
       SELECT o_totalprice,
-             {_hexfold("md5(CAST(o_orderkey AS VARCHAR))")} AS hv
+             {_hexfold("md5(CAST(o_orderkey AS STRING))")} AS hv
       FROM orders
     ),
     samp AS (
@@ -676,9 +651,7 @@ def _hexfold(h: str, digits: int = 5) -> str:
     FROM sm
     """,
     tags=("sample", "sampling", "analytics"),
-)
-def systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Systematic sampling in deterministic hash space: fold the first 5
+    doc="""Systematic sampling in deterministic hash space: fold the first 5
     hex digits of md5(orderkey) into an integer and keep one fixed
     residue class mod 20 — an equal-probability design (up to the
     documented 16^5 % 20 = 16/1048576 residue nonuniformity) that is
@@ -695,36 +668,8 @@ def systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan with a row-local predicate + two map-side
     aggregates. The hex fold is exact integer arithmetic on both
-    engines; rounded at 4/6."""
-    orders = load_table(spark, sf_dir, "orders")
-    hv = F.expr(_hexfold("md5(CAST(o_orderkey AS STRING))"))
-    samp = orders.filter(hv % SYS_K == SYS_OFFSET)
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    pop = orders.agg(
-        F.count(F.lit(1)).alias("n_pop"),
-        F.round(F.sum(cents).cast("double") / F.count(F.lit(1)) / 100, 4).alias(
-            "pop_mean"
-        ),
-    )
-    return (
-        samp.crossJoin(F.broadcast(pop))
-        .groupBy("n_pop", "pop_mean")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sample"),
-            F.round(F.sum(cents).cast("double") / F.count(F.lit(1)) / 100, 4).alias(
-                "sample_mean"
-            ),
-        )
-        .select(
-            F.col("n_pop").cast("long").alias("n_pop"),
-            "n_sample",
-            "sample_mean",
-            "pop_mean",
-            F.round(
-                F.abs(F.col("sample_mean") - F.col("pop_mean")) / F.col("pop_mean"), 6
-            ).alias("rel_error"),
-        )
-    )
+    engines; rounded at 4/6.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -273,9 +273,9 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_srm_check",
-    oracle="""
+    """
     WITH assigns AS (
       SELECT c_custkey,
              CASE WHEN substring(md5(CAST(c_custkey AS STRING)), 1, 1) < '8'
@@ -297,11 +297,11 @@ sql_query(
     )
     SELECT
       experiment, n_treat, n_control,
-      round(
+      CAST(round(
         (n_treat - (n_treat + n_control) / 2.0) * (n_treat - (n_treat + n_control) / 2.0)
           / ((n_treat + n_control) / 2.0)
         + (n_control - (n_treat + n_control) / 2.0) * (n_control - (n_treat + n_control) / 2.0)
-          / ((n_treat + n_control) / 2.0), 4) AS chi2,
+          / ((n_treat + n_control) / 2.0), 4) AS DOUBLE) AS chi2,
       CAST(
         (n_treat - (n_treat + n_control) / 2.0) * (n_treat - (n_treat + n_control) / 2.0)
           / ((n_treat + n_control) / 2.0)
@@ -310,9 +310,7 @@ sql_query(
     FROM per_exp
     """,
     tags=("experimentation", "stats", "quality"),
-)
-def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch check — the first gate every experimentation
+    doc="""Sample-ratio-mismatch check — the first gate every experimentation
     platform runs before reading any metric: χ² of observed arm counts
     against the declared 50/50 split (1 dof; flag at 3.841 = p<0.05). Two
     deterministic md5 hash-splits are screened side by side: the healthy
@@ -320,30 +318,8 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-configured '< 7' (7/16 → a 12.5% shortfall the χ² flags loudly) —
     the relation demonstrates both the pass and the catch on the same
     population. Exact integer counts into one double expression; a single
-    aggregation over the assignment scan, free at any scale."""
-    cust = load_table(spark, sf_dir, "customer")
-    hexc = F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 1)
-    rows = []
-    for exp, thresh in (("balanced", "8"), ("broken", "7")):
-        treat = F.sum(F.when(hexc < thresh, 1).otherwise(0)).cast("long")
-        ctrl = F.sum(F.when(hexc >= thresh, 1).otherwise(0)).cast("long")
-        rows.append(
-            cust.agg(
-                F.lit(exp).alias("experiment"),
-                treat.alias("n_treat"),
-                ctrl.alias("n_control"),
-            )
-        )
-    per_exp = rows[0].unionByName(rows[1])
-    e = (F.col("n_treat") + F.col("n_control")) / 2.0
-    chi2 = (F.col("n_treat") - e) ** 2 / e + (F.col("n_control") - e) ** 2 / e
-    return per_exp.select(
-        "experiment",
-        "n_treat",
-        "n_control",
-        F.round(chi2, 4).alias("chi2"),
-        (chi2 > 3.841).alias("srm_detected"),
-    )
+    aggregation over the assignment scan, free at any scale.""",
+)
 
 
 @query(
@@ -1015,9 +991,9 @@ RD_CUTOFF = 225000.0
 RD_BANDWIDTH = 50000.0
 
 
-@query(
+sql_query(
     "q_regression_discontinuity",
-    oracle=f"""
+    f"""
     WITH w AS (
       SELECT CASE WHEN o_totalprice >= {RD_CUTOFF} THEN 1 ELSE 0 END AS above,
              CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
@@ -1034,18 +1010,16 @@ RD_BANDWIDTH = 50000.0
     )
     SELECT CAST(n1 AS BIGINT) AS n_above,
            CAST(n0 AS BIGINT) AS n_below,
-           round(y1 * 1.0 / n1, 6) AS rate_above,
-           round(y0 * 1.0 / n0, 6) AS rate_below,
-           round(y1 * 1.0 / n1 - y0 * 1.0 / n0, 6) AS rd_jump,
-           round((y1 * 1.0 / n1 - y0 * 1.0 / n0)
-                 / sqrt((y1 * 1.0 / n1) * (1 - y1 * 1.0 / n1) / n1
-                        + (y0 * 1.0 / n0) * (1 - y0 * 1.0 / n0) / n0), 4) AS z_stat
+           round(y1 * 1e0 / n1, 6) AS rate_above,
+           round(y0 * 1e0 / n0, 6) AS rate_below,
+           round(y1 * 1e0 / n1 - y0 * 1e0 / n0, 6) AS rd_jump,
+           round((y1 * 1e0 / n1 - y0 * 1e0 / n0)
+                 / sqrt((y1 * 1e0 / n1) * (1 - y1 * 1e0 / n1) / n1
+                        + (y0 * 1e0 / n0) * (1 - y0 * 1e0 / n0) / n0), 4) AS z_stat
     FROM s
     """,
     tags=("experimentation", "causal"),
-)
-def regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sharp regression discontinuity at the {cut} order-value cutoff:
+    doc="""Sharp regression discontinuity at the {cut} order-value cutoff:
     compare the finished-order rate just above vs just below within a
     +-{bw} bandwidth — the local jump is the causal effect of crossing
     the threshold IF units can't precisely sort around it, the design
@@ -1057,35 +1031,8 @@ def regression_discontinuity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tool when assignment is a known deterministic threshold.
 
     Scale: the bandwidth predicate pushes down to the scan; one integer
-    contingency aggregate; closed forms rounded at 6/4."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = orders.filter(
-        (F.col("o_totalprice") >= RD_CUTOFF - RD_BANDWIDTH)
-        & (F.col("o_totalprice") < RD_CUTOFF + RD_BANDWIDTH)
-    ).select(
-        F.when(F.col("o_totalprice") >= RD_CUTOFF, 1).otherwise(0).alias("above"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-    s = w.agg(
-        F.sum(F.when(F.col("above") == 1, F.col("y")).otherwise(0)).alias("y1"),
-        F.sum(F.when(F.col("above") == 1, 1).otherwise(0)).alias("n1"),
-        F.sum(F.when(F.col("above") == 0, F.col("y")).otherwise(0)).alias("y0"),
-        F.sum(F.when(F.col("above") == 0, 1).otherwise(0)).alias("n0"),
-    )
-    p1 = F.col("y1") * 1.0 / F.col("n1")
-    p0 = F.col("y0") * 1.0 / F.col("n0")
-    return s.select(
-        F.col("n1").cast("long").alias("n_above"),
-        F.col("n0").cast("long").alias("n_below"),
-        F.round(p1, 6).alias("rate_above"),
-        F.round(p0, 6).alias("rate_below"),
-        F.round(p1 - p0, 6).alias("rd_jump"),
-        F.round(
-            (p1 - p0)
-            / F.sqrt(p1 * (1 - p1) / F.col("n1") + p0 * (1 - p0) / F.col("n0")),
-            4,
-        ).alias("z_stat"),
-    )
+    contingency aggregate; closed forms rounded at 6/4.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1342,9 +1289,9 @@ def tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_beta_binomial_ab",
-    oracle=f"""
+    f"""
     WITH obs AS (
       SELECT r.r_name AS region,
              CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1362,12 +1309,12 @@ def tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     post AS (
       SELECT g.region, g.n, g.s,
-             (1.0 + g.s) / (2.0 + g.n) AS mu,
-             (1.0 + g.s) * (1.0 + g.n - g.s)
-               / ((2.0 + g.n) * (2.0 + g.n) * (3.0 + g.n)) AS var_r,
-             (1.0 + pool.s) / (2.0 + pool.n) AS mu_p,
-             (1.0 + pool.s) * (1.0 + pool.n - pool.s)
-               / ((2.0 + pool.n) * (2.0 + pool.n) * (3.0 + pool.n)) AS var_p
+             (1e0 + g.s) / (2e0 + g.n) AS mu,
+             (1e0 + g.s) * (1e0 + g.n - g.s)
+               / ((2e0 + g.n) * (2e0 + g.n) * (3e0 + g.n)) AS var_r,
+             (1e0 + pool.s) / (2e0 + pool.n) AS mu_p,
+             (1e0 + pool.s) * (1e0 + pool.n - pool.s)
+               / ((2e0 + pool.n) * (2e0 + pool.n) * (3e0 + pool.n)) AS var_p
       FROM g CROSS JOIN pool
     ),
     z AS (
@@ -1384,9 +1331,7 @@ def tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM z ORDER BY region
     """,
     tags=("stats", "experimentation", "analytics"),
-)
-def beta_binomial_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bayesian conversion analysis per region under a Beta(1,1) prior:
+    doc="""Bayesian conversion analysis per region under a Beta(1,1) prior:
     exact posterior mean (1+s)/(2+n) and variance for each region's
     urgent-order rate, and the probability the region beats the pooled
     rate via the normal approximation to the difference of Beta
@@ -1397,60 +1342,5 @@ def beta_binomial_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one dim-chain aggregate to 5 (n, s) integer pairs + a
     broadcast pooled row; posterior moments are closed forms of exact
-    integers, rounded at 6."""
-    from bigdatainfinance1_spark.operators.stats_advanced import _norm_cdf_col
-
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg = load_table(spark, sf_dir, "region")
-    obs = (
-        orders.join(
-            F.broadcast(cust.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(nat.select("n_nationkey", "n_regionkey")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(reg.select("r_regionkey", "r_name")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select(
-            F.col("r_name").alias("region"),
-            F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
-            .otherwise(0)
-            .alias("conv"),
-        )
-    )
-    g = obs.groupBy("region").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("s")
-    )
-    pool = g.agg(F.sum("n").alias("np"), F.sum("s").alias("sp"))
-    post = g.crossJoin(F.broadcast(pool)).select(
-        "region",
-        "n",
-        "s",
-        ((1.0 + F.col("s")) / (2.0 + F.col("n"))).alias("mu"),
-        (
-            (1.0 + F.col("s"))
-            * (1.0 + F.col("n") - F.col("s"))
-            / ((2.0 + F.col("n")) * (2.0 + F.col("n")) * (3.0 + F.col("n")))
-        ).alias("var_r"),
-        ((1.0 + F.col("sp")) / (2.0 + F.col("np"))).alias("mu_p"),
-        (
-            (1.0 + F.col("sp"))
-            * (1.0 + F.col("np") - F.col("sp"))
-            / ((2.0 + F.col("np")) * (2.0 + F.col("np")) * (3.0 + F.col("np")))
-        ).alias("var_p"),
-    )
-    zst = (F.col("mu") - F.col("mu_p")) / F.sqrt(F.col("var_r") + F.col("var_p"))
-    return post.select(
-        "region",
-        F.col("n").cast("long").alias("n_orders"),
-        F.col("s").cast("long").alias("n_conv"),
-        F.round(F.col("mu"), 6).alias("post_mean"),
-        F.round(F.sqrt(F.col("var_r")), 6).alias("post_sd"),
-        F.round(_norm_cdf_col(zst), 6).alias("p_beats_pooled"),
-    ).orderBy("region")
+    integers, rounded at 6.""",
+)

@@ -274,14 +274,14 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_audit_fingerprint",
-    oracle="""
+    """
     WITH hashed AS (
       SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-             md5(CAST(o_orderkey AS VARCHAR) || '|' ||
-                 CAST(o_custkey AS VARCHAR) || '|' ||
-                 CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR) || '|' ||
+             md5(CAST(o_orderkey AS STRING) || '|' ||
+                 CAST(o_custkey AS STRING) || '|' ||
+                 CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING) || '|' ||
                  o_orderstatus) AS h
       FROM orders
     )
@@ -296,9 +296,7 @@ sql_query(
     FROM hashed GROUP BY yr
     """,
     tags=("analytics", "quality", "governance"),
-)
-def audit_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-level audit fingerprints: per year, an order-insensitive
+    doc="""Partition-level audit fingerprints: per year, an order-insensitive
     digest of the orders partition — row count, distinct row-hash count
     (dup detector), lexicographic min/max row hash, and a commutative
     nibble checksum. Two snapshots of a 100 TB table compare by exchanging
@@ -307,26 +305,8 @@ def audit_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition fingerprint mismatches). The row hash canonicalizes exactly
     like q_exact_dedup (pipe-joined canonical strings, prices as integer
     cents); every output is integer or VARCHAR — nothing floats. Scale:
-    one narrow hash map, one groupBy per partition key."""
-    orders = load_table(spark, sf_dir, "orders")
-    h = F.md5(
-        F.concat_ws(
-            "|",
-            F.col("o_orderkey").cast("string"),
-            F.col("o_custkey").cast("string"),
-            F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
-            F.col("o_orderstatus"),
-        )
-    )
-    hashed = orders.select(F.year("o_orderdate").cast("long").alias("yr"), h.alias("h"))
-    nib = F.instr(F.lit("0123456789abcdef"), F.substring("h", 1, 1)) - 1
-    return hashed.groupBy("yr").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.count_distinct("h").cast("long").alias("n_distinct"),
-        F.min("h").alias("min_hash"),
-        F.max("h").alias("max_hash"),
-        F.sum(nib).cast("long").alias("nibble_sum"),
-    )
+    one narrow hash map, one groupBy per partition key.""",
+)
 
 
 @query(
@@ -693,9 +673,9 @@ sql_query(
 TCLOSE_T = 0.2  # release gate threshold on the EMD
 
 
-@query(
+sql_query(
     "q_t_closeness",
-    oracle=f"""
+    f"""
     WITH tagged AS (
       SELECT c_mktsegment, c_nationkey,
              CASE WHEN c_acctbal < 0 THEN 0
@@ -725,7 +705,7 @@ TCLOSE_T = 0.2  # release gate threshold on the EMD
     )
     SELECT
       CAST(count(*) AS BIGINT)                                    AS n_cells,
-      round(max(t), 6)                                            AS max_t,
+      CAST(round(max(t), 6) AS DOUBLE)                            AS max_t,
       CAST(count(CASE WHEN t > {TCLOSE_T} THEN 1 END) AS BIGINT)  AS cells_above_t,
       CAST(sum(CASE WHEN t > {TCLOSE_T} THEN cell_n ELSE 0 END) AS BIGINT)
                                                                   AS rows_at_risk,
@@ -734,9 +714,7 @@ TCLOSE_T = 0.2  # release gate threshold on the EMD
     FROM scored
     """,
     tags=("analytics", "quality", "privacy"),
-)
-def t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness — the third gate of the release-privacy triad, on the
+    doc="""t-closeness — the third gate of the release-privacy triad, on the
     SAME quasi-identifier cells as q_k_anonymity / q_l_diversity: a cell
     passes only if its sensitive-attribute distribution stays within
     EMD t of the global one (a cell can be k-anonymous AND l-diverse yet
@@ -745,35 +723,8 @@ def t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute cumulative gap Σ|cum(p) - cum(q)| / (m-1). Counts are exact
     integers and both engines form the identical ratio doubles, so t
     matches bitwise before its round. Scale: one cell aggregation + a
-    broadcast 1-row global distribution — |QI-domain|-sized work."""
-    cust = load_table(spark, sf_dir, "customer")
-    sens = (
-        F.when(F.col("c_acctbal") < 0, 0).when(F.col("c_acctbal") < 5000, 1).otherwise(2)
-    )
-    tagged = cust.select("c_mktsegment", "c_nationkey", sens.alias("sens"))
-    cells = tagged.groupBy("c_mktsegment", "c_nationkey").agg(
-        F.count(F.lit(1)).alias("cell_n"),
-        F.sum(F.when(F.col("sens") == 0, 1).otherwise(0)).alias("c0"),
-        F.sum(F.when(F.col("sens") == 1, 1).otherwise(0)).alias("c1"),
-    )
-    g = tagged.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("sens") == 0, 1).otherwise(0)).alias("g0"),
-        F.sum(F.when(F.col("sens") == 1, 1).otherwise(0)).alias("g1"),
-    )
-    d0 = F.col("c0") * 1.0 / F.col("cell_n") - F.col("g0") * 1.0 / F.col("n")
-    d1 = F.col("c1") * 1.0 / F.col("cell_n") - F.col("g1") * 1.0 / F.col("n")
-    scored = cells.crossJoin(F.broadcast(g)).select(
-        "cell_n", F.round((F.abs(d0) + F.abs(d0 + d1)) / 2, 6).alias("t")
-    )
-    above = F.when(F.col("t") > TCLOSE_T, F.col("cell_n")).otherwise(0)
-    return scored.agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.round(F.max("t"), 6).alias("max_t"),
-        F.count(F.when(F.col("t") > TCLOSE_T, 1)).cast("long").alias("cells_above_t"),
-        F.sum(above).cast("long").alias("rows_at_risk"),
-        F.round(F.sum(above) * F.lit(1.0) / F.sum("cell_n"), 6).alias("risk_share"),
-    )
+    broadcast 1-row global distribution — |QI-domain|-sized work.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -672,9 +672,9 @@ _COPURCHASE_E_SQL = """
 """
 
 
-@query(
+sql_query(
     "q_modularity_brands",
-    oracle=f"""
+    f"""
     WITH {_COPURCHASE_E_SQL},
     lab AS (SELECT p_partkey, p_brand FROM part),
     el AS (
@@ -698,18 +698,16 @@ _COPURCHASE_E_SQL = """
     SELECT d.brand,
            CAST(coalesce(w.w, 0) AS BIGINT) AS within_edges,
            CAST(d.d AS BIGINT) AS degree_sum,
-           round(coalesce(w.w, 0) * 1.0 / m.m
-                 - (d.d * 1.0 / (2 * m.m)) * (d.d * 1.0 / (2 * m.m)), 6)
+           round(coalesce(w.w, 0) * 1e0 / m.m
+                 - (d.d * 1e0 / (2 * m.m)) * (d.d * 1e0 / (2 * m.m)), 6)
              AS modularity_term,
-           round(sum(coalesce(w.w, 0) * 1.0 / m.m
-                 - (d.d * 1.0 / (2 * m.m)) * (d.d * 1.0 / (2 * m.m))) OVER (), 6)
+           round(sum(coalesce(w.w, 0) * 1e0 / m.m
+                 - (d.d * 1e0 / (2 * m.m)) * (d.d * 1e0 / (2 * m.m))) OVER (), 6)
              AS modularity_q
     FROM degsum d LEFT JOIN within w ON w.brand = d.brand CROSS JOIN m
     """,
     tags=("analytics", "graph"),
-)
-def modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the brand partition of the co-purchase graph:
+    doc="""Newman modularity of the brand partition of the co-purchase graph:
     Q = sum_c (e_cc/m - (d_c/2m)^2) — do parts of the same brand
     co-purchase more than a degree-preserving random graph predicts? Per
     brand the within-community edge share, degree mass, and modularity
@@ -720,46 +718,8 @@ def modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the edge list is the bounded support->=2 relation; labels join
     via the broadcast part dim; everything else is O(brands) closed-form
-    integer arithmetic."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    a = li.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
-    e = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("u", "v")
-    )
-    la = part.select(F.col("p_partkey").alias("u"), F.col("p_brand").alias("ba"))
-    lb = part.select(F.col("p_partkey").alias("v"), F.col("p_brand").alias("bb"))
-    el = e.join(F.broadcast(la), "u").join(F.broadcast(lb), "v").select("ba", "bb")
-    m = el.agg(F.count(F.lit(1)).alias("m"))
-    within = el.groupBy(F.col("ba").alias("brand")).agg(
-        F.sum(F.when(F.col("ba") == F.col("bb"), 1).otherwise(0)).alias("w")
-    )
-    degsum = (
-        el.groupBy(F.col("ba").alias("brand")).agg(F.count(F.lit(1)).alias("cnt"))
-        .unionByName(el.groupBy(F.col("bb").alias("brand")).agg(F.count(F.lit(1)).alias("cnt")))
-        .groupBy("brand")
-        .agg(F.sum("cnt").alias("d"))
-    )
-    from pyspark.sql import Window
-
-    term = (
-        F.coalesce(F.col("w"), F.lit(0)) * 1.0 / F.col("m")
-        - (F.col("d") * 1.0 / (2 * F.col("m"))) * (F.col("d") * 1.0 / (2 * F.col("m")))
-    )
-    j = degsum.join(within, "brand", "left").crossJoin(F.broadcast(m))
-    return j.select(
-        "brand",
-        F.coalesce(F.col("w"), F.lit(0)).cast("long").alias("within_edges"),
-        F.col("d").cast("long").alias("degree_sum"),
-        F.round(term, 6).alias("modularity_term"),
-        F.round(F.sum(term).over(Window.partitionBy()), 6).alias("modularity_q"),
-    )
+    integer arithmetic.""",
+)
 
 
 @query(
@@ -844,9 +804,9 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_hits_authority",
-    oracle="""
+    """
     WITH e AS (
       SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS p
       FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -864,15 +824,13 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(auth.p AS BIGINT) AS part_id,
            CAST(deg.d AS BIGINT) AS in_degree,
            CAST(auth.a AS BIGINT) AS auth_raw,
-           round(auth.a * 1.0 / tot.ta, 8) AS authority
+           CAST(round(auth.a * 1.0 / tot.ta, 8) AS DOUBLE) AS authority
     FROM auth JOIN deg ON deg.p = auth.p CROSS JOIN tot
     ORDER BY auth_raw DESC, part_id
     LIMIT 15
     """,
     tags=("analytics", "graph", "iterative"),
-)
-def hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS (Kleinberg) on the bipartite customer→part purchase graph,
+    doc="""HITS (Kleinberg) on the bipartite customer→part purchase graph,
     two iterations with normalization DEFERRED so every score stays an
     exact integer: authority⁰ = in-degree, hub = Σ authority⁰ over the
     customer's parts, authority = Σ hub over the part's buyers — the
@@ -885,38 +843,8 @@ def hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     on orderkey); each iteration is one edges⋈scores equi-join + sum —
     the q_pagerank_copurchase job shape, but with BIGINT scores so the
     ranking has zero float ambiguity; the only division is the final
-    display normalization, rounded at 8."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    deg = e.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    hub = (
-        e.join(deg, "p")
-        .groupBy("u")
-        .agg(F.sum("d").cast("long").alias("s"))
-    )
-    auth = (
-        e.join(hub, "u")
-        .groupBy("p")
-        .agg(F.sum("s").cast("long").alias("a"))
-    )
-    tot = auth.agg(F.sum("a").alias("ta"))
-    return (
-        auth.join(deg, "p")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("p").cast("long").alias("part_id"),
-            F.col("d").cast("long").alias("in_degree"),
-            F.col("a").cast("long").alias("auth_raw"),
-            F.round(F.col("a") * 1.0 / F.col("ta"), 8).alias("authority"),
-        )
-        .orderBy(F.col("auth_raw").desc(), "part_id")
-        .limit(15)
-    )
+    display normalization, rounded at 8.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -56,36 +56,28 @@ def zipf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_stratified_sample",
-    oracle="""
+    """
     SELECT lang, doc_id, n_chars
     FROM (
       SELECT lang, doc_id, n_chars,
              row_number() OVER (
-               PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+               PARTITION BY lang ORDER BY md5(CAST(doc_id AS STRING)), doc_id
              ) AS rn
       FROM documents
     )
     WHERE rn <= 10
     """,
     tags=("analytics", "sample", "llm"),
-)
-def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6 deterministic tier: stratified sampling by hash quota — the 10
+    doc="""P6 deterministic tier: stratified sampling by hash quota — the 10
     documents per language with the lowest md5(doc_id). Hash-order quotas
     are how production pipelines draw REPRODUCIBLE eval/debug samples at
     100 TB (stable across runs, engines, and partitioning — unlike
     rate-based Bernoulli sampling, q_sample_profile's rows-only tier, whose
     draw is engine-internal). Per-stratum top-k via ranked window = one
-    shuffle on the stratum key."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("lang", "doc_id", "n_chars")
-    )
+    shuffle on the stratum key.""",
+)
 
 
 @query(
@@ -305,9 +297,9 @@ def pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cum.filter(sel).select("o_orderpriority", "o_orderkey", "o_totalprice")
 
 
-@query(
+sql_query(
     "q_mixture_rebalance",
-    oracle="""
+    """
     WITH counts AS (
       SELECT lang, count(*) AS n FROM documents GROUP BY lang
     ),
@@ -317,7 +309,7 @@ def pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT d.lang,
                row_number() OVER (
                  PARTITION BY d.lang
-                 ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rn
+                 ORDER BY md5(CAST(d.doc_id AS STRING)), d.doc_id) AS rn
         FROM documents d
       ) r CROSS JOIN quota q
       WHERE r.rn <= q.q
@@ -335,9 +327,7 @@ def pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN quota q CROSS JOIN after_tot t
     """,
     tags=("llm-pipeline", "sample", "text"),
-)
-def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture rebalancing: downsample every language to the
+    doc="""Domain-mixture rebalancing: downsample every language to the
     smallest language's count (uniform target mixture) with the md5-order
     quota draw, reporting each language's share before and after — the
     data-mixture control step LLM pretraining pipelines run between
@@ -345,33 +335,8 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives the quota from the mixture target). The draw is reproducible
     across engines/partitionings (md5 order, doc_id tiebreak); shares are
     exact-integer ratios rounded 4 dp. Scale: one count aggregation, one
-    per-language ranked window, quota broadcast as a scalar."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    quota = counts.agg(
-        F.min("n").alias("q"), F.sum("n").cast("long").alias("total")
-    )
-    w = Window.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-    kept = (
-        docs.select("lang", "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .crossJoin(F.broadcast(quota))
-        .filter(F.col("rn") <= F.col("q"))
-    )
-    after = kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_after"))
-    after_tot = after.agg(F.sum("n_after").cast("long").alias("t"))
-    return (
-        counts.join(after, "lang")
-        .crossJoin(F.broadcast(quota))
-        .crossJoin(F.broadcast(after_tot))
-        .select(
-            "lang",
-            F.col("n").cast("long").alias("n_before"),
-            F.col("n_after").cast("long").alias("n_after"),
-            F.round(F.col("n") * F.lit(1.0) / F.col("total"), 4).alias("share_before"),
-            F.round(F.col("n_after") * F.lit(1.0) / F.col("t"), 4).alias("share_after"),
-        )
-    )
+    per-language ranked window, quota broadcast as a scalar.""",
+)
 
 
 sql_query(
@@ -659,9 +624,9 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_temperature_mixture",
-    oracle="""
+    """
     WITH counts AS (
       SELECT lang, count(*) AS n FROM documents GROUP BY lang
     ),
@@ -671,15 +636,13 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       c.lang,
       CAST(c.n AS BIGINT)                              AS n_docs,
-      round(c.n * 1.0 / t.total, 6)                    AS share,
+      CAST(round(c.n * 1.0 / t.total, 6) AS DOUBLE)    AS share,
       round(sqrt(c.n) / t.z, 6)                        AS temp_weight,
       CAST(floor(sqrt(c.n) / t.z * 10000) AS BIGINT)   AS docs_at_10k
     FROM counts c CROSS JOIN tot t
     """,
     tags=("llm-pipeline", "sample", "text"),
-)
-def temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture reweighting (alpha = 0.5): sampling weight
+    doc="""Temperature-based mixture reweighting (alpha = 0.5): sampling weight
     w_l proportional to p_l^alpha — the data-mixture law multilingual LLM
     recipes use to up-weight low-resource languages without flattening to
     uniform (q_mixture_rebalance is the alpha→0 limit). Since p_l^0.5 =
@@ -688,24 +651,8 @@ def temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines agree bit-for-bit before rounding. Reports each
     language's natural share, temperature weight, and the floor'd document
     quota from a 10k-draw budget. Scale: one count aggregation + a
-    5-row broadcast scalar — free at any corpus size."""
-    docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    tot = counts.agg(
-        F.sum("n").cast("long").alias("total"),
-        F.sum(F.sqrt("n")).alias("z"),
-    )
-    w = F.sqrt("n") / F.col("z")
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            F.col("n").cast("long").alias("n_docs"),
-            F.round(F.col("n") * F.lit(1.0) / F.col("total"), 6).alias("share"),
-            F.round(w, 6).alias("temp_weight"),
-            F.floor(w * 10000).cast("long").alias("docs_at_10k"),
-        )
-    )
+    5-row broadcast scalar — free at any corpus size.""",
+)
 
 
 DUP_GRAM_N = 8  # token-gram length — the suffix-array analog's unit span

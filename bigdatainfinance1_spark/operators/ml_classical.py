@@ -684,12 +684,9 @@ def bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_mann_kendall
 # ---------------------------------------------------------------------------
 
-MK_Z95 = 1.959964  # two-sided 5% normal critical value
-
-
-@query(
+sql_query(
     "q_mann_kendall",
-    oracle="""
+    """
     WITH m AS (
       SELECT date_trunc('month', o_orderdate) AS month,
              round(sum(CAST(round((o_totalprice) * 100) AS BIGINT))
@@ -713,7 +710,7 @@ MK_Z95 = 1.959964  # two-sided 5% normal critical value
     )
     SELECT CAST(n AS BIGINT) AS n_months,
            CAST(s AS BIGINT) AS s,
-           round(var_s, 6) AS var_s,
+           CAST(round(var_s, 6) AS DOUBLE) AS var_s,
            round(CASE WHEN s > 0 THEN (s - 1) / sqrt(var_s)
                       WHEN s < 0 THEN (s + 1) / sqrt(var_s)
                       ELSE 0.0 END, 6) AS z_stat,
@@ -723,9 +720,7 @@ MK_Z95 = 1.959964  # two-sided 5% normal critical value
     FROM stat
     """,
     tags=("stats", "timeseries"),
-)
-def mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall nonparametric trend test on monthly revenue: S =
+    doc="""Mann-Kendall nonparametric trend test on monthly revenue: S =
     sum over month pairs of sign(z_j - z_i), tie-corrected variance
     n(n-1)(2n+5)/18 - sum t(t-1)(2t+5)/18, and the continuity-corrected
     Z statistic with the 5% two-sided trend verdict — the
@@ -738,58 +733,8 @@ def mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-independent. S and the tie groups are exact integers (the
     observations are 6-dp-rounded doubles compared for order/equality
     only), so the statistic is one closed form of integers rounded at 6.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
-        F.round(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")) / 100e0 / 1000000.0, 6).alias("z")
-    )
-    a = m.select(F.col("month").alias("ma"), F.col("z").alias("za"))
-    b = m.select(F.col("month").alias("mb"), F.col("z").alias("zb"))
-    s = (
-        a.join(b, F.col("mb") > F.col("ma"))
-        .agg(
-            F.sum(
-                F.when(F.col("zb") > F.col("za"), 1)
-                .when(F.col("zb") < F.col("za"), -1)
-                .otherwise(0)
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-    )
-    ties = (
-        m.groupBy("z")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)), F.lit(0)
-            ).alias("tie_term")
-        )
-    )
-    nn = m.agg(F.count(F.lit(1)).alias("n"))
-    stat = s.crossJoin(F.broadcast(ties)).crossJoin(F.broadcast(nn)).select(
-        F.col("n"),
-        F.col("s"),
-        (
-            (F.col("n") * (F.col("n") - 1.0) * (2 * F.col("n") + 5) - F.col("tie_term"))
-            / 18.0
-        ).alias("var_s"),
-    )
-    zc = (
-        F.when(F.col("s") > 0, (F.col("s") - 1) / F.sqrt(F.col("var_s")))
-        .when(F.col("s") < 0, (F.col("s") + 1) / F.sqrt(F.col("var_s")))
-        .otherwise(F.lit(0.0))
-    )
-    return stat.select(
-        F.col("n").cast("long").alias("n_months"),
-        F.col("s").cast("long").alias("s"),
-        F.round(F.col("var_s"), 6).alias("var_s"),
-        F.round(zc, 6).alias("z_stat"),
-        F.when((F.col("s") > 0) & (zc > MK_Z95), F.lit("increasing"))
-        .when((F.col("s") < 0) & (zc < -MK_Z95), F.lit("decreasing"))
-        .otherwise(F.lit("no_trend"))
-        .alias("trend"),
-    )
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1028,9 +973,9 @@ def ridge_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 KAPPA_VALUE_CUT = 225000.0  # rater B: "urgent" if order value >= this
 
 
-@query(
+sql_query(
     "q_cohens_kappa",
-    oracle=f"""
+    f"""
     WITH r AS (
       SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END AS a,
              CASE WHEN o_totalprice >= {KAPPA_VALUE_CUT} THEN 1 ELSE 0 END AS b
@@ -1047,22 +992,20 @@ KAPPA_VALUE_CUT = 225000.0  # rater B: "urgent" if order value >= this
     SELECT CAST(n AS BIGINT) AS n,
            CAST(n11 AS BIGINT) AS both_urgent,
            CAST(n00 AS BIGINT) AS both_normal,
-           round((n11 + n00) * 1.0 / n, 6) AS observed_agreement,
-           round(((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)
-                 + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n), 6)
+           round((n11 + n00) * 1e0 / n, 6) AS observed_agreement,
+           round(((n11 + n10) * 1e0 / n) * ((n11 + n01) * 1e0 / n)
+                 + ((n01 + n00) * 1e0 / n) * ((n10 + n00) * 1e0 / n), 6)
              AS chance_agreement,
-           round(((n11 + n00) * 1.0 / n
-                  - (((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)
-                     + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n)))
-                 / (1.0 - (((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)
-                           + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n))), 6)
+           round(((n11 + n00) * 1e0 / n
+                  - (((n11 + n10) * 1e0 / n) * ((n11 + n01) * 1e0 / n)
+                     + ((n01 + n00) * 1e0 / n) * ((n10 + n00) * 1e0 / n)))
+                 / (1.0 - (((n11 + n10) * 1e0 / n) * ((n11 + n01) * 1e0 / n)
+                           + ((n01 + n00) * 1e0 / n) * ((n10 + n00) * 1e0 / n))), 6)
              AS cohens_kappa
     FROM c
     """,
     tags=("ml", "eval", "stats"),
-)
-def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two "annotators" labeling orders urgent —
+    doc="""Cohen's kappa between two "annotators" labeling orders urgent —
     rater A reads the priority field, rater B thresholds order value at
     {cut} — chance-corrected agreement (po - pe)/(1 - pe), the
     inter-annotator metric every labeling pipeline reports before
@@ -1070,32 +1013,8 @@ def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominates; kappa ~ 0 here exposes that the raters share a base rate
     but no signal — exactly the trap). One 2x2 integer contingency
     aggregate and closed forms, rounded at 6; one map-side-combinable
-    pass at any scale."""
-    orders = load_table(spark, sf_dir, "orders")
-    r = orders.select(
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1).otherwise(0).alias("a"),
-        F.when(F.col("o_totalprice") >= KAPPA_VALUE_CUT, 1).otherwise(0).alias("b"),
-    )
-    c = r.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when((F.col("a") == 1) & (F.col("b") == 1), 1).otherwise(0)).alias("n11"),
-        F.sum(F.when((F.col("a") == 1) & (F.col("b") == 0), 1).otherwise(0)).alias("n10"),
-        F.sum(F.when((F.col("a") == 0) & (F.col("b") == 1), 1).otherwise(0)).alias("n01"),
-        F.sum(F.when((F.col("a") == 0) & (F.col("b") == 0), 1).otherwise(0)).alias("n00"),
-    )
-    n = F.col("n").cast("double")
-    po = (F.col("n11") + F.col("n00")) * 1.0 / n
-    pe = ((F.col("n11") + F.col("n10")) * 1.0 / n) * ((F.col("n11") + F.col("n01")) * 1.0 / n) + (
-        (F.col("n01") + F.col("n00")) * 1.0 / n
-    ) * ((F.col("n10") + F.col("n00")) * 1.0 / n)
-    return c.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("n11").cast("long").alias("both_urgent"),
-        F.col("n00").cast("long").alias("both_normal"),
-        F.round(po, 6).alias("observed_agreement"),
-        F.round(pe, 6).alias("chance_agreement"),
-        F.round((po - pe) / (1.0 - pe), 6).alias("cohens_kappa"),
-    )
+    pass at any scale.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -1050,9 +1050,9 @@ _BRIER_F_SQL = """CASE substr(o_orderpriority, 1, 1)
              WHEN '4' THEN 0.3 ELSE 0.1 END"""
 
 
-@query(
+sql_query(
     "q_brier_decomposition",
-    oracle=f"""
+    f"""
     WITH r AS (
       SELECT CAST({_BRIER_F_SQL} AS DOUBLE) AS f,
              CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
@@ -1063,11 +1063,11 @@ _BRIER_F_SQL = """CASE substr(o_orderpriority, 1, 1)
     ),
     tot AS (SELECT sum(nk) AS n, sum(yk) AS ny FROM b),
     parts AS (
-      SELECT tot.n, tot.ny * 1.0 / tot.n AS obar,
-             sum(b.nk * (b.f - b.yk * 1.0 / b.nk) * (b.f - b.yk * 1.0 / b.nk)) / tot.n
+      SELECT tot.n, tot.ny * 1e0 / tot.n AS obar,
+             sum(b.nk * (b.f - b.yk * 1e0 / b.nk) * (b.f - b.yk * 1e0 / b.nk)) / tot.n
                AS reliability,
-             sum(b.nk * (b.yk * 1.0 / b.nk - tot.ny * 1.0 / tot.n)
-                       * (b.yk * 1.0 / b.nk - tot.ny * 1.0 / tot.n)) / tot.n
+             sum(b.nk * (b.yk * 1e0 / b.nk - tot.ny * 1e0 / tot.n)
+                       * (b.yk * 1e0 / b.nk - tot.ny * 1e0 / tot.n)) / tot.n
                AS resolution
       FROM b CROSS JOIN tot GROUP BY tot.n, tot.ny
     )
@@ -1080,9 +1080,7 @@ _BRIER_F_SQL = """CASE substr(o_orderpriority, 1, 1)
     FROM parts
     """,
     tags=("ml", "eval", "calibration"),
-)
-def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the Brier score for a 5-level probability
+    doc="""Murphy decomposition of the Brier score for a 5-level probability
     forecaster (priority digit mapped to P(order finished)):
     Brier = reliability - resolution + uncertainty, where reliability
     punishes miscalibration (forecast vs realized rate per bin),
@@ -1095,32 +1093,8 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (forecast-bin) integer aggregate; the identity
     brier = rel - res + unc is exact in this binned form (verified by
     construction — the output computes the right side). All closed forms
-    of integer counts, rounded at 6."""
-    orders = load_table(spark, sf_dir, "orders")
-    r = orders.select(
-        F.expr(_BRIER_F_SQL).cast("double").alias("f"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-    b = r.groupBy("f").agg(F.count(F.lit(1)).alias("nk"), F.sum("y").alias("yk"))
-    tot = b.agg(F.sum("nk").alias("n"), F.sum("yk").alias("ny"))
-    j = b.crossJoin(F.broadcast(tot))
-    ok = F.col("yk") * 1.0 / F.col("nk")
-    obar = F.col("ny") * 1.0 / F.col("n")
-    parts = j.groupBy("n", "ny").agg(
-        F.sum(F.col("nk") * (F.col("f") - ok) * (F.col("f") - ok)).alias("rel_num"),
-        F.sum(F.col("nk") * (ok - obar) * (ok - obar)).alias("res_num"),
-    )
-    obar2 = F.col("ny") * 1.0 / F.col("n")
-    rel = F.col("rel_num") / F.col("n")
-    res = F.col("res_num") / F.col("n")
-    return parts.select(
-        F.col("n").cast("long").alias("n"),
-        F.round(obar2, 6).alias("base_rate"),
-        F.round(rel, 6).alias("reliability"),
-        F.round(res, 6).alias("resolution"),
-        F.round(obar2 * (1.0 - obar2), 6).alias("uncertainty"),
-        F.round(rel - res + obar2 * (1.0 - obar2), 6).alias("brier_score"),
-    )
+    of integer counts, rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

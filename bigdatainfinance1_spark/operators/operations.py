@@ -452,7 +452,7 @@ _NDR_SQL = """
       FROM paired GROUP BY y
     )
     SELECT y AS base_year, n_customers,
-           round(base / 100.0, 2) AS base_revenue,
+           round(base / 100e0, 2) AS base_revenue,
            round(kept * 1e0 / base, 6) AS grr,
            round(next * 1e0 / base, 6) AS ndr,
            round(n_churned * 1e0 / n_customers, 6) AS churn_rate
@@ -462,9 +462,11 @@ _NDR_SQL = """
 """
 
 
-@query("q_ndr_grr", oracle=_NDR_SQL, tags=("analytics", "finance"))
-def ndr_grr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Net and gross revenue retention per base year — the SaaS board
+sql_query(
+    "q_ndr_grr",
+    _NDR_SQL,
+    tags=("analytics", "finance"),
+    doc="""Net and gross revenue retention per base year — the SaaS board
     metrics over the order book: take every customer with revenue in
     year y, then GRR = sum(min(r_y, r_{y+1}))/sum(r_y) (contraction and
     churn only — expansion capped at last year's level) and NDR =
@@ -480,44 +482,8 @@ def ndr_grr(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose BIGINTs; only the last division produces doubles, rounded
     at 6/2. Scale: one customer-year aggregate (map-side combinable),
     one self equi-join on (custkey, year+1) — both sides pre-reduced to
-    customer-grain, so the join is dimension-sized; O(years) after."""
-    orders = load_table(spark, sf_dir, "orders")
-    rev = orders.groupBy(
-        F.col("o_custkey").alias("ck"),
-        F.year("o_orderdate").cast("long").alias("y"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("r")
-    )
-    b = rev.select(F.col("ck"), (F.col("y") - 1).alias("y"), F.col("r").alias("r1"))
-    paired = (
-        rev.join(b, ["ck", "y"], "left")
-        .select("y", "ck", F.col("r").alias("r0"), F.coalesce("r1", F.lit(0)).alias("r1"))
-    )
-    max_y = rev.agg(F.max("y").alias("my"))
-    yr = paired.groupBy("y").agg(
-        F.count(F.lit(1)).cast("long").alias("n_customers"),
-        F.sum(F.when(F.col("r1") == 0, 1).otherwise(0)).cast("long").alias("n_churned"),
-        F.sum("r0").cast("long").alias("base"),
-        F.sum(F.least("r0", "r1")).cast("long").alias("kept"),
-        F.sum("r1").cast("long").alias("next"),
-    )
-    return (
-        yr.crossJoin(F.broadcast(max_y))
-        .filter(F.col("y") < F.col("my"))
-        .select(
-            F.col("y").alias("base_year"),
-            "n_customers",
-            F.round(F.col("base") / 100.0, 2).alias("base_revenue"),
-            F.round(F.col("kept") * F.lit(1.0) / F.col("base"), 6).alias("grr"),
-            F.round(F.col("next") * F.lit(1.0) / F.col("base"), 6).alias("ndr"),
-            F.round(F.col("n_churned") * F.lit(1.0) / F.col("n_customers"), 6).alias(
-                "churn_rate"
-            ),
-        )
-        .orderBy("y")
-    )
+    customer-grain, so the join is dimension-sized; O(years) after.""",
+)
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.functions.vector import l2_norm
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 
@@ -88,14 +88,14 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_train_val_split",
-    oracle="""
+    """
     WITH tagged AS (
       SELECT
         lang,
         n_chars,
-        CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'e'
+        CASE WHEN substring(md5(CAST(doc_id AS STRING)), 1, 1) < 'e'
              THEN 'train' ELSE 'val' END AS split
       FROM documents
     )
@@ -108,26 +108,13 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY split, lang
     """,
     tags=("llm", "pipeline"),
-)
-def train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val split — the reproducible-split
+    doc="""Deterministic hash-based train/val split — the reproducible-split
     primitive every training pipeline needs (content-independent, stable
     under re-partitioning and re-runs, no RNG state). Doc goes to train iff
     the first hex char of md5(doc_id) < 'e' (14/16 = 87.5%). md5 is
     bit-identical across engines, so the exact membership — not just the
-    proportions — is oracle-checked."""
-    docs = load_table(spark, sf_dir, "documents")
-    split = F.when(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < "e", "train"
-    ).otherwise("val")
-    return (
-        docs.withColumn("split", split)
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-    )
+    proportions — is oracle-checked.""",
+)
 
 
 @query(

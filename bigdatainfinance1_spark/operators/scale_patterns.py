@@ -410,7 +410,7 @@ CH_VNODES = 16  # virtual nodes per shard on the ring
 
 _CH_SQL = f"""
     WITH keys AS (
-      SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS kh FROM documents
+      SELECT doc_id, md5(CAST(doc_id AS STRING)) AS kh FROM documents
     ),
     ring AS (
       SELECT node, v, md5('node:' || node || ':' || v) AS rh
@@ -457,13 +457,11 @@ _CH_SQL = f"""
 """
 
 
-@query(
+sql_query(
     "q_consistent_hash_rebalance",
-    oracle=_CH_SQL,
+    _CH_SQL,
     tags=("scale", "layout"),
-)
-def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shard-rebalance audit: what fraction of keys MOVE when a shard is
+    doc="""Shard-rebalance audit: what fraction of keys MOVE when a shard is
     added ({CH_N1} -> {CH_N2}), under modulo placement vs a consistent-
     hash ring (Karger et al.) with {CH_VNODES} virtual nodes per shard.
     Modulo reshuffles ~1 - 1/{CH_N2} of all keys (every key whose id
@@ -483,80 +481,8 @@ def consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the keys (the aggregate-over-cross-join is {CH_N2} x
     {CH_VNODES} = {CH_N2 * CH_VNODES} rows per key, map-side, no
     shuffle until the final count); at a real 100 TB table the same
-    plan assigns every row its shard in one broadcast pass."""
-    docs = load_table(spark, sf_dir, "documents")
-    keys = docs.select(
-        "doc_id", F.md5(F.col("doc_id").cast("string")).alias("kh")
-    )
-    ring = (
-        spark.range(CH_N2)
-        .select(F.col("id").alias("node"))
-        .crossJoin(spark.range(CH_VNODES).select(F.col("id").alias("v")))
-        .select(
-            "node",
-            "v",
-            F.md5(
-                F.concat(F.lit("node:"), F.col("node"), F.lit(":"), F.col("v"))
-            ).alias("rh"),
-        )
-    )
-    old = F.col("node") < CH_N1
-    wrap = ring.agg(
-        F.min_by("node", F.when(old, F.col("rh"))).alias("w1_lo_node"),
-        F.min_by("node", "rh").alias("w2_lo_node"),
-    )
-    assigned = (
-        keys.crossJoin(F.broadcast(ring))
-        .crossJoin(F.broadcast(wrap))
-        .groupBy("doc_id", "kh", "w1_lo_node", "w2_lo_node")
-        .agg(
-            F.min_by(
-                "node", F.when(old & (F.col("rh") >= F.col("kh")), F.col("rh"))
-            ).alias("r1"),
-            F.min_by("node", F.when(F.col("rh") >= F.col("kh"), F.col("rh"))).alias(
-                "r2"
-            ),
-        )
-        .select(
-            "doc_id",
-            F.coalesce("r1", "w1_lo_node").alias("ring1"),
-            F.coalesce("r2", "w2_lo_node").alias("ring2"),
-            (F.col("doc_id") % CH_N1).alias("mod1"),
-            (F.col("doc_id") % CH_N2).alias("mod2"),
-        )
-    )
-    moved = assigned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum(F.when(F.col("mod1") != F.col("mod2"), 1).otherwise(0))
-        .cast("long")
-        .alias("mod_moved"),
-        F.sum(F.when(F.col("ring1") != F.col("ring2"), 1).otherwise(0))
-        .cast("long")
-        .alias("ring_moved"),
-    )
-    balance = (
-        assigned.groupBy("ring2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(
-            F.max("c").cast("long").alias("max_load"),
-            F.min("c").cast("long").alias("min_load"),
-        )
-    )
-    return moved.crossJoin(F.broadcast(balance)).select(
-        "n_keys",
-        F.round(F.col("mod_moved") * F.lit(1.0) / F.col("n_keys"), 6).alias(
-            "mod_moved_frac"
-        ),
-        F.round(F.col("ring_moved") * F.lit(1.0) / F.col("n_keys"), 6).alias(
-            "ring_moved_frac"
-        ),
-        F.round(F.lit(1.0) / CH_N2, 6).alias("ring_theoretical"),
-        "max_load",
-        "min_load",
-        F.round(F.col("max_load") * F.lit(1.0) / F.col("min_load"), 4).alias(
-            "ring_skew"
-        ),
-    )
+    plan assigns every row its shard in one broadcast pass.""",
+)
 
 
 # ---------------------------------------------------------------------------

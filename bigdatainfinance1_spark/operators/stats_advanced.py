@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from bigdatainfinance1_spark.functions.ranks import global_row_number
 from bigdatainfinance1_spark.operators.quant_pricing import _norm_cdf_sql
-from bigdatainfinance1_spark.registry import query
+from bigdatainfinance1_spark.registry import query, sql_query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
 # ---------------------------------------------------------------------------
@@ -418,9 +418,9 @@ DKW_MAX_T = 20
 DKW_LN_2_OVER_ALPHA = 3.6888794541139363  # ln(2/0.05)
 
 
-@query(
+sql_query(
     "q_dkw_band",
-    oracle=f"""
+    f"""
     WITH b AS (
       SELECT CAST(least(floor(o_totalprice / {DKW_STEP}), {DKW_MAX_T}) AS BIGINT) AS bkt,
              count(*) AS n
@@ -435,7 +435,7 @@ DKW_LN_2_OVER_ALPHA = 3.6888794541139363  # ln(2/0.05)
     )
     SELECT CAST((ecdf.t + 1) * {DKW_STEP} AS DOUBLE) AS value_cutoff,
            CAST(ecdf.cum AS BIGINT) AS n_below,
-           round(ecdf.cum * 1.0 / tot.nt, 6) AS ecdf,
+           CAST(round(ecdf.cum * 1.0 / tot.nt, 6) AS DOUBLE) AS ecdf,
            round(sqrt({DKW_LN_2_OVER_ALPHA} / (2.0 * tot.nt)), 6) AS epsilon,
            round(greatest(ecdf.cum * 1.0 / tot.nt
                           - sqrt({DKW_LN_2_OVER_ALPHA} / (2.0 * tot.nt)), 0.0), 6)
@@ -446,9 +446,7 @@ DKW_LN_2_OVER_ALPHA = 3.6888794541139363  # ln(2/0.05)
     FROM ecdf CROSS JOIN tot
     """,
     tags=("stats", "nonparametric"),
-)
-def dkw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Empirical CDF of order value at a fixed 25k grid with the
+    doc="""Empirical CDF of order value at a fixed 25k grid with the
     Dvoretzky-Kiefer-Wolfowitz 95% simultaneous confidence band:
     P(sup_t |F_hat(t) - F(t)| > eps) <= 2 exp(-2 n eps^2), so eps =
     sqrt(ln(2/alpha) / 2n) bounds the WHOLE curve at once — the
@@ -458,30 +456,8 @@ def dkw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the q_roc_curve posture — one map-side-combinable bucket
     aggregate, prefix sums on the bounded grid; ECDF values are ratios of
-    exact integers and eps is one closed form of n, rounded at 6."""
-    orders = load_table(spark, sf_dir, "orders")
-    b = orders.groupBy(
-        F.least(F.floor(F.col("o_totalprice") / DKW_STEP), F.lit(DKW_MAX_T))
-        .cast("long")
-        .alias("bkt")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    tot = b.agg(F.sum("n").alias("nt"))
-    grid = spark.range(0, DKW_MAX_T + 1).select(F.col("id").alias("t"))
-    ecdf = (
-        grid.join(F.broadcast(b), F.lit(True), "left")
-        .groupBy("t")
-        .agg(F.coalesce(F.sum(F.when(F.col("bkt") <= F.col("t"), F.col("n"))), F.lit(0)).alias("cum"))
-    )
-    eps = F.sqrt(F.lit(DKW_LN_2_OVER_ALPHA) / (2.0 * F.col("nt")))
-    f = F.col("cum") * 1.0 / F.col("nt")
-    return ecdf.crossJoin(F.broadcast(tot)).select(
-        ((F.col("t") + 1) * DKW_STEP).cast("double").alias("value_cutoff"),
-        F.col("cum").cast("long").alias("n_below"),
-        F.round(f, 6).alias("ecdf"),
-        F.round(eps, 6).alias("epsilon"),
-        F.round(F.greatest(f - eps, F.lit(0.0)), 6).alias("band_lo"),
-        F.round(F.least(f + eps, F.lit(1.0)), 6).alias("band_hi"),
-    )
+    exact integers and eps is one closed form of n, rounded at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -491,9 +467,9 @@ def dkw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 WILSON_Z = 1.959964  # 95%
 
 
-@query(
+sql_query(
     "q_wilson_interval",
-    oracle=f"""
+    f"""
     WITH seg AS (
       SELECT c.c_mktsegment AS seg,
              count(*) AS n,
@@ -505,55 +481,28 @@ WILSON_Z = 1.959964  # 95%
     SELECT seg,
            CAST(n AS BIGINT) AS n,
            CAST(x AS BIGINT) AS x,
-           round(x * 1.0 / n, 6) AS p_hat,
-           round((x * 1.0 / n + {WILSON_Z} * {WILSON_Z} / (2.0 * n)
-                  - {WILSON_Z} * sqrt((x * 1.0 / n) * (1.0 - x * 1.0 / n) / n
-                                      + {WILSON_Z} * {WILSON_Z} / (4.0 * n * n)))
-                 / (1.0 + {WILSON_Z} * {WILSON_Z} / n), 6) AS wilson_lo,
-           round((x * 1.0 / n + {WILSON_Z} * {WILSON_Z} / (2.0 * n)
-                  + {WILSON_Z} * sqrt((x * 1.0 / n) * (1.0 - x * 1.0 / n) / n
-                                      + {WILSON_Z} * {WILSON_Z} / (4.0 * n * n)))
-                 / (1.0 + {WILSON_Z} * {WILSON_Z} / n), 6) AS wilson_hi,
-           round(x * 1.0 / n - {WILSON_Z} * sqrt((x * 1.0 / n) * (1.0 - x * 1.0 / n) / n), 6)
+           round(x * 1e0 / n, 6) AS p_hat,
+           round((x * 1e0 / n + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / (2.0 * n)
+                  - {WILSON_Z} * sqrt((x * 1e0 / n) * (1.0 - x * 1e0 / n) / n
+                                      + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / (4.0 * n * n)))
+                 / (1.0 + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / n), 6) AS wilson_lo,
+           round((x * 1e0 / n + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / (2.0 * n)
+                  + {WILSON_Z} * sqrt((x * 1e0 / n) * (1.0 - x * 1e0 / n) / n
+                                      + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / (4.0 * n * n)))
+                 / (1.0 + CAST({WILSON_Z} * {WILSON_Z} AS DOUBLE) / n), 6) AS wilson_hi,
+           round(x * 1e0 / n - {WILSON_Z} * sqrt((x * 1e0 / n) * (1.0 - x * 1e0 / n) / n), 6)
              AS wald_lo
     FROM seg
     """,
     tags=("stats", "inference"),
-)
-def wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wilson score 95% confidence interval for the urgent-order rate per
+    doc="""Wilson score 95% confidence interval for the urgent-order rate per
     market segment — the proportion CI that stays inside [0, 1] and keeps
     coverage at small n / extreme p where the Wald interval (reported
     alongside for the contrast) collapses; the interval every
     conversion-rate dashboard should use. One closed form of the exact
     integer (n, x) per segment, rounded at 6 — scale is one
-    map-side-combinable aggregate."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    seg = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .groupBy(F.col("c_mktsegment").alias("seg"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1).otherwise(0)
-            ).alias("x"),
-        )
-    )
-    n = F.col("n").cast("double")
-    p = F.col("x") * 1.0 / n
-    z2 = WILSON_Z * WILSON_Z
-    half = F.lit(WILSON_Z) * F.sqrt(p * (1.0 - p) / n + z2 / (4.0 * n * n))
-    denom = 1.0 + z2 / n
-    return seg.select(
-        "seg",
-        F.col("n").cast("long").alias("n"),
-        F.col("x").cast("long").alias("x"),
-        F.round(p, 6).alias("p_hat"),
-        F.round((p + z2 / (2.0 * n) - half) / denom, 6).alias("wilson_lo"),
-        F.round((p + z2 / (2.0 * n) + half) / denom, 6).alias("wilson_hi"),
-        F.round(p - F.lit(WILSON_Z) * F.sqrt(p * (1.0 - p) / n), 6).alias("wald_lo"),
-    )
+    map-side-combinable aggregate.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -563,9 +512,9 @@ def wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 CR_M1, CR_M2 = "1996-03-01", "1996-09-01"  # the two one-month "captures"
 
 
-@query(
+sql_query(
     "q_capture_recapture",
-    oracle=f"""
+    f"""
     WITH s1 AS (
       SELECT DISTINCT o_custkey FROM orders
       WHERE o_orderdate >= TIMESTAMP '{CR_M1}'
@@ -585,15 +534,13 @@ CR_M1, CR_M2 = "1996-03-01", "1996-09-01"  # the two one-month "captures"
     SELECT CAST(n1 AS BIGINT) AS n_first_capture,
            CAST(n2 AS BIGINT) AS n_second_capture,
            CAST(m AS BIGINT) AS n_recaptured,
-           round((n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0, 2) AS chapman_estimate,
+           CAST(round((n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0, 2) AS DOUBLE) AS chapman_estimate,
            CAST(true_n AS BIGINT) AS true_active_customers,
-           round(((n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0) / true_n, 4) AS coverage_ratio
+           CAST(round(((n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0) / true_n, 4) AS DOUBLE) AS coverage_ratio
     FROM c
     """,
     tags=("stats", "estimation"),
-)
-def capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Capture-recapture (Chapman-corrected Lincoln-Petersen) estimate of
+    doc="""Capture-recapture (Chapman-corrected Lincoln-Petersen) estimate of
     the active customer population from two one-month purchase snapshots:
     N_hat = (n1+1)(n2+1)/(m+1) - 1, reported against the true distinct
     count — the mark-recapture machinery used to size populations you
@@ -604,33 +551,8 @@ def capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two pushed-down one-month scans reduced to distinct-key sets,
     one semi-join for the overlap, integer closed form — all
-    map-side-combinable aggregates."""
-    orders = load_table(spark, sf_dir, "orders")
-
-    def capture(start: str) -> DataFrame:
-        s = F.lit(start).cast("timestamp")
-        return (
-            orders.filter(
-                (F.col("o_orderdate") >= s)
-                & (F.col("o_orderdate") < F.add_months(s, 1))
-            )
-            .select("o_custkey")
-            .distinct()
-        )
-
-    s1, s2 = capture(CR_M1), capture(CR_M2)
-    n1 = s1.count()
-    n2 = s2.count()
-    m = s1.join(s2, "o_custkey").count()
-    true_n = orders.select("o_custkey").distinct().count()
-    from bigdatainfinance1_spark.functions.rounding import rnd_half_away as rnd
-
-    chapman = (n1 + 1.0) * (n2 + 1.0) / (m + 1.0) - 1.0
-    return spark.createDataFrame(
-        [(n1, n2, m, rnd(chapman, 2), true_n, rnd(chapman / true_n, 4))],
-        "n_first_capture long, n_second_capture long, n_recaptured long, "
-        "chapman_estimate double, true_active_customers long, coverage_ratio double",
-    )
+    map-side-combinable aggregates.""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1161,22 +1083,22 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+sql_query(
     "q_nb_overdispersion",
-    oracle="""
+    """
     WITH per_user AS (
       SELECT user_id, event_type, count(*) AS k
       FROM events GROUP BY user_id, event_type
     ),
     mo AS (
       SELECT event_type, count(*) AS n,
-             sum(k) AS s1, sum(k * 1.0 * k) AS s2
+             sum(k) AS s1, sum(k * 1e0 * k) AS s2
       FROM per_user GROUP BY event_type
     ),
     st AS (
       SELECT event_type, n,
-             s1 * 1.0 / n AS mu,
-             s2 / n - (s1 * 1.0 / n) * (s1 * 1.0 / n) AS v
+             s1 * 1e0 / n AS mu,
+             s2 / n - (s1 * 1e0 / n) * (s1 * 1e0 / n) AS v
       FROM mo
     )
     SELECT event_type,
@@ -1190,9 +1112,7 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM st
     """,
     tags=("stats", "model"),
-)
-def nb_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overdispersion diagnosis + method-of-moments negative-binomial fit
+    doc="""Overdispersion diagnosis + method-of-moments negative-binomial fit
     for per-user event counts by type: dispersion index Var/Mean (Poisson
     predicts exactly 1), and where Var > Mean the NB(r, p) parameters
     r = mu^2/(v - mu), p = mu/v — the decision every count model faces
@@ -1202,27 +1122,8 @@ def nb_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two map-side-combinable aggregates (per-user counts, then
     per-type moments); all closed forms of exact integer sums, rounded
-    at 6."""
-    events = load_table(spark, sf_dir, "events")
-    per_user = events.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("k"))
-    mo = per_user.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("k").alias("s1"),
-        F.sum(F.col("k") * 1.0 * F.col("k")).alias("s2"),
-    )
-    n = F.col("n").cast("double")
-    mu = F.col("s1") * 1.0 / n
-    v = F.col("s2") / n - mu * mu
-    return mo.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_users"),
-        F.round(mu, 6).alias("mean_events"),
-        F.round(v, 6).alias("var_events"),
-        F.round(v / mu, 6).alias("dispersion_index"),
-        (v > mu).alias("overdispersed"),
-        F.round(F.when(v > mu, mu * mu / (v - mu)), 6).alias("nb_r"),
-        F.round(F.when(v > mu, mu / v), 6).alias("nb_p"),
-    )
+    at 6.""",
+)
 
 
 # ---------------------------------------------------------------------------

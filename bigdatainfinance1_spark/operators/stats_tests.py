@@ -60,11 +60,11 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_benford",
-    oracle="""
+    """
     WITH digits AS (
-      SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS INT)
+      SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING), 1, 1) AS INT)
                AS digit
       FROM orders
     ),
@@ -73,37 +73,17 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       CAST(digit AS BIGINT)                                   AS digit,
       CAST(n_obs AS BIGINT)                                   AS n_obs,
-      round(n_obs * 1.0 / (SELECT total FROM n), 6)           AS obs_freq,
+      CAST(round(n_obs * 1.0 / (SELECT total FROM n), 6) AS DOUBLE) AS obs_freq,
       round(ln(1 + 1.0 / digit) / ln(10), 6)                  AS benford_freq
     FROM obs
     """,
     tags=("analytics", "finance", "stats"),
-)
-def benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fraud analytics: leading-digit distribution of order totals vs
+    doc="""Fraud analytics: leading-digit distribution of order totals vs
     Benford's law. The leading digit is taken from the INTEGER cents
     (round(x*100) → BIGINT → first character) — integer-to-string is
     byte-identical on both engines, avoiding the classic floor(log10(x))
-    power-of-ten boundary hazard. One narrow map + a 9-row aggregate."""
-    orders = load_table(spark, sf_dir, "orders")
-    digit = F.expr(
-        "CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING), 1, 1) AS INT)"
-    )
-    digits = orders.select(digit.alias("digit"))
-    totals = digits.agg(F.count(F.lit(1)).alias("total"))
-    return (
-        digits.groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-        .crossJoin(F.broadcast(totals))
-        .select(
-            F.col("digit").cast("long").alias("digit"),
-            F.col("n_obs").cast("long").alias("n_obs"),
-            F.round(F.col("n_obs") * 1.0 / F.col("total"), 6).alias("obs_freq"),
-            F.round(F.log(1 + 1.0 / F.col("digit")) / F.log(F.lit(10.0)), 6).alias(
-                "benford_freq"
-            ),
-        )
-    )
+    power-of-ten boundary hazard. One narrow map + a 9-row aggregate.""",
+)
 
 
 @query(

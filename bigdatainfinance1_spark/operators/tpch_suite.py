@@ -133,11 +133,11 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_tpch_q6",
-    oracle="""
+    """
     SELECT round(CAST(sum(CAST(round(l_extendedprice * l_discount * 100, 0)
-                             AS BIGINT)) AS BIGINT) / 100.0, 2) AS revenue,
+                             AS BIGINT)) AS BIGINT) / 100e0, 2) AS revenue,
            count(*) AS n_lines
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
@@ -146,36 +146,22 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_quantity < 24
     """,
     tags=("tpch", "agg"),
-)
-def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 (forecasting revenue change), faithful. Pure scan-filter-
+    doc="""TPC-H Q6 (forecasting revenue change), faithful. Pure scan-filter-
     aggregate: all three predicates push to the parquet scan (min/max row-
     group pruning does the heavy lifting on a date-sorted layout), and the
     global sum is a map-side partial + single-row final — the cheapest
     possible shape at any scale. n_lines added to the output as an
-    integer-exact witness alongside the rounded money sum."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1997-01-01"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        _dollars(
-            F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount")))
-        ).alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
+    integer-exact witness alongside the rounded money sum.""",
+)
 
 
-@query(
+sql_query(
     "q_tpch_q7",
-    oracle="""
+    """
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
            CAST(year(l_shipdate) AS INT) AS l_year,
            round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-                              AS BIGINT)) AS BIGINT) / 100.0, 2) AS revenue
+                              AS BIGINT)) AS BIGINT) / 100e0, 2) AS revenue
     FROM lineitem
     JOIN supplier ON l_suppkey = s_suppkey
     JOIN orders   ON l_orderkey = o_orderkey
@@ -188,53 +174,20 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY supp_nation, cust_nation, l_year
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 (volume shipping), faithful except the shipdate window
+    doc="""TPC-H Q7 (volume shipping), faithful except the shipdate window
     covers the full fixture span (the official 1995-1996 restriction on a
     2/625-selective nation pair is vacuous at sf0.001; the nation pair is
     chosen from nations that have suppliers at every scale factor). Both nation dims
     broadcast; the disjunctive two-nation predicate is applied AFTER the
     cheap broadcast joins so it stays a single filter, and the heavy
     orders⋈lineitem equi-join shuffles only pruned columns. Output grain:
-    (supp_nation, cust_nation, year)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    sn = nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    cn = nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (F.col("supp_nation") == "NATION_18") & (F.col("cust_nation") == "NATION_19")
-    rpair = (F.col("supp_nation") == "NATION_19") & (F.col("cust_nation") == "NATION_18")
-    return (
-        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .filter(pair | rpair)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-        )
-        .agg(
-            _dollars(
-                F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            ).alias("revenue")
-        )
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
+    (supp_nation, cust_nation, year).""",
+)
 
 
-@query(
+sql_query(
     "q_tpch_q8",
-    oracle="""
+    """
     WITH all_nations AS (
       SELECT CAST(year(o_orderdate) AS INT) AS o_year,
              CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)
@@ -251,17 +204,15 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE r_name = 'AMERICA' AND p_type = 'STANDARD'
     )
     SELECT o_year,
-           round(sum(CASE WHEN supp_nation = 'NATION_1' THEN volume_cents
-                          ELSE 0 END) * 1.0 / sum(volume_cents), 6) AS mkt_share,
-           round(CAST(sum(volume_cents) AS BIGINT) / 100.0, 2) AS total_volume
+           CAST(round(sum(CASE WHEN supp_nation = 'NATION_1' THEN volume_cents
+                          ELSE 0 END) * 1.0 / sum(volume_cents), 6) AS DOUBLE) AS mkt_share,
+           round(CAST(sum(volume_cents) AS BIGINT) / 100e0, 2) AS total_volume
     FROM all_nations
     GROUP BY o_year
     ORDER BY o_year
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 (national market share), faithful except the order-date
+    doc="""TPC-H Q8 (national market share), faithful except the order-date
     window covers the fixture span (official: 1995-1996) and the part
     filter uses the fixture's flat p_type domain. The share of NATION_1
     suppliers in AMERICA-region customers' STANDARD-part volume, by
@@ -269,52 +220,16 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (part, supplier, both nation roles, region) broadcasts;
     the two fact tables meet in one orderkey shuffle. A year with no
     NATION_1 supplier legitimately reports share 0.0 — the denominator
-    rows keep the output non-vacuous."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "STANDARD")
-        .select("p_partkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    cn = nation.join(
-        F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select(F.col("n_nationkey").alias("cn_key"))
-    sn = nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    volume = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    nat1 = F.when(F.col("supp_nation") == "NATION_1", volume).otherwise(F.lit(0))
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(
-            F.round(F.sum(nat1) * F.lit(1.0) / F.sum(volume), 6).alias("mkt_share"),
-            _dollars(F.sum(volume)).alias("total_volume"),
-        )
-        .orderBy("o_year")
-    )
+    rows keep the output non-vacuous.""",
+)
 
 
-@query(
+sql_query(
     "q_tpch_q10",
-    oracle="""
+    """
     SELECT c_custkey, c_name, n_name, round(c_acctbal, 2) AS c_acctbal,
            round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-                              AS BIGINT)) AS BIGINT) / 100.0, 2) AS revenue
+                              AS BIGINT)) AS BIGINT) / 100e0, 2) AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -327,43 +242,13 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
     tags=("tpch", "join", "agg", "topk"),
-)
-def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 (returned-item reporting), faithful except the window is
+    doc="""TPC-H Q10 (returned-item reporting), faithful except the window is
     a half-year instead of a quarter (non-vacuity at sf0.001) and the
     missing c_address/c_phone/c_comment columns are simply absent from the
     output. Top-20 customers by revenue lost to returns: the returnflag
     filter prunes lineitem at scan time, nation broadcasts, and the global
-    top-20 is a deterministic sort with c_custkey as tiebreak (O2 rule)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= _ts("1996-01-01"))
-        & (F.col("o_orderdate") < _ts("1996-07-01"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-        .agg(
-            _dollars(
-                F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-            ).alias("revenue")
-        )
-        .select(
-            "c_custkey",
-            "c_name",
-            "n_name",
-            F.round("c_acctbal", 2).alias("c_acctbal"),
-            "revenue",
-        )
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
+    top-20 is a deterministic sort with c_custkey as tiebreak (O2 rule).""",
+)
 
 
 sql_query(
@@ -388,54 +273,37 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_tpch_q14",
-    oracle="""
+    """
     SELECT
-      round(100.0 * sum(CASE WHEN p_type = 'PROMO'
+      CAST(round(100.0 * sum(CASE WHEN p_type = 'PROMO'
                              THEN CAST(round(l_extendedprice * (1 - l_discount)
                                              * 100, 0) AS BIGINT)
                              ELSE 0 END)
             / sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-                       AS BIGINT)), 6) AS promo_revenue_pct,
+                       AS BIGINT)), 6) AS DOUBLE) AS promo_revenue_pct,
       count(*) AS n_lines
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate <  TIMESTAMP '1996-07-01'
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 (promotion effect), faithful except the window is a
+    doc="""TPC-H Q14 (promotion effect), faithful except the window is a
     half-year (month is too thin at sf0.001) and the fixture's flat
     p_type domain makes the promo test exact equality instead of LIKE
     'PROMO%'. Part broadcasts into the date-pruned lineitem scan; the
-    conditional-sum ratio is a single global aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1996-07-01"))
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(F.lit(100.0) * F.sum(promo) / F.sum(rev), 6).alias(
-                "promo_revenue_pct"
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+    conditional-sum ratio is a single global aggregate.""",
+)
 
 
-@query(
+sql_query(
     "q_tpch_q15",
-    oracle="""
+    """
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
              round(CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0)
-                                AS BIGINT)) AS BIGINT) / 100.0, 2) AS total_revenue
+                                AS BIGINT)) AS BIGINT) / 100e0, 2) AS total_revenue
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1996-04-01'
@@ -447,32 +315,13 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY s_suppkey
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 (top supplier), faithful. The revenue view aggregates the
+    doc="""TPC-H Q15 (top supplier), faithful. The revenue view aggregates the
     date-pruned quarter per supplier; the max is a one-row scalar joined
     back (Spark: cross-join broadcast of the 1-row max — the same shape
     the official query's scalar subquery compiles to). Comparing the
     2-dp-ROUNDED revenue on both engines makes the equality itself
-    deterministic; ties all surface, ordered by s_suppkey."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01"))
-        & (F.col("l_shipdate") < _ts("1996-04-01"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _dollars(
-            F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        ).alias("total_revenue")
-    )
-    mx = revenue.agg(F.max("total_revenue").alias("mx"))
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        supp.join(revenue, F.col("s_suppkey") == F.col("supplier_no"))
-        .crossJoin(F.broadcast(mx))
-        .filter(F.col("total_revenue") == F.col("mx"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
-    )
+    deterministic; ties all surface, ordered by s_suppkey.""",
+)
 
 
 sql_query(
@@ -496,15 +345,15 @@ sql_query(
 )
 
 
-@query(
+sql_query(
     "q_tpch_q17",
-    oracle="""
+    """
     WITH pavg AS (
       SELECT l_partkey AS avg_partkey, 0.5 * avg(l_quantity) AS qty_cut
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT round(CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                      AS BIGINT) / 700.0, 2) AS avg_yearly,
+    SELECT CAST(round(CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
+                      AS BIGINT) / 700.0, 2) AS DOUBLE) AS avg_yearly,
            count(*) AS n_lines
     FROM lineitem
     JOIN part ON p_partkey = l_partkey
@@ -513,34 +362,15 @@ sql_query(
       AND l_quantity < qty_cut
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue), adapted: no p_container
+    doc="""TPC-H Q17 (small-quantity-order revenue), adapted: no p_container
     column, so the brand filter carries the selectivity (three brands),
     and the quantity cut is 0.5·avg instead of 0.2·avg (0.2 is vacuous on
     the fixture's uniform 1-50 quantities at sf0.001). The correlated
     scalar subquery is decorrelated the way Spark's optimizer would: one
     per-part average aggregation joined back to lineitem on partkey —
     at 100 TB the per-part relation is parts-sized, broadcastable after
-    the brand prune."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pavg = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
-        (F.lit(0.5) * F.avg("l_quantity")).alias("qty_cut")
-    )
-    part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
-    )
-    return (
-        li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
-        .join(pavg, F.col("avg_partkey") == F.col("l_partkey"))
-        .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg(
-            F.round(
-                F.sum(_cents(F.col("l_extendedprice"))).cast("long") / 700.0, 2
-            ).alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+    the brand prune.""",
+)
 
 
 @query(
@@ -656,9 +486,9 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "q_tpch_q22",
-    oracle="""
+    """
     WITH avg_bal AS (
       SELECT sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) / (100.0 * count(*))
                AS ab
@@ -667,7 +497,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_nationkey AS cntrycode,
            count(*) AS numcust,
            round(CAST(sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
-                 / 100.0, 2) AS totacctbal
+                 / 100e0, 2) AS totacctbal
     FROM customer CROSS JOIN avg_bal
     WHERE c_acctbal > ab
       AND NOT EXISTS (
@@ -679,34 +509,11 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY cntrycode
     """,
     tags=("tpch", "join", "agg"),
-)
-def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 (global sales opportunity), adapted: no c_phone column,
+    doc="""TPC-H Q22 (global sales opportunity), adapted: no c_phone column,
     so the country code is c_nationkey itself (no 7-code IN filter — all
     nations report), and "has no orders" is relaxed to "no orders in the
     last year of the fixture span" (a full NOT EXISTS is near-vacuous on
     this data where almost every customer ordered). Shape is faithful:
     scalar average broadcast, anti-join against date-pruned orders, one
-    nation-sized aggregation."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_acctbal"
-    )
-    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        (
-            F.sum(_cents(F.col("c_acctbal"))) / (F.lit(100.0) * F.count(F.lit(1)))
-        ).alias("ab")
-    )
-    recent = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= _ts("2000-07-01")
-    )
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
-        .join(recent, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntrycode"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            _dollars(F.sum(_cents(F.col("c_acctbal")))).alias("totacctbal"),
-        )
-        .orderBy("cntrycode")
-    )
+    nation-sized aggregation.""",
+)

@@ -12,6 +12,11 @@ operators (all-pairs similarity) are expected to scale ~100× in work —
 the report prints the factor so the reader sees which class each operator
 falls in; the scale PATH for those is the LSH variant, not the all-pairs.
 
+Each query is timed with bench.py's protocol: SPARK_GRAFT_BENCH_RUNS
+(default 5) interleaved passes over the two tiers. A line reports each
+tier's median and IQR, the ratio of the medians as the factor, and the
+samples.
+
 Usage: python scale_check.py [--rebuild] [q_name ...]   (one JSON line per
 query; no names: every query, in registry order)
 """
@@ -21,14 +26,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
-from bench import materialize, quiesce
+from bench import dispersion, sample, warm_up
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.session import get_spark
 from bigdatainfinance1_spark.sources.catalog import TABLES, load_table, register_views
@@ -38,7 +43,9 @@ BASE_SF = "/root/testdata/sf0.1"
 # spot-stressing the flagship linear paths one decade further; default is
 # the standard 10x (~sf1) sweep. Each copy count stages to its own dir.
 COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "10"))
-STAGE = f"/tmp/bigdatainfinance1_sfx{COPIES}"
+# Outside the engine's /tmp/bigdatainfinance1_* names, which perfbench/run.py
+# clears before every run.
+STAGE = f"/tmp/scale_check_sfx{COPIES}"
 
 # (table, columns to shift per copy) — keys shifted by i*stride stay unique
 SHIFTS = {
@@ -104,30 +111,24 @@ def main() -> None:
     # all ten views again in every sql_query call. Both register before the
     # loop, so no timed call pays it.
     staged = spark.newSession()
-    specs["q_pricing_summary"].fn(spark, BASE_SF).limit(1).collect()  # warmup
     register_views(spark, BASE_SF)
     register_views(staged, STAGE)
+    warm_up(spark, BASE_SF)
 
+    tiers = {"sf0.1": (spark, BASE_SF), f"sf{COPIES / 10:g}": (staged, STAGE)}
     for name in picked or specs:
-        t0 = time.perf_counter()
-        materialize(specs[name].fn(spark, BASE_SF))
-        t_base = time.perf_counter() - t0
-        quiesce(spark)
-        t0 = time.perf_counter()
-        materialize(specs[name].fn(staged, STAGE))
-        t_10x = time.perf_counter() - t0
-        quiesce(spark)
-        print(
-            json.dumps(
-                {
-                    "query": name,
-                    "copies": COPIES,
-                    "sf0.1_sec": round(t_base, 3),
-                    f"sf{COPIES / 10:g}_sec": round(t_10x, 3),
-                    "scaling_factor": round(t_10x / t_base, 2),
-                }
-            )
+        samples = sample(
+            spark, {tier: partial(specs[name].fn, *on) for tier, on in tiers.items()}
         )
+        spread = {tier: dispersion(ts) for tier, ts in samples.items()}
+        base, scaled = (spread[tier]["median"] for tier in tiers)
+        record = {"query": name, "copies": COPIES}
+        for tier, d in spread.items():
+            record[f"{tier}_sec"] = d["median"]
+            record[f"{tier}_iqr"] = d["iqr"]
+        record["scaling_factor"] = round(scaled / base, 2)
+        record["samples"] = samples
+        print(json.dumps(record), flush=True)
 
 
 if __name__ == "__main__":
